@@ -269,15 +269,6 @@ def test_resize_aspect_ratio_mag_ratio():
     assert resized.shape == (160, 96, 3)  # 150x75 padded to 160x96
 
 
-def test_to_tensor():
-    img = np.zeros((2, 3, 3), np.uint8)
-    img[0, 0] = [255, 0, 127]
-    t = rz.to_tensor(img)
-    assert t.shape == (3, 2, 3) and t.dtype == np.float32
-    assert t[0, 0, 0] == 1.0 and t[1, 0, 0] == 0.0
-    assert abs(t[2, 0, 0] - 127 / 255) < 1e-6
-
-
 def test_swap_channels_involution():
     rng = np.random.default_rng(1)
     img = rng.integers(0, 256, (4, 5, 3), dtype=np.uint8)

@@ -1,9 +1,12 @@
 """IVF ANN, video frame sampling, odd-size-page robustness."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
 
+from png_fixtures import FIXTURE_DIR
 from tuatara_spark import fixtures as fx
 from tuatara_spark.ops import multimodal, similarity
 from tuatara_spark.ref import pipeline as pl
@@ -122,13 +125,13 @@ def test_ngram_prefix_filter_lossless_vs_bruteforce(spark):
 
 
 def test_image_features_all_formats(spark, weights):
-    """Decode → feature-extract over TPAGE, TPBIT and real PNG payloads:
+    """Decode → feature-extract over TPAGE, TPBIT and scan PNG payloads:
     ink bbox matches the known fixture geometry; undecodable rows skipped."""
     img, _ = fx.render_page("Xy", 256, 256, 4)
     rows = [("tpage", bytearray(fx.encode_tpage(img))),
             ("tpbit", bytearray(fx.encode_tpbit(img))),
             ("junk", bytearray(b"NOPE" + b"0" * 16))]
-    with open("/root/reference/images/rotated_text.png", "rb") as f:
+    with open(os.path.join(FIXTURE_DIR, "scan_rgb.png"), "rb") as f:
         rows.append(("png", bytearray(f.read())))
     df = spark.createDataFrame(rows, "url string, html binary")
     feats = {r.url: r for r in multimodal.image_features(df).collect()}

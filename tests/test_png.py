@@ -1,70 +1,30 @@
-"""Pure-NumPy PNG decoder (ref/png.py) against the reference's own fixture
-images — the un-stubbing of S1 ingest for the reference's primary entry
-format (examples/resume.cpp:9 cv::imread of images/*.png)."""
+"""Pure-NumPy PNG decoder (ref/png.py) against scan-shaped PNG fixtures —
+the S1 ingest of the reference's primary entry format (examples/resume.cpp:9
+cv::imread of images/*.png). The fixtures under fixtures/png/ are written by
+the stdlib encoder in tests/png_fixtures.py (1-bit gray, 8-bit gray, RGB,
+every filter type, split IDAT, one Adam7 image)."""
 
 import os
-import struct
-import zlib
 
 import numpy as np
 import pytest
 
+import png_fixtures as pf
 from tuatara_spark import fixtures as fx
 from tuatara_spark.ops import multimodal as mm
 from tuatara_spark.ref.png import decode_png
 
-REF_IMAGES = "/root/reference/images"
-
 EXPECTED_DIMS = {
-    "funsd_0001129658.png": (1000, 754),
-    "funsd_91372360.png": (1000, 814),
-    "resume_example.png": (763, 607),
-    "rotated_text.png": (206, 275),
-    "table_english.png": (664, 1245),
+    "scan_gray1.png": (400, 304),
+    "scan_gray8.png": (480, 352),
+    "scan_rgb.png": (352, 480),
+    "scan_rgb_adam7.png": (208, 272),
 }
 
 
-def _encode_png(img: np.ndarray, color_type: int = 2,
-                filter_cycle: bool = True) -> bytes:
-    """Minimal independent PNG encoder for round-trip testing: exercises
-    ALL five scanline filters (cycling per row) so each unfilter branch is
-    validated against an independently-written forward transform."""
-    h, w = img.shape[:2]
-    c = {0: 1, 2: 3, 6: 4}[color_type]
-    flat = img.reshape(h, w * c).astype(np.int32)
-    rows = []
-    prev = np.zeros(w * c, np.int32)
-    for y in range(h):
-        ft = (y % 5) if filter_cycle else 0
-        row = flat[y]
-        a = np.concatenate([np.zeros(c, np.int32), row[:-c]])
-        ac = np.concatenate([np.zeros(c, np.int32), prev[:-c]])
-        if ft == 0:
-            enc = row
-        elif ft == 1:
-            enc = (row - a) & 0xFF
-        elif ft == 2:
-            enc = (row - prev) & 0xFF
-        elif ft == 3:
-            enc = (row - ((a + prev) >> 1)) & 0xFF
-        else:
-            p = a + prev - ac
-            pa, pb, pc = abs(p - a), abs(p - prev), abs(p - ac)
-            pred = np.where((pa <= pb) & (pa <= pc), a,
-                            np.where(pb <= pc, prev, ac))
-            enc = (row - pred) & 0xFF
-        rows.append(bytes([ft]) + bytes(enc.astype(np.uint8)))
-        prev = row
-    raw = zlib.compress(b"".join(rows))
-
-    def chunk(t, d):
-        return struct.pack(">I", len(d)) + t + d + \
-            struct.pack(">I", zlib.crc32(t + d))
-
-    return (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8,
-                                         color_type, 0, 0, 0))
-            + chunk(b"IDAT", raw) + chunk(b"IEND", b""))
+def _read(name: str) -> bytes:
+    with open(os.path.join(pf.FIXTURE_DIR, name), "rb") as f:
+        return f.read()
 
 
 @pytest.mark.parametrize("color_type", [0, 2, 6])
@@ -72,7 +32,7 @@ def test_roundtrip_all_filters(color_type):
     rng = np.random.default_rng(color_type)
     c = {0: 1, 2: 3, 6: 4}[color_type]
     src = rng.integers(0, 256, size=(40, 23, c), dtype=np.uint8)
-    out = decode_png(_encode_png(src, color_type))
+    out = decode_png(pf.encode_png(src, color_type))
     if color_type == 0:
         np.testing.assert_array_equal(out, np.repeat(src, 3, axis=2))
     elif color_type == 2:
@@ -82,31 +42,28 @@ def test_roundtrip_all_filters(color_type):
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_DIMS))
-def test_reference_fixture_decodes(name):
-    with open(os.path.join(REF_IMAGES, name), "rb") as f:
-        img = decode_png(f.read())
+def test_scan_fixture_decodes(name):
+    img = decode_png(_read(name))
     h, w = EXPECTED_DIMS[name]
     assert img.shape == (h, w, 3)
     assert img.dtype == np.uint8
     # document scans are paper-dominated: bright mean, full dynamic range
     assert img.mean(dtype=np.float64) > 180
     assert img.min() < 64 and img.max() > 220
+    # and the pixels are exactly the ones the fixture was encoded from
+    src = pf.scan_pages()[name][0]
+    np.testing.assert_array_equal(img, np.broadcast_to(src, img.shape))
 
 
 def test_decode_payload_dispatches_png():
-    with open(os.path.join(REF_IMAGES, "rotated_text.png"), "rb") as f:
-        buf = f.read()
-    img = fx.decode_payload(buf)
-    assert img.shape == (206, 275, 3)
+    img = fx.decode_payload(_read("scan_rgb_adam7.png"))
+    assert img.shape == (208, 272, 3)
 
 
 def test_extract_media_meta_real_png(spark):
-    """S1 ingest over the reference's own images through the Spark op:
-    real width/height/luma, no stub."""
-    rows = []
-    for name in sorted(EXPECTED_DIMS):
-        with open(os.path.join(REF_IMAGES, name), "rb") as f:
-            rows.append((name, bytearray(f.read())))
+    """S1 ingest over the scan fixtures through the Spark op: real
+    width/height/luma, no stub."""
+    rows = [(name, bytearray(_read(name))) for name in sorted(EXPECTED_DIMS)]
     df = spark.createDataFrame(rows, "url string, html binary")
     meta = {r.url: r for r in mm.extract_media_meta(df).collect()}
     for name, (h, w) in EXPECTED_DIMS.items():
@@ -117,19 +74,17 @@ def test_extract_media_meta_real_png(spark):
 
 
 def test_extract_df_ingests_real_png(spark, weights):
-    """The full Spark extraction engine accepts the reference's own PNG
-    pages end-to-end (S1 ingest → detection → recognition): real decode,
-    real detection on real ink. The stand-in recognizer only knows the
-    synthetic glyph bank, so extracted TEXT is not asserted — regions and
-    error-free flow are."""
+    """The full Spark extraction engine accepts an interlaced RGB scan
+    end-to-end (S1 ingest → detection → recognition): real decode, real
+    detection on blurred, noisy ink. Extracted TEXT is not asserted —
+    regions and error-free flow are."""
     from tuatara_spark import engine as eng
-    with open(os.path.join(REF_IMAGES, "rotated_text.png"), "rb") as f:
-        buf = f.read()
-    df = spark.createDataFrame([("rotated_text.png", bytearray(buf))],
-                               "url string, html binary")
+    df = spark.createDataFrame(
+        [("scan_rgb_adam7.png", bytearray(_read("scan_rgb_adam7.png")))],
+        "url string, html binary")
     r = eng.extract_df(df, weights=weights).collect()[0]
     assert r.error is None
-    assert r.n_regions >= 1          # detector fires on real document ink
+    assert r.n_regions >= 1          # detector fires on the scan's ink
 
 
 def test_encode_png_roundtrip_and_viz_dump(weights, tmp_path):

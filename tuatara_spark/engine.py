@@ -3,11 +3,18 @@
 The reference engine is one C-level function per image
 (tuatara.h:13 ``image_to_data``); here the whole pipeline runs inside
 ``DataFrame.mapInArrow`` over Arrow record batches — no per-row Python in
-the hot path (input_hint requirement): pages in a batch are decoded,
-grouped by shape, and pushed through the detection conv stack as stacked
-tensors; ALL region crops of the batch go through recognition as a single
-matmul (strictly more vectorized than the reference's chunk-of-4 +
-6-thread pool, tuatara.cpp:450-475, which Spark task parallelism replaces).
+the hot path (input_hint requirement). Each batch goes through two shared
+steps, the only implementation of each:
+
+* ``fixtures.decode_payloads`` — payload bytes → pages, same-shape TPBIT
+  pages unpacked in one stacked ``unpackbits``;
+* ``ocr_batch`` — the batch kernel: shape-grouped detection as stacked
+  tensors, then ALL region crops of the batch through recognition as a
+  single matmul (strictly more vectorized than the reference's chunk-of-4
+  + 6-thread pool, tuatara.cpp:450-475, which Spark task parallelism
+  replaces), then reading-order assembly. The declared OCR queries
+  (``queries.q_ocr_extract_docs``) run the same kernel over rendered
+  pages; ``ref/pipeline.extract_page`` is its per-page oracle.
 
 Model weights are broadcast once per job and rehydrated once per worker
 (``Broadcast.value`` caches) — fixing the reference's per-call weight
@@ -22,7 +29,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, StringType,
@@ -62,6 +68,41 @@ def output_schema(input_schema: StructType) -> StructType:
     return StructType(passthrough + EXTRA_FIELDS)
 
 
+def ocr_batch(params: dict, images: list, errors: list) -> list:
+    """The batch kernel: decoded pages → one ``{'spans', 'text'}`` dict per
+    page (``ref/pipeline.extract_page``'s output, byte-identical), or None
+    where ``errors[i]`` is already set or detection fails here.
+
+    Detection runs shape-grouped (one stacked forward per page shape); if
+    the batch path throws (pathological page) it falls back to per-page
+    detection, so one bad row gets ``errors[i] = "detect: …"`` instead of
+    failing the task — at 10^12 rows a poison page must not kill the job.
+    Recognition then runs over ALL crops of the batch in one forward pass.
+    """
+    ok = [i for i, e in enumerate(errors) if e is None]
+    try:
+        det = pl.detect_pages([images[i] for i in ok], params) if ok else []
+    except Exception:
+        det = []
+        for i in ok:
+            try:
+                det.append(pl.detect_page(images[i], params))
+            except Exception as e:
+                errors[i] = f"detect: {e}"
+                det.append(None)
+    pages = [(i, d) for i, d in zip(ok, det) if d is not None]
+    crops = [pl.crop_regions(swapped, boxes) for _, (boxes, swapped) in pages]
+    texts = iter(pl.recognize_ink(
+        params, pl.crops_to_ink([c for cs in crops for c in cs], params)))
+    out: list = [None] * len(images)
+    for i, (boxes, _) in pages:
+        spans = [{"text": next(texts),
+                  "bbox": g.rect_to_tesseract_bbox(b).tolist()}
+                 for b in boxes]
+        out[i] = {"spans": spans, "text": pl.assemble_reading_order(spans)}
+    return out
+
+
 def make_extractor(weights_bc, passthrough: list[str]):
     """Build the mapInArrow function. ``weights_bc`` is a pyspark Broadcast
     (or a plain dict for driver-side testing)."""
@@ -72,104 +113,19 @@ def make_extractor(weights_bc, passthrough: list[str]):
             if params is None:
                 params = (weights_bc.value if hasattr(weights_bc, "value")
                           else weights_bc)
-            n = batch.num_rows
-            htmls = batch.column("html")
-            images: list = [None] * n
-            errors: list = [None] * n
-            # Payload decode, batched: same-shape TPBIT payloads unpack in
-            # ONE stacked unpackbits per group instead of one call per page
-            # (this was the last per-row Python loop on the hot path).
-            # Payload bytes are read as zero-copy Arrow buffer views, not
-            # .as_py() copies. Mixed/malformed rows fall back to the
-            # per-row decoder; a poison page becomes an error row.
-            tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
-            for i in range(n):
-                sc = htmls[i]
-                if not sc.is_valid:
-                    errors[i] = "decode: null payload"
-                    continue
-                mv = memoryview(sc.as_buffer())
-                try:
-                    if bytes(mv[:4]) == fx.TPBIT_MAGIC and len(mv) >= 8:
-                        h = int.from_bytes(mv[4:6], "little")
-                        w = int.from_bytes(mv[6:8], "little")
-                        if len(mv) >= 8 + (h * w + 7) // 8:
-                            tpbit.setdefault((h, w), []).append((i, mv))
-                            continue
-                    images[i] = fx.decode_payload(mv)
-                except Exception as e:  # malformed payload → error row
-                    errors[i] = f"decode: {e}"
-            for (h, w), grp in tpbit.items():
-                try:
-                    nb = (h * w + 7) // 8
-                    packed = np.stack([
-                        np.frombuffer(m, np.uint8, count=nb, offset=8)
-                        for _, m in grp])
-                    planes = ((np.unpackbits(packed, axis=1, count=h * w)
-                               ^ 1) * np.uint8(255)).reshape(len(grp), h, w)
-                    for j, (i, _) in enumerate(grp):
-                        images[i] = np.broadcast_to(
-                            planes[j][:, :, None], (h, w, 3))
-                except Exception:
-                    for i, m in grp:  # per-row fallback, row-level errors
-                        try:
-                            images[i] = fx.decode_payload(m)
-                        except Exception as e:
-                            errors[i] = f"decode: {e}"
-            ok_idx = [i for i in range(n) if errors[i] is None]
-
-            # detection, batched by page shape; if the batch path throws
-            # (pathological page), fall back to per-page so one bad row
-            # becomes an error row instead of a failed task — at 10^12 rows
-            # a poison page must not kill the job
-            def _detect(idxs):
-                try:
-                    return pl.detect_pages([images[i] for i in idxs], params)
-                except Exception:
-                    out = []
-                    for i in list(idxs):
-                        try:
-                            out.append(pl.detect_page(images[i], params))
-                        except Exception as e:
-                            errors[i] = f"detect: {e}"
-                            out.append(None)
-                    return out
-
-            det_all = _detect(ok_idx) if ok_idx else []
-            det = [(i, d) for i, d in zip(ok_idx, det_all) if d is not None]
-            # recognition: ALL crops of the record batch in one forward pass
-            crops_flat: list[np.ndarray] = []
-            crop_counts: list[int] = []
-            for _i, (boxes, swapped) in det:
-                crops = pl.crop_regions(swapped, boxes)
-                crops_flat.extend(crops)
-                crop_counts.append(len(crops))
-            texts_flat = pl.recognize_ink(
-                params, pl.crops_to_ink(crops_flat, params))
-
-            spans_col: list = [None] * n
-            text_col: list = [None] * n
-            nreg_col: list = [0] * n
-            nchar_col: list = [0] * n
-            pos = 0
-            for (i, (boxes, _)), cnt in zip(det, crop_counts):
-                texts = texts_flat[pos:pos + cnt]
-                pos += cnt
-                spans = [{"text": t,
-                          "bbox": g.rect_to_tesseract_bbox(b).tolist()}
-                         for t, b in zip(texts, boxes)]
-                full = pl.assemble_reading_order(spans)
-                spans_col[i] = spans
-                text_col[i] = full
-                nreg_col[i] = len(spans)
-                nchar_col[i] = len(full)
-
+            # payload bytes are zero-copy Arrow buffer views (None if null)
+            images, errors = fx.decode_payloads(
+                [sc.as_buffer() for sc in batch.column("html")])
+            pages = ocr_batch(params, images, errors)
             arrays = [batch.column(name) for name in passthrough]
             arrays += [
-                pa.array(spans_col, type=_SPANS_ARROW),
-                pa.array(text_col, type=pa.string()),
-                pa.array(nreg_col, type=pa.int32()),
-                pa.array(nchar_col, type=pa.int32()),
+                pa.array([p and p["spans"] for p in pages],
+                         type=_SPANS_ARROW),
+                pa.array([p and p["text"] for p in pages], type=pa.string()),
+                pa.array([len(p["spans"]) if p else 0 for p in pages],
+                         type=pa.int32()),
+                pa.array([len(p["text"]) if p else 0 for p in pages],
+                         type=pa.int32()),
                 pa.array(errors, type=pa.string()),
             ]
             names = passthrough + ["spans", "text", "n_regions", "n_chars",

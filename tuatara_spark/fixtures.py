@@ -182,6 +182,53 @@ def decode_payload(buf: bytes) -> np.ndarray:
     raise ValueError(f"unknown page payload magic {magic!r}")
 
 
+def decode_payloads(bufs) -> tuple[list, list]:
+    """Decode a batch of payloads (bytes-like, or None for a null row) →
+    (images, errors), two lists in input order. A row either has an image
+    (as ``decode_payload`` returns it) or a ``"decode: …"`` error string.
+
+    Same-shape TPBIT payloads unpack in ONE stacked ``unpackbits`` per
+    shape group instead of one call per page; other formats decode per
+    row (their entropy coding is sequential per file). If a stacked group
+    throws, its rows fall back to ``decode_payload`` one by one, so a
+    poison page becomes an error row, never a failed task."""
+    n = len(bufs)
+    images: list = [None] * n
+    errors: list = [None] * n
+    tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
+    for i, b in enumerate(bufs):
+        if b is None:
+            errors[i] = "decode: null payload"
+            continue
+        mv = memoryview(b)
+        try:
+            if bytes(mv[:4]) == TPBIT_MAGIC and len(mv) >= 8:
+                h = int.from_bytes(mv[4:6], "little")
+                w = int.from_bytes(mv[6:8], "little")
+                if len(mv) >= 8 + (h * w + 7) // 8:
+                    tpbit.setdefault((h, w), []).append((i, mv))
+                    continue
+            images[i] = decode_payload(mv)
+        except Exception as e:
+            errors[i] = f"decode: {e}"
+    for (h, w), grp in tpbit.items():
+        try:
+            nb = (h * w + 7) // 8
+            packed = np.stack([np.frombuffer(m, np.uint8, count=nb, offset=8)
+                               for _, m in grp])
+            planes = ((np.unpackbits(packed, axis=1, count=h * w) ^ 1)
+                      * np.uint8(255)).reshape(len(grp), h, w)
+            for j, (i, _) in enumerate(grp):
+                images[i] = np.broadcast_to(planes[j][:, :, None], (h, w, 3))
+        except Exception:
+            for i, m in grp:
+                try:
+                    images[i] = decode_payload(m)
+                except Exception as e:
+                    errors[i] = f"decode: {e}"
+    return images, errors
+
+
 def pages_to_parquet(df: pd.DataFrame, path: str) -> None:
     """Write a pages table to parquet with µs timestamps (pandas defaults
     to ns, which Spark's parquet reader rejects: PARQUET_TYPE_ILLEGAL)."""

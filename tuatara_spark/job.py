@@ -1,10 +1,12 @@
-"""The extraction job: spark-submit entry point with resume + lineage.
+"""The extraction jobs: spark-submit entry point with resume + lineage.
 
-Flow (one run):
-  read pages → url-hash bucket + skew salt → drop already-committed buckets
-  (resume from last snapshot) → explicit (bucket, salt) shuffle → Arrow-UDF
-  extraction → write parquet hive-partitioned by bucket → aggregate
-  per-bucket counters → commit snapshot + manifests.
+Two jobs share one commit protocol. ``run_extract`` (OCR): read pages →
+url-hash bucket + skew salt → explicit (bucket, salt) shuffle → Arrow-UDF
+extraction. ``run_crawl`` (HTML): WARC parse → charset decode →
+boilerplate strip → url-hash bucket. Both drop already-committed buckets
+(resume from the last snapshot), then hand each group's DataFrame to the
+one group loop, ``_run_groups``: write parquet hive-partitioned by bucket
+→ re-read it for per-bucket counters → commit snapshot + manifests.
 
 Buckets are processed in ``groups`` micro-batches, one snapshot each, so a
 mid-job failure loses at most one group and the next invocation resumes
@@ -33,19 +35,44 @@ class InjectedFailure(RuntimeError):
     """Raised by the fail_after_groups test hook."""
 
 
-def _bucket_counters(out_df: DataFrame) -> dict[int, dict]:
-    rows = (out_df.groupBy("part_id")
-            .agg(F.count("*").alias("pages"),
-                 F.sum("n_regions").alias("regions"),
-                 F.sum("n_chars").alias("chars"),
-                 F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-                 .alias("failures"))
-            .collect())
-    return {int(r.part_id): {"pages": int(r.pages),
-                             "regions": int(r.regions or 0),
-                             "chars": int(r.chars or 0),
-                             "failures": int(r.failures or 0)}
-            for r in rows}
+# Per-bucket lineage counters, each one SQL aggregate over the written rows.
+_EXTRACT_COUNTERS = {"pages": "count(*)", "regions": "sum(n_regions)",
+                     "chars": "sum(n_chars)", "failures": "count(error)"}
+_CRAWL_COUNTERS = {"pages": "count(*)", "chars": "sum(length(main_text))",
+                   "empties": "count_if(length(main_text) = 0)"}
+
+
+def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
+                groups: int, group_df, counters: dict[str, str],
+                fail_after_groups: int | None,
+                extra: dict | None = None) -> int:
+    """The group-commit loop shared by both jobs: split ``remaining`` into
+    ``groups`` chunks; per chunk write ``group_df(buckets)`` hive-
+    partitioned by bucket into a fresh run dir, re-read the written rows
+    for the per-bucket ``counters`` (no recompute of the UDF), and commit
+    one snapshot. Returns the number of groups run."""
+    group_size = max(1, -(-len(remaining) // groups))
+    chunks = [remaining[i:i + group_size]
+              for i in range(0, len(remaining), group_size)]
+    for groups_run, chunk in enumerate(chunks, 1):
+        sid, run_dir = cat.new_run()
+        buckets = [int(b) for b in chunk]
+        (group_df(buckets).write.mode("overwrite").partitionBy("part_id")
+         .parquet(run_dir))
+        # a group whose buckets held no rows writes no parquet files
+        per_bucket: dict[int, dict] = {}
+        if glob.glob(os.path.join(run_dir, "**", "*.parquet"), recursive=True):
+            rows = (spark.read.parquet(run_dir).groupBy("part_id")
+                    .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
+                    .collect())
+            per_bucket = {int(r.part_id): {k: int(r[k] or 0)
+                                           for k in counters} for r in rows}
+        totals = {k: sum(c[k] for c in per_bucket.values()) for k in counters}
+        # buckets with zero rows still count as committed (processed-empty)
+        cat.commit(sid, buckets, per_bucket, totals, extra=extra)
+        if fail_after_groups is not None and groups_run >= fail_after_groups:
+            raise InjectedFailure(f"injected failure after {groups_run} groups")
+    return len(chunks)
 
 
 def run_extract(spark: SparkSession, input_path: str, output_root: str,
@@ -73,55 +100,17 @@ def run_extract(spark: SparkSession, input_path: str, output_root: str,
                 "totals": cat.totals()}
 
     w = wt.build_weights(weights_seed)
-    group_size = max(1, -(-len(remaining) // groups))
-    chunks = [remaining[i:i + group_size]
-              for i in range(0, len(remaining), group_size)]
 
-    groups_run = 0
-    all_buckets: list[int] = []
-    for chunk in chunks:
-        sid, run_dir = cat.new_run()
-        sub = pages.filter(F.col("part_id").isin([int(b) for b in chunk]))
+    def group_df(buckets: list[int]) -> DataFrame:
+        sub = pages.filter(F.col("part_id").isin(buckets))
         sub = pt.with_salt(sub, heavy_bytes=heavy_bytes)
         sub = pt.distribute(sub, num_tasks)
-        out = engine.extract_df(sub.drop("salt"), weights=w)
-        (out.write.mode("overwrite").partitionBy("part_id").parquet(run_dir))
-        # counters from the data just written (no recompute of the UDF);
-        # a group whose buckets held no rows writes no parquet files
-        has_files = bool(glob.glob(os.path.join(run_dir, "**", "*.parquet"),
-                                   recursive=True))
-        if has_files:
-            written = spark.read.parquet(run_dir)
-            counters = _bucket_counters(written)
-        else:
-            counters = {}
-        totals = {
-            "pages": sum(c["pages"] for c in counters.values()),
-            "regions": sum(c["regions"] for c in counters.values()),
-            "chars": sum(c["chars"] for c in counters.values()),
-            "failures": sum(c["failures"] for c in counters.values()),
-        }
-        # buckets with zero rows still count as committed (processed-empty)
-        cat.commit(sid, [int(b) for b in chunk], counters, totals)
-        groups_run += 1
-        all_buckets.extend(chunk)
-        if fail_after_groups is not None and groups_run >= fail_after_groups:
-            raise InjectedFailure(f"injected failure after {groups_run} groups")
+        return engine.extract_df(sub.drop("salt"), weights=w)
+
+    groups_run = _run_groups(spark, cat, remaining, groups, group_df,
+                             _EXTRACT_COUNTERS, fail_after_groups)
     return {"resumed": bool(done), "groups_run": groups_run,
-            "buckets": all_buckets, "totals": cat.totals()}
-
-
-def _crawl_counters(out_df: DataFrame) -> dict[int, dict]:
-    rows = (out_df.groupBy("part_id")
-            .agg(F.count("*").alias("pages"),
-                 F.sum(F.length("main_text")).alias("chars"),
-                 F.sum(F.when(F.length("main_text") == 0, 1).otherwise(0))
-                 .alias("empties"))
-            .collect())
-    return {int(r.part_id): {"pages": int(r.pages),
-                             "chars": int(r.chars or 0),
-                             "empties": int(r.empties or 0)}
-            for r in rows}
+            "buckets": remaining, "totals": cat.totals()}
 
 
 def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
@@ -173,37 +162,19 @@ def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
         from pyspark import StorageLevel
         pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
 
-    group_size = max(1, -(-len(remaining) // groups))
-    chunks = [remaining[i:i + group_size]
-              for i in range(0, len(remaining), group_size)]
-    groups_run = 0
-    all_buckets: list[int] = []
-    for chunk in chunks:
-        sid, run_dir = cat.new_run()
-        sub = (pages.filter(F.col("part_id")
-                            .isin([int(b) for b in chunk]))
+    def group_df(buckets: list[int]) -> DataFrame:
+        sub = (pages.filter(F.col("part_id").isin(buckets))
                .select("url", "warc_ts", "charset", "main_text", "part_id"))
         # text rows are uniformly small — repartition on part_id alone
         # (the OCR job's payload salting is for MB-scale page images)
-        sub = sub.repartition(num_tasks, F.col("part_id"))
-        sub.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
-        has_files = bool(glob.glob(os.path.join(run_dir, "**", "*.parquet"),
-                                   recursive=True))
-        counters = (_crawl_counters(spark.read.parquet(run_dir))
-                    if has_files else {})
-        totals = {"pages": sum(c["pages"] for c in counters.values()),
-                  "chars": sum(c["chars"] for c in counters.values()),
-                  "empties": sum(c["empties"] for c in counters.values())}
-        cat.commit(sid, [int(b) for b in chunk], counters, totals,
-                   extra={"gen": gen})
-        groups_run += 1
-        all_buckets.extend(chunk)
-        if fail_after_groups is not None and groups_run >= fail_after_groups:
-            raise InjectedFailure(
-                f"injected failure after {groups_run} groups")
+        return sub.repartition(num_tasks, F.col("part_id"))
+
+    groups_run = _run_groups(spark, cat, remaining, groups, group_df,
+                             _CRAWL_COUNTERS, fail_after_groups,
+                             extra={"gen": gen})
     pages.unpersist()
     return {"resumed": bool(done), "groups_run": groups_run, "gen": gen,
-            "buckets": all_buckets, "totals": cat.totals()}
+            "buckets": remaining, "totals": cat.totals()}
 
 
 def main(argv: list[str] | None = None) -> None:

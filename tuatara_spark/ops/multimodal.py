@@ -63,52 +63,6 @@ def sniff_format_col(col: str = "html") -> "F.Column":
     return expr
 
 
-def _decode_batch(bufs) -> list:
-    """Decode a sequence of payload buffers into rasters, batching all
-    same-shape TPBIT payloads into ONE stacked ``unpackbits`` per shape
-    group — the engine's hot-path pattern (engine.py make_extractor)
-    applied to the multimodal operators, which previously decoded one
-    row at a time inside their mapInPandas loops. Non-TPBIT payloads
-    (PNG/JPEG/…) still decode per row — their entropy coding is
-    inherently sequential per file — and undecodable entries come back
-    as ``None`` (callers skip or error-row them). Returns a list the
-    same length/order as ``bufs``."""
-    n = len(bufs)
-    out: list = [None] * n
-    tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
-    for i, b in enumerate(bufs):
-        if b is None:
-            continue
-        mv = memoryview(b)
-        try:
-            if bytes(mv[:4]) == fx.TPBIT_MAGIC and len(mv) >= 8:
-                h = int.from_bytes(mv[4:6], "little")
-                w = int.from_bytes(mv[6:8], "little")
-                if len(mv) >= 8 + (h * w + 7) // 8:
-                    tpbit.setdefault((h, w), []).append((i, mv))
-                    continue
-            out[i] = np.asarray(fx.decode_payload(mv))
-        except Exception:
-            pass
-    for (h, w), grp in tpbit.items():
-        try:
-            nb = (h * w + 7) // 8
-            packed = np.stack([
-                np.frombuffer(m, np.uint8, count=nb, offset=8)
-                for _, m in grp])
-            planes = ((np.unpackbits(packed, axis=1, count=h * w)
-                       ^ 1) * np.uint8(255)).reshape(len(grp), h, w)
-            for j, (i, _) in enumerate(grp):
-                out[i] = np.broadcast_to(planes[j][:, :, None], (h, w, 3))
-        except Exception:
-            for i, m in grp:  # per-row fallback, row-level skip
-                try:
-                    out[i] = np.asarray(fx.decode_payload(m))
-                except Exception:
-                    pass
-    return out
-
-
 def media_stats(df: DataFrame, col: str = "html") -> DataFrame:
     """Per-format payload counts/bytes (JVM-side only)."""
     return (df.select(sniff_format_col(col).alias("format"),
@@ -384,14 +338,13 @@ def image_features(df: DataFrame, col: str = "html",
     ratio, the ink bounding box, and the densest row/column (profile
     argmax) — the cheap layout features a page-classification or
     quality-filter stage consumes. Works on any decodable payload
-    (TPAGE / TPBIT / PNG via ``fixtures.decode_payload``); undecodable
+    (TPAGE / TPBIT / PNG via ``fixtures.decode_payloads``); undecodable
     rows are skipped (one error row per format is the meta op's job)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k.name: [] for k in FEATURES_SCHEMA.fields}
-            imgs = _decode_batch(
-                [None if buf is None else bytes(buf) for buf in pdf[col]])
+            imgs, _ = fx.decode_payloads(list(pdf[col]))
             for key, img in zip(pdf[key_col], imgs):
                 if img is None:
                     continue
@@ -465,7 +418,7 @@ def thumbnail(df: DataFrame, out_w: int = 32, out_h: int = 32,
               col: str = "html", key_col: str = "url",
               out_format: str = "raw") -> DataFrame:
     """Decode ANY supported payload (TPAGE/TPBIT/PNG/JPEG via
-    ``fixtures.decode_payload``) + bilinear resize to a thumbnail — same
+    ``fixtures.decode_payloads``) + bilinear resize to a thumbnail — same
     resize kernel as the extraction pipeline. ``out_format``: 'raw'
     (H·W·3 bytes) or 'jpeg' (baseline q85 via ref/jpeg.py — the realistic
     wire format for a thumbnail column at 100 TB: ~30× smaller).
@@ -479,8 +432,7 @@ def thumbnail(df: DataFrame, out_w: int = 32, out_h: int = 32,
         from tuatara_spark.ref import jpeg as J
         for pdf in batches:
             urls, thumbs = [], []
-            imgs = _decode_batch(
-                [None if buf is None else bytes(buf) for buf in pdf[col]])
+            imgs, _ = fx.decode_payloads(list(pdf[col]))
             for key, img in zip(pdf[key_col], imgs):
                 if img is None:
                     continue
@@ -505,8 +457,8 @@ def phash64(df: DataFrame, col: str = "html",
     standard error-row-free projection for derived signatures). Returns
     (key, phash:long).
 
-    Batched end-to-end: decode via :func:`_decode_batch` (stacked TPBIT
-    unpackbits per shape group), then the aHash vectorized per shape
+    Batched end-to-end: decode via ``fixtures.decode_payloads`` (stacked
+    TPBIT unpackbits per shape group), then the aHash vectorized per shape
     group. Block means are EXACT integer sums over the uint8 stack
     (one ``np.sum(dtype=int64)`` pass) divided once in float64 — a
     channel-averaged float64 image per row would cost 24 bytes/pixel of
@@ -519,8 +471,7 @@ def phash64(df: DataFrame, col: str = "html",
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            imgs = _decode_batch(
-                [None if buf is None else bytes(buf) for buf in pdf[col]])
+            imgs, _ = fx.decode_payloads(list(pdf[col]))
             groups: dict[tuple, list[int]] = {}
             for i, img in enumerate(imgs):
                 if img is None or img.shape[0] < 8 or img.shape[1] < 8:

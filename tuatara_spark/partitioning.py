@@ -62,13 +62,3 @@ def distribute(df: DataFrame, num_tasks: int) -> DataFrame:
     """Physical repartition on (part_id, salt) — the explicit shuffle that
     balances extraction work. Requires with_bucket + with_salt first."""
     return df.repartition(num_tasks, F.col("part_id"), F.col("salt"))
-
-
-def partition_histogram(df: DataFrame) -> DataFrame:
-    """Diagnostic: per physical partition, row count and payload bytes —
-    used by skew tests and ops. Stays in the JVM (spark_partition_id)."""
-    return (df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(F.count("*").alias("rows"),
-                 F.sum(F.length("html")).alias("bytes"))
-            .orderBy("pid"))

@@ -26,10 +26,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tuatara_spark import fixtures as fx
+from tuatara_spark import engine, fixtures as fx
 from tuatara_spark import weights as wt
 from tuatara_spark.ops import dedup, multimodal, similarity, textstats
-from tuatara_spark.ref import pipeline as pl
 
 # --- shared cleaning expression (Spark 3-arg / DuckDB needs the 'g' flag) --
 _CLEAN_RE = r"[^!-~]|\]"
@@ -120,33 +119,17 @@ def _render_extract_fn(weights_bc, page_hook=None):
     """``page_hook`` (optional, picklable) transforms each rendered page
     before extraction — e.g. a lossy codec round trip for ingest gates."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tuatara_spark.ref import geometry as g
         params = weights_bc.value if hasattr(weights_bc, "value") else weights_bc
         for pdf in batches:
             # render per row (synthesis is inherently per-page), then run
-            # the engine's shape-grouped batched kernel: ONE stacked
-            # detection forward for the whole pandas batch (all pages are
-            # 256²) and ONE recognition matmul over all crops — identical
-            # output to per-page extract_page, measured ~2× faster.
+            # the engine's batch kernel over the whole pandas batch
             images = [fx.render_page(t or "", 256, 256, 4)[0]
                       for t in pdf["t"]]
             if page_hook is not None:
                 images = [page_hook(im) for im in images]
-            det = pl.detect_pages(images, params)
-            crops_flat, counts = [], []
-            for boxes, swapped in det:
-                crops = pl.crop_regions(swapped, boxes)
-                crops_flat.extend(crops)
-                counts.append(len(crops))
-            texts_flat = pl.recognize_ink(
-                params, pl.crops_to_ink(crops_flat, params))
-            texts, pos = [], 0
-            for (boxes, _), cnt in zip(det, counts):
-                spans = [{"text": t, "bbox": g.rect_to_tesseract_bbox(b)}
-                         for t, b in zip(texts_flat[pos:pos + cnt], boxes)]
-                pos += cnt
-                texts.append(pl.assemble_reading_order(spans))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "text": texts})
+            pages = engine.ocr_batch(params, images, [None] * len(images))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"],
+                                "text": [p and p["text"] for p in pages]})
     return fn
 
 

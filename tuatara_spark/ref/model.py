@@ -5,20 +5,28 @@ PARSEQ (recognition; tuatara.cpp:421-432) weights from disk. Those weights
 are not redistributable/available offline, so this module provides
 *constructed deterministic* models with the same interface contracts:
 
-* detection: (N, 3, H, W) float32 in [0,1] → (N, H/2, W/2, 2) score maps,
-  channel 0 = text score, channel 1 = link score (tuatara.cpp:393-394).
-  Implemented as a conv stack: a 1x1 channel-mix ("ink") conv, a 2x2
-  average-pool downsample, and two smoothing conv kernels (5x5 binomial for
-  text, 3x7 horizontal for link).
-* recognition: (R, 3, 32, 128) float32 → (R, L=26, C=98) logits.
-  CRNN-shaped: a 1x1 ink conv, then a full-receptive-field conv layer whose
-  95 filters are glyph templates (built by tuatara_spark.weights through the
-  real detection+crop path), correlated against the input and emitted as
-  position-0 class logits; positions 1..L-1 emit EOS. Softmax + greedy
-  decode downstream are exactly the reference's (tuatara.cpp:486, 61-78).
+Both nets start with the same 1x1 channel-mix ("ink") conv, and it
+commutes with the reference's ÷255 normalize (tuatara.cpp:363-370,
+443-446), so both run straight from uint8 HWC pixels (``ink_map_u8``) and
+never build the NCHW float tensor:
 
-Everything is float32, fully vectorized over the batch, and identical
-between the single-process oracle and the Spark Arrow UDF (shared code).
+* detection (``detect_forward_u8``): (N, H, W, 3) uint8 pages →
+  (N, H/2, W/2, 2) score maps, channel 0 = text score, channel 1 = link
+  score (tuatara.cpp:393-394). After the ink conv: a 2x2 average-pool
+  downsample and two smoothing conv kernels (5x5 binomial for text, 3x7
+  horizontal for link).
+* recognition (``features_from_ink`` → ``logits_from_features``): the
+  (R, 32, 128) ink of the resized crops (``pipeline.crops_to_ink``) →
+  (R, L=26, C=98) logits. CRNN-shaped: a full-receptive-field conv layer
+  whose 95 filters are glyph templates (built by tuatara_spark.weights
+  through the real detection+crop path), correlated against the input and
+  emitted as position-0 class logits; positions 1..L-1 emit EOS. Softmax +
+  greedy decode downstream are exactly the reference's (tuatara.cpp:486,
+  61-78).
+
+Everything is float32 after the ink conv, fully vectorized over the batch,
+and identical between the single-process oracle and the Spark Arrow UDF
+(shared code).
 """
 
 from __future__ import annotations
@@ -61,44 +69,22 @@ def conv2d_same(x: np.ndarray, k: np.ndarray) -> np.ndarray:
     return out
 
 
-def ink_map(tensors: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
-    """(N, 3, H, W) [0,1] → (N, H, W) 'ink' (1 - channel mix). Symmetric
-    channel weights make this invariant to the reference's BGR/RGB swaps
-    (quirk Q3) while keeping the swap stages themselves in the pipeline."""
-    mixed = (tensors[:, 0] * ink_w[0] + tensors[:, 1] * ink_w[1]
-             + tensors[:, 2] * ink_w[2])
-    return (np.float32(1.0) - mixed).astype(np.float32)
-
-
 def ink_map_u8(imgs: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
-    """Fused S4+channel-mix: (N, H, W, 3) uint8 → (N, H, W) float32 ink,
-    skipping the full NCHW float tensor (the 1x1 ink conv commutes with
-    the ÷255 normalize). Pipeline-internal fast path; the reference-shaped
-    ``to_tensor`` + ``ink_map`` stages remain for stage parity/tests."""
+    """Fused S4 + 1x1 ink conv, the first layer of both nets:
+    (N, H, W, 3) uint8 → (N, H, W) float32 ink = 1 − channel mix / 255.
+    The channel mix commutes with the reference's ÷255 normalize, so the
+    NCHW float tensor is never built. Symmetric channel weights make the
+    ink invariant to the reference's BGR/RGB swaps (quirk Q3) while the
+    swap stages themselves stay in the pipeline."""
     mixed = (imgs[..., 0] * ink_w[0] + imgs[..., 1] * ink_w[1]
              + imgs[..., 2] * ink_w[2])
     return (np.float32(1.0) - mixed / np.float32(255.0)).astype(np.float32)
 
 
-def _detect_from_ink(params: dict, ink: np.ndarray) -> np.ndarray:
-    n, h, w = ink.shape
-    # 2x2 average-pool downsample to heatmap resolution
-    half = ink.reshape(n, h // 2, 2, w // 2, 2).mean(axis=(2, 4), dtype=np.float32)
-    text = conv2d_same(half, params["k_text"])
-    link = conv2d_same(half, params["k_link"])
-    return np.stack([text, link], axis=-1)
-
-
-def detect_forward(params: dict, tensors: np.ndarray) -> np.ndarray:
-    """Detection forward pass: (N, 3, H, W) → (N, H/2, W/2, 2); H, W must be
-    even (guaranteed by pad-to-32, tuatara.cpp:225-229)."""
-    return _detect_from_ink(params, ink_map(tensors, params["ink_w"]))
-
-
 def detect_forward_u8(params: dict, imgs: np.ndarray,
                       valid_hw: tuple[int, int] | None = None) -> np.ndarray:
-    """Fused fast path: (N, H, W, 3) uint8 pages → (N, H/2, W/2, 2),
-    skipping the NCHW float tensor (see ink_map_u8).
+    """Detection forward pass: (N, H, W, 3) uint8 pages → (N, H/2, W/2, 2);
+    H, W must be even (guaranteed by pad-to-32, tuatara.cpp:225-229).
 
     ``valid_hw``: extent of real image content. The reference zero-pads up
     to multiples of 32 (tuatara.cpp:225-229) — black canvas a trained CRAFT
@@ -112,7 +98,12 @@ def detect_forward_u8(params: dict, imgs: np.ndarray,
             ink[:, vh:, :] = 0
         if vw < ink.shape[2]:
             ink[:, :, vw:] = 0
-    return _detect_from_ink(params, ink)
+    n, h, w = ink.shape
+    # 2x2 average-pool downsample to heatmap resolution
+    half = ink.reshape(n, h // 2, 2, w // 2, 2).mean(axis=(2, 4), dtype=np.float32)
+    text = conv2d_same(half, params["k_text"])
+    link = conv2d_same(half, params["k_link"])
+    return np.stack([text, link], axis=-1)
 
 
 def features_from_ink(ink: np.ndarray) -> np.ndarray:
@@ -129,15 +120,12 @@ def features_from_ink(ink: np.ndarray) -> np.ndarray:
     return (f / (norms + np.float32(1e-6))).astype(np.float32)
 
 
-def ink_features(params: dict, crops: np.ndarray) -> np.ndarray:
-    """(R, 3, 32, 128) float32 crops → feature vectors (reference-shaped
-    tensor API; the pipeline's fast path feeds features_from_ink from
-    uint8 crops directly)."""
-    return features_from_ink(ink_map(crops, params["ink_w"]))
-
-
 def logits_from_features(params: dict, f: np.ndarray) -> np.ndarray:
-    """(R, 32*128) features → (R, 26, 98) logits."""
+    """Recognition head: (R, 32*128) features → (R, 26, 98) logits.
+    ``params`` carries 'templates' (95, 32*128) L2-normalized zero-mean
+    template filters (charset order — class id = 1 + charset index,
+    matching the tokenizer's first-occurrence mapping), 'gain', and
+    'eos_bias'."""
     r = f.shape[0]
     gain = np.float32(params["gain"])
     logits = np.full((r, SEQ_LEN, cs.NUM_CLASSES), -gain, dtype=np.float32)
@@ -153,15 +141,3 @@ def logits_from_features(params: dict, f: np.ndarray) -> np.ndarray:
     logits[:, 0, 0] = gain * np.maximum(np.float32(params["eos_bias"]),
                                         eos_corr.astype(np.float32))
     return logits
-
-
-def recognize_forward(params: dict, crops: np.ndarray) -> np.ndarray:
-    """Recognition forward pass: (R, 3, 32, 128) float32 → (R, 26, 98)
-    logits. ``params`` carries 'templates' (95, 32*128) L2-normalized
-    zero-mean template filters (charset order — class id = 1 + charset
-    index, matching the tokenizer's first-occurrence mapping), 'gain', and
-    'eos_bias'."""
-    if crops.shape[0] == 0:
-        return logits_from_features(params, np.zeros((0, REC_H * REC_W),
-                                                     dtype=np.float32))
-    return logits_from_features(params, ink_features(params, crops))

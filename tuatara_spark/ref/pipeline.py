@@ -2,15 +2,18 @@
 ``image_to_data`` (tuatara.cpp:314-512), pinned to the Python-binding entry
 point (numpy RGB array in; bindings/python.cpp:43-52, quirk Q3).
 
-This module is the single kernel executed by both the golden-fixture oracle
-and the Spark Arrow UDF (tuatara_spark.engine). Per-image flow:
+Its stage functions are shared: ``extract_page`` chains them for one page
+(the per-page oracle behind the goldens), and ``engine.ocr_batch`` — the
+single batch kernel that the Spark Arrow UDF and the declared OCR queries
+run — chains the same functions over a whole record batch. Per-image flow:
 
-  swap channels (S2) → aspect resize + pad-to-32 (S3) → tensorize (S4) →
-  detection forward (S5) → get_detected_boxes (S6-S16) → rescale (S17) →
-  crop (S18) → crop resize + swap + tensorize (S19/S2/S4) → recognition
-  forward (S20-S23; region batching is the caller's concern) → softmax →
-  greedy decode + EOS truncation (S24-S25) → bbox formatting (S26-S27) →
-  reading-order assembly (S28, bindings/run_ocr.py:12).
+  swap channels (S2) → aspect resize + pad-to-32 (S3) → tensorize + ink
+  conv + detection forward (S4/S5, fused from uint8) → get_detected_boxes
+  (S6-S16) → rescale (S17) → crop (S18) → crop resize + swap + ink
+  (S19/S2/S4) → recognition forward (S20-S23; region batching is the
+  caller's concern) → softmax → greedy decode + EOS truncation (S24-S25) →
+  bbox formatting (S26-S27) → reading-order assembly (S28,
+  bindings/run_ocr.py:12).
 """
 
 from __future__ import annotations
@@ -90,17 +93,6 @@ def crop_regions(swapped_image: np.ndarray, boxes) -> list[np.ndarray]:
     return crops
 
 
-def crops_to_tensors(crops: list[np.ndarray]) -> np.ndarray:
-    """S19 + S2 + S4 per crop (tuatara.cpp:437-448): resize to 128x32,
-    channel swap, tensorize. Returns (R, 3, 32, 128) float32.
-    (Reference-shaped API; the pipeline's hot path is crops_to_ink.)"""
-    if not crops:
-        return np.zeros((0, 3, md.REC_H, md.REC_W), dtype=np.float32)
-    ts = [rz.to_tensor(rz.swap_channels(
-        rz.resize_bilinear(c, md.REC_W, md.REC_H))) for c in crops]
-    return np.stack(ts)
-
-
 def crops_to_ink(crops: list[np.ndarray], params: dict) -> np.ndarray:
     """Fused S19+S2+S4+ink: resize crops (batched per source shape —
     identical sampling math, vectorized), one ink-map pass.
@@ -126,13 +118,6 @@ def recognize_ink(params: dict, ink: np.ndarray) -> list[str]:
     logits = md.logits_from_features(params, md.features_from_ink(ink))
     probs = cs.softmax(logits)                             # cpp:486
     return cs.decode_probs(probs)                          # cpp:493-505
-
-
-def recognize_tensors(params: dict, tensors: np.ndarray) -> list[str]:
-    """Reference-shaped tensor API over recognize_ink's math."""
-    logits = md.recognize_forward(params, tensors)
-    probs = cs.softmax(logits)
-    return cs.decode_probs(probs)
 
 
 def image_to_data(image_rgb: np.ndarray, params: dict) -> list[dict]:

@@ -120,11 +120,6 @@ def resize_aspect_ratio(img: np.ndarray, square_size: int = 1024,
     return resized, ratio, size_heatmap
 
 
-def to_tensor(img: np.ndarray) -> np.ndarray:
-    """HWC uint8 → CHW float32 in [0, 1] (tuatara.cpp:363-370 / 443-446)."""
-    return np.ascontiguousarray(img.transpose(2, 0, 1)).astype(np.float32) / np.float32(255.0)
-
-
 def swap_channels(img: np.ndarray) -> np.ndarray:
     """Pure BGR<->RGB channel reversal (cv::cvtColor COLOR_BGR2RGB on a
     3-channel image; tuatara.cpp:349 and per-crop at 441 — quirk Q3: with an
