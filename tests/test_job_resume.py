@@ -104,6 +104,29 @@ def test_crash_and_resume_equals_single_shot(spark, pages_path, tmp_path):
     assert a == b
 
 
+def test_run_extract_broadcasts_weights_once(spark, pages_path, tmp_path,
+                                             monkeypatch):
+    """One weights broadcast per job, not per group, destroyed when the job
+    ends — also when a group fails."""
+    sc_type = type(spark.sparkContext)
+    made = []
+
+    def broadcast(sc, value):
+        made.append(real(sc, value))
+        return made[-1]
+
+    real = sc_type.broadcast
+    monkeypatch.setattr(sc_type, "broadcast", broadcast)
+    out = str(tmp_path / "table")
+    with pytest.raises(job.InjectedFailure):
+        job.run_extract(spark, pages_path, out, num_buckets=8, groups=4,
+                        fail_after_groups=2)
+    assert len(made) == 1 and not made[0]._jbroadcast.isValid()
+    s = job.run_extract(spark, pages_path, out, num_buckets=8, groups=4)
+    assert s["resumed"] and s["groups_run"] > 1
+    assert len(made) == 2 and not made[1]._jbroadcast.isValid()
+
+
 def test_gc_uncommitted(spark, pages_path, tmp_path):
     out = str(tmp_path / "gc")
     with pytest.raises(job.InjectedFailure):

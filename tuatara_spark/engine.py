@@ -18,7 +18,9 @@ steps, the only implementation of each:
 
 Model weights are broadcast once per job and rehydrated once per worker
 (``Broadcast.value`` caches) — fixing the reference's per-call weight
-reload (tuatara.cpp:333-340, 421-432).
+reload (tuatara.cpp:333-340, 421-432). ``extract_df`` broadcasts a weights
+dict itself, or takes a ``Broadcast`` its caller owns: ``job.run_extract``
+broadcasts once for all its groups and destroys it when the job ends.
 
 Batch sizing: one 256² TPAGE row ≈ 196 KB; keep
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` ≈ 64 so a batch stays
@@ -30,6 +32,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, StringType,
                                StructField, StructType)
@@ -135,17 +138,20 @@ def make_extractor(weights_bc, passthrough: list[str]):
     return extract
 
 
-def extract_df(df: DataFrame, weights: dict | None = None,
+def extract_df(df: DataFrame, weights: dict | Broadcast | None = None,
                seed: int = 42) -> DataFrame:
     """pages DataFrame (url, warc_ts, html, lang, [extra cols]) →
     extraction DataFrame (passthrough + spans/text/n_regions/n_chars/error).
 
     The html column is consumed inside the UDF; everything else passes
-    through. Weights are broadcast once here.
+    through. A weights dict (or ``build_weights(seed)``) is broadcast here;
+    a ``Broadcast`` is used as is and stays the caller's to destroy.
     """
-    spark = df.sparkSession
-    w = weights if weights is not None else wt.build_weights(seed)
-    bc = spark.sparkContext.broadcast(w)
+    if isinstance(weights, Broadcast):
+        bc = weights
+    else:
+        w = weights if weights is not None else wt.build_weights(seed)
+        bc = df.sparkSession.sparkContext.broadcast(w)
     passthrough = [f.name for f in df.schema.fields
                    if f.name not in CONSUMED_COLS]
     schema = output_schema(df.schema)

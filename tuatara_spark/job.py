@@ -99,16 +99,20 @@ def run_extract(spark: SparkSession, input_path: str, output_root: str,
         return {"resumed": True, "groups_run": 0, "buckets": [],
                 "totals": cat.totals()}
 
-    w = wt.build_weights(weights_seed)
+    # one broadcast for every group, released even if a group fails
+    bc = spark.sparkContext.broadcast(wt.build_weights(weights_seed))
 
     def group_df(buckets: list[int]) -> DataFrame:
         sub = pages.filter(F.col("part_id").isin(buckets))
         sub = pt.with_salt(sub, heavy_bytes=heavy_bytes)
         sub = pt.distribute(sub, num_tasks)
-        return engine.extract_df(sub.drop("salt"), weights=w)
+        return engine.extract_df(sub.drop("salt"), weights=bc)
 
-    groups_run = _run_groups(spark, cat, remaining, groups, group_df,
-                             _EXTRACT_COUNTERS, fail_after_groups)
+    try:
+        groups_run = _run_groups(spark, cat, remaining, groups, group_df,
+                                 _EXTRACT_COUNTERS, fail_after_groups)
+    finally:
+        bc.destroy()
     return {"resumed": bool(done), "groups_run": groups_run,
             "buckets": remaining, "totals": cat.totals()}
 
