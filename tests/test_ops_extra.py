@@ -165,18 +165,30 @@ def test_encode_tpbit_rejects_nonbinary_without_optin():
 
 
 def test_dedup_release_caches(spark):
-    """Pair operators register their persisted intermediates;
-    release_caches() unpersists them all (long-lived-session hygiene)."""
+    """Pair operators register their persisted intermediates and
+    cluster_ids its local checkpoints; release_caches() frees them all
+    (long-lived-session hygiene): after consume + release no RDD the
+    operators persisted is left in the block manager's registry."""
     from tuatara_spark.ops import dedup as dd
     pdf = pd.DataFrame({"doc_id": range(20),
                         "text": [f"document number {i} body text" for i in range(10)] * 2})
     df = spark.createDataFrame(pdf)
-    before = len(dd._LIVE_CACHES)
+    dd.release_caches()
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    baseline = persistent()
     pairs = dd.minhash_lsh_pairs(df, threshold=0.5)
-    pairs.count()
-    assert len(dd._LIVE_CACHES) > before
+    clusters = dd.cluster_ids(df, pairs)
+    got = {r.doc_id: r.cluster_id for r in clusters.collect()}
+    assert sorted(got) == list(range(20))
+    assert all(got[i] == got[i + 10] <= i for i in range(10))
+    assert dd._LIVE_CACHES and persistent() - baseline
     released = dd.release_caches()
-    assert released >= 1 and not dd._LIVE_CACHES
+    assert released >= 3 and not dd._LIVE_CACHES
+    # a subset, not equality: Spark's cleaner may drop unrelated RDDs
+    assert persistent() <= baseline
 
 
 def test_batched_scorers_match_catalyst(spark):

@@ -57,12 +57,15 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
     for groups_run, chunk in enumerate(chunks, 1):
         sid, run_dir = cat.new_run()
         buckets = [int(b) for b in chunk]
-        (group_df(buckets).write.mode("overwrite").partitionBy("part_id")
-         .parquet(run_dir))
+        gdf = group_df(buckets)
+        gdf.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
         # a group whose buckets held no rows writes no parquet files
         per_bucket: dict[int, dict] = {}
         if glob.glob(os.path.join(run_dir, "**", "*.parquet"), recursive=True):
-            rows = (spark.read.parquet(run_dir).groupBy("part_id")
+            # the schema is the one just written: pinning it skips the
+            # footer-inference job a plain read runs
+            rows = (spark.read.schema(gdf.schema).parquet(run_dir)
+                    .groupBy("part_id")
                     .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
                     .collect())
             per_bucket = {int(r.part_id): {k: int(r[k] or 0)

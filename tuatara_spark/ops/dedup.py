@@ -31,19 +31,54 @@ def _persist(df: DataFrame) -> DataFrame:
     consuming each result, or cached blocks accumulate until storage
     eviction. MEMORY_AND_DISK (not the MEMORY_ONLY default) so an
     oversized intermediate spills instead of silently recomputing the
-    whole shingle pipeline per partition miss."""
+    whole shingle pipeline per partition miss.
+
+    Consume-then-release contract: a DataFrame built on a registered
+    intermediate must be consumed BEFORE :func:`release_caches`. A
+    persisted one recomputes after release; a local checkpoint
+    (:func:`_register`) has no lineage left to recompute from, so
+    reading it again after release fails — nor after an executor is
+    lost (see :func:`_release`)."""
     from pyspark import StorageLevel
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_CACHES.append(df)
+    _LIVE_CACHES.append(df.unpersist)
+    return df
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` DataFrame. Its
+    ``unpersist()`` does not reach them: they belong to the checkpointed
+    RDD under the plan's ``LogicalRDD``, so unpersist that RDD.
+
+    Fault-tolerance trade-off of local checkpoints: the blocks live only
+    in the executors' block managers and the lineage is cut, so after an
+    executor is lost Spark cannot recompute them and the consuming job
+    fails instead of retrying. ``cluster_ids`` takes this for per-round
+    plans of constant size; a reliable ``checkpoint`` would need a
+    checkpoint directory."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _register(df: DataFrame) -> DataFrame:
+    """Hand a ``localCheckpoint`` DataFrame to :func:`release_caches`."""
+    _LIVE_CACHES.append(lambda: _release(df))
     return df
 
 
 def release_caches() -> int:
-    """Unpersist every intermediate cached by the pair operators (call
-    after materializing their results). Returns the number released."""
+    """Free every intermediate registered by the operators of this
+    package — persisted DataFrames and local checkpoints alike (call
+    after materializing their results). Returns the number released.
+
+    Consume-then-release: once released, a DataFrame an operator
+    returned cannot be read again if it scans a local checkpoint
+    (``cluster_ids``, ``host_components``) — its lineage was cut, so
+    there is nothing to recompute from. Local checkpoints are also not
+    recomputed after an executor is lost (see :func:`_release`); an
+    action that loses one fails rather than retries."""
     n = 0
     while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist()
+        _LIVE_CACHES.pop()()
         n += 1
     return n
 
@@ -335,36 +370,71 @@ def cluster_ids(df: DataFrame, pairs: DataFrame,
     Algorithm: iterative min-label propagation to fixpoint (the classic
     MapReduce connected-components formulation — Rastogi et al.,
     "Finding Connected Components in MapReduce", ICDE'13 describe the
-    family; this is the simple O(diameter)-round variant). Each round is
-    one join + groupBy on narrow (node, label) rows; near-dup graphs have
-    tiny diameters (dup clusters are dense), so rounds stay in the low
-    single digits. Convergence is checked with a count of changed labels;
-    intermediates persist per round and release at the end.
+    family; this is the simple O(diameter)-round variant). Near-dup
+    graphs have tiny diameters (dup clusters are dense), so rounds stay
+    in the low single digits; ``max_iters`` caps them. After round k a
+    node's label is the minimum over its k-hop closed neighbourhood.
+
+    Per-round shape: pairs naming an id absent from ``df`` are dropped
+    (such a node never holds a label, so it never passes one on), the
+    edge table is made symmetric, and only nodes with an edge iterate.
+    Round 1 comes straight from the edges (``least(node, min(nbr))``);
+    every round writes one ``(node, label, changed)`` table as a lazy
+    local checkpoint, so each round's plan scans the previous table and
+    has the same size at every round (chained DataFrames would double
+    it per round). Only nodes whose label changed
+    send it on: an unchanged neighbour's label was already taken last
+    round. The round's one action is the count of changed labels, which
+    also materializes the checkpoint; the previous table is freed then.
+    Singletons join back at the end with ``coalesce(label, id)``.
+
+    Consume-then-release: the result scans the last round's checkpoint,
+    registered (with the edge table) for :func:`release_caches`. Consume
+    it first; once released it cannot be read again, and an executor
+    lost before then fails the consuming job (local checkpoints are not
+    recomputed).
     """
-    edges = pairs.select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst"))
-    edges = _persist(edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))))
-    labels = _persist(df.select(F.col(id_col).alias("node"),
-                                F.col(id_col).alias("label")))
-    for _ in range(max_iters):
-        nbr = (edges.join(labels, edges.src == labels.node)
-               .groupBy("dst").agg(F.min("label").alias("nbr_label")))
-        new = _persist(
-            labels.join(nbr, labels.node == nbr.dst, "left")
-            .select("node",
-                    F.least(F.col("label"),
-                            F.coalesce("nbr_label", "label"))
-                    .alias("label")))
-        changed = (new.alias("n").join(labels.alias("o"), "node")
-                   .filter(F.col("n.label") != F.col("o.label")).count())
-        labels = new
+    if max_iters < 1:
+        return df.select(id_col, F.col(id_col).alias("cluster_id"))
+    ids = df.select(F.col(id_col).alias("_id"))
+    id_type = ids.schema["_id"].dataType
+    edges = (pairs.select(F.col("id_a").alias("src"),
+                          F.col("id_b").alias("dst"))
+             .join(ids, F.col("src") == F.col("_id"), "left_semi")
+             .join(ids, F.col("dst") == F.col("_id"), "left_semi")
+             .select(F.col("src").cast(id_type).alias("src"),
+                     F.col("dst").cast(id_type).alias("dst")))
+    edges = _register(edges.unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .localCheckpoint(eager=False))
+    labels = (edges.groupBy("src").agg(F.min("dst").alias("_nbr"))
+              .select(F.col("src").alias("node"),
+                      F.least("src", "_nbr").alias("label"),
+                      (F.col("_nbr") < F.col("src")).alias("changed"))
+              .localCheckpoint(eager=False))
+    changed = labels.filter("changed").count()
+    for _ in range(max_iters - 1):
         if changed == 0:
             break
-    out = labels.select(F.col("node").alias(id_col),
-                        F.col("label").alias("cluster_id"))
-    # materialization contract: caller consumes out, then release_caches()
-    return out
+        sent = labels.filter("changed").select(
+            F.col("node").alias("src"), F.col("label").alias("_sent"))
+        nbr = (edges.join(sent, "src").groupBy("dst")
+               .agg(F.min("_sent").alias("_nbr")))
+        new = (labels.join(nbr, labels.node == nbr.dst, "left")
+               .select("node",
+                       F.least("label", F.coalesce("_nbr", "label"))
+                       .alias("label"),
+                       F.coalesce(F.col("_nbr") < F.col("label"),
+                                  F.lit(False)).alias("changed"))
+               .localCheckpoint(eager=False))
+        changed = new.filter("changed").count()
+        _release(labels)
+        labels = new
+    labels = _register(labels).select(F.col("node").alias("_node"),
+                                      F.col("label").alias("_label"))
+    return (df.select(id_col)
+            .join(labels, F.col(id_col) == F.col("_node"), "left")
+            .select(id_col, F.coalesce("_label", id_col).alias("cluster_id")))
 
 
 # ------------------------------------------------------- n-gram Jaccard ----
