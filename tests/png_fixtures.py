@@ -61,11 +61,11 @@ def _filtered(rows: np.ndarray, bpp: int) -> bytes:
 def encode_png(img: np.ndarray, color_type: int = 2, bit_depth: int = 8,
                interlace: bool = False, idat_size: int = 0) -> bytes:
     """Encode an (H, W, C) uint8 image: C = 1 for gray (color type 0),
-    3 for RGB (2), 4 for RGBA (6). ``bit_depth=1`` (gray only) packs
+    2 for gray + alpha (4), 3 for RGB (2), 4 for RGBA (6). ``bit_depth=1`` (gray only) packs
     pixels ≥ 128 as 1. ``idat_size`` > 0 splits the compressed stream
     into IDAT chunks of that many bytes."""
     h, w = img.shape[:2]
-    c = {0: 1, 2: 3, 6: 4}[color_type]
+    c = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
     assert bit_depth == 8 or (bit_depth == 1 and color_type == 0)
     img = img.reshape(h, w, c)
 

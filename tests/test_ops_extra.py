@@ -2642,6 +2642,38 @@ def test_classify_charngram_rejects_deep_doc_profiles(spark):
         langid.classify_charngram(docs, prof, top_k=10, top_m=11)
 
 
+def test_jaccard_verify_integer_exact(spark):
+    """The verify filters accept ``inter·den >= union·num`` over the same
+    decimal rational as the prefix bound. With 1-grams (distinct letters):
+    "abc"/"abcde" is J = 3/5 exactly and is kept at 0.6; "vw"/"vwxyz" is
+    J = 2/5 = 3/5 − 1/union and is dropped. A threshold written with more
+    digits than the 10**6 denominator resolves, 0.4000000001, is the
+    rational 2/5: the J = 2/5 pair is kept, where the float comparison
+    (0.4 >= 0.4000000001) would drop it although the prefix bound
+    generated it."""
+    from tuatara_spark.ops import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "abc"), (2, "abcde"), (3, "vw"), (4, "vwxyz")],
+        "doc_id long, text string")
+    old = docs.filter("doc_id IN (2, 4)")
+    new = docs.filter("doc_id IN (1, 3)")
+    for t, want in ((0.6, {(1, 2)}), (0.4000000001, {(1, 2), (3, 4)})):
+        got = {(r.id_a, r.id_b) for r in
+               dedup.ngram_jaccard_pairs(docs, k=1, threshold=t).collect()}
+        assert got == want, (t, got)
+        got = {(r.id_new, r.id_old) for r in dedup.cross_corpus_jaccard_pairs(
+            old, new, k=1, threshold=t).collect()}
+        assert got == want, (t, got)
+        # one row per band: a J >= 2/5 pair misses all 32 bands with
+        # probability <= 0.6**32
+        got = {(r.id_a, r.id_b): r.jaccard for r in dedup.minhash_lsh_pairs(
+            docs, k=1, num_perm=32, bands=32, threshold=t).collect()}
+        assert set(got) == want, (t, got)
+        assert got[(1, 2)] == 0.6
+    dedup.release_caches()
+
+
 def test_prefix_bound_integer_exact(spark):
     """The lossless-prefix size must use the exact ceiling of the
     DECIMAL rational the caller wrote. The float formulation

@@ -53,6 +53,8 @@ def test_scan_fixture_decodes(name):
     # and the pixels are exactly the ones the fixture was encoded from
     src = pf.scan_pages()[name][0]
     np.testing.assert_array_equal(img, np.broadcast_to(src, img.shape))
+    # gray decodes are a stride-0 channel broadcast (one-plane OCR path)
+    assert (img.strides[2] == 0) == name.startswith("scan_gray")
 
 
 def test_decode_payload_dispatches_png():

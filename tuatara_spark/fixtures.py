@@ -154,7 +154,9 @@ def decode_payload(buf: bytes) -> np.ndarray:
     dispatching on the magic (TPAGE/TPBIT rasters, real PNG — the
     reference's own fixture format, examples/resume.cpp:9 — real JPEG
     baseline/progressive, or real GIF). The returned array may be a READ-ONLY view (TPAGE: frombuffer;
-    TPBIT: stride-0 broadcast) — copy before mutating."""
+    TPBIT and gray PNG/JPEG/TIFF: stride-0 channel broadcast, which the
+    OCR front end resizes and detects on one plane) — copy before
+    mutating."""
     magic = bytes(buf[:4])
     if magic == TPAGE_MAGIC:
         return decode_tpage(buf)

@@ -15,6 +15,8 @@ shuffle rows are narrow even for huge documents.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -273,9 +275,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # pair instead of two (array_union dropped — same integers, same double)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     cand = cand.withColumn("_i", inter)
-    jac = F.col("_i") / (F.col("na") + F.col("nb") - F.col("_i"))
+    union = F.col("na") + F.col("nb") - F.col("_i")
+    jac = F.col("_i") / union
     return (cand.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+            .filter(_jaccard_at_least(F.col("_i"), union, threshold))
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
@@ -456,12 +459,29 @@ def _prefix_bound(threshold: float):
     (checked exhaustively to n=2·10⁶; pytest re-checks to n=1000), so
     declared-query output is unchanged — and a wider-than-minimal
     prefix only ever adds candidates that exact verification removes.
+    Verification (:func:`_jaccard_at_least`) accepts by the same
+    rational, so the guarantee covers exactly the pairs it keeps.
     """
-    from fractions import Fraction
-    fr = Fraction(threshold).limit_denominator(10 ** 6)
-    num, den = fr.numerator, fr.denominator
+    num, den = _threshold_fraction(threshold)
     return (F.col("_n")
             - F.expr(f"(_n * {num}L + {den - 1}L) div {den}L") + 1)
+
+
+def _threshold_fraction(threshold: float) -> tuple[int, int]:
+    """(num, den) of the decimal rational the caller wrote."""
+    fr = Fraction(threshold).limit_denominator(10 ** 6)
+    return fr.numerator, fr.denominator
+
+
+def _jaccard_at_least(inter, union, threshold: float):
+    """``inter / union >= threshold`` verified in integers as
+    ``inter·den >= union·num`` over :func:`_threshold_fraction` — the
+    rational the prefix bound is exact in. The float comparison could
+    disagree with it (e.g. a threshold with more than six decimal
+    digits); the ``jaccard`` output column stays the double."""
+    num, den = _threshold_fraction(threshold)
+    return (inter.cast("long") * F.lit(den)
+            >= union.cast("long") * F.lit(num))
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -516,10 +536,10 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                             F.col("_ng").alias("nb")), "id_b"))
     # |A∪B| = |A|+|B|-|A∩B| (distinct gram arrays): one set build per pair
     cand = cand.withColumn("_i", F.size(F.array_intersect("sh_a", "sh_b")))
-    jac = F.col("_i").cast("double") / (F.col("na") + F.col("nb")
-                                        - F.col("_i"))
+    union = F.col("na") + F.col("nb") - F.col("_i")
+    jac = F.col("_i").cast("double") / union
     return (cand.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+            .filter(_jaccard_at_least(F.col("_i"), union, threshold))
             .select("id_a", "id_b", "jaccard"))
 
 
@@ -887,9 +907,9 @@ def cross_corpus_jaccard_pairs(old: DataFrame, new: DataFrame,
                       "id_new")
             .join(so.select(F.col("_id").alias("id_old"), "sh_o"),
                   "id_old"))
-    i = F.size(F.array_intersect("sh_n", "sh_o"))
-    jac = (i.cast("double")
-           / (F.size("sh_n") + F.size("sh_o") - i))
+    cand = cand.withColumn("_i", F.size(F.array_intersect("sh_n", "sh_o")))
+    union = F.size("sh_n") + F.size("sh_o") - F.col("_i")
+    jac = F.col("_i").cast("double") / union
     return (cand.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+            .filter(_jaccard_at_least(F.col("_i"), union, threshold))
             .select("id_new", "id_old", "jaccard"))

@@ -436,8 +436,7 @@ def thumbnail(df: DataFrame, out_w: int = 32, out_h: int = 32,
             for key, img in zip(pdf[key_col], imgs):
                 if img is None:
                     continue
-                t = rz.resize_bilinear(np.ascontiguousarray(img),
-                                       out_w, out_h)
+                t = rz.resize_bilinear(img, out_w, out_h)
                 thumbs.append(J.encode_jpeg(t, quality=85)
                               if out_format == "jpeg" else t.tobytes())
                 urls.append(key)

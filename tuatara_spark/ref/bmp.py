@@ -109,7 +109,7 @@ def encode_bmp(img: np.ndarray, bpp: int = 24) -> bytes:
     8-bit palette from unique colors)."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     if img.ndim == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
+        img = np.broadcast_to(img[:, :, None], img.shape + (3,))
     h, w = img.shape[:2]
     pal = b""
     if bpp == 24:

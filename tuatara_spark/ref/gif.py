@@ -256,7 +256,7 @@ def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
     for a fixture writer)."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     if img.ndim == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
+        img = np.broadcast_to(img[:, :, None], img.shape + (3,))
     h, w = img.shape[:2]
     colors, inv = np.unique(img.reshape(-1, 3), axis=0, return_inverse=True)
     if len(colors) > 256:

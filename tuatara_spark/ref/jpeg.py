@@ -521,7 +521,7 @@ def _reconstruct(comps, coefs, qt, h, w) -> np.ndarray:
 
     if len(out) == 1:
         g = np.clip(np.rint(out[0]), 0, 255).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
+        return np.broadcast_to(g[:, :, None], g.shape + (3,))
     y, cb, cr = out[0], out[1] - 128.0, out[2] - 128.0
     r = y + 1.402 * cr
     g = y - 0.344136 * cb - 0.714136 * cr

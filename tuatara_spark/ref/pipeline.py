@@ -38,17 +38,22 @@ def detect_pages(images: list[np.ndarray], params: dict):
     component-label order. swapped_image: the channel-swapped page the
     reference crops from (tuatara.cpp:349 mutates in place; 416 crops it).
 
-    Pages are grouped by shape and pushed through the detection forward
-    pass as one stacked tensor per group — strictly more vectorized than
-    the reference's one-image-per-call loop, and bit-identical per page
-    (the conv/pool path has no cross-page reductions).
+    Pages are grouped by (shape, one-plane) and pushed through the
+    detection forward pass as one stacked tensor per group — strictly more
+    vectorized than the reference's one-image-per-call loop, and
+    bit-identical per page (the conv/pool path has no cross-page
+    reductions). A one-plane page (stride-0 channel axis, ``rz.one_plane``:
+    TPBIT and gray decodes) is swapped, resized and stacked as one plane;
+    the forward pass sees a stride-0 broadcast of the ``(N, H, W)`` stack,
+    so ``ink_map_u8`` reads the same plane per channel and the ink math is
+    unchanged. ``swapped_image`` is then a read-only view.
     """
     n = len(images)
     results: list = [None] * n
-    by_shape: dict[tuple, list[int]] = {}
+    groups: dict[tuple, list[int]] = {}
     for i, img in enumerate(images):
-        by_shape.setdefault(img.shape, []).append(i)
-    for shape, idxs in by_shape.items():
+        groups.setdefault((img.shape, rz.one_plane(img)), []).append(i)
+    for (shape, flat), idxs in groups.items():
         swapped = [rz.swap_channels(images[i]) for i in idxs]   # S2 (cpp:349)
         proc = [rz.resize_aspect_ratio(im, CANVAS_SIZE, MAG_RATIO)
                 for im in swapped]
@@ -59,7 +64,11 @@ def detect_pages(images: list[np.ndarray], params: dict):
         # valid_hw masks the zero-pad canvas (black) from the ink map.
         h0, w0 = shape[:2]
         valid = (int(h0 * ratio), int(w0 * ratio))
-        stacked = np.stack([p[0] for p in proc])
+        if flat:
+            planes = np.stack([p[0][..., 0] for p in proc])
+            stacked = np.broadcast_to(planes[..., None], planes.shape + shape[2:])
+        else:
+            stacked = np.stack([p[0] for p in proc])
         maps = md.detect_forward_u8(params, stacked, valid_hw=valid)
         for j, i in enumerate(idxs):
             det, _labels = dt.get_detected_boxes(maps[j, ..., 0], maps[j, ..., 1])
@@ -94,19 +103,26 @@ def crop_regions(swapped_image: np.ndarray, boxes) -> list[np.ndarray]:
 
 
 def crops_to_ink(crops: list[np.ndarray], params: dict) -> np.ndarray:
-    """Fused S19+S2+S4+ink: resize crops (batched per source shape —
-    identical sampling math, vectorized), one ink-map pass.
-    Returns (R, 32, 128) float32 in input order."""
+    """Fused S19+S2+S4+ink: resize crops (batched per source shape and
+    one-plane flag — identical sampling math, vectorized), one ink-map
+    pass. One-plane crops (views of a one-plane page) resize as a stacked
+    ``(N, h, w)`` plane batch; the S2 swap is a no-op on identical
+    channels. Returns (R, 32, 128) float32 in input order."""
     if not crops:
         return np.zeros((0, md.REC_H, md.REC_W), dtype=np.float32)
     resized = np.empty((len(crops), md.REC_H, md.REC_W, 3), dtype=np.uint8)
-    by_shape: dict[tuple, list[int]] = {}
+    groups: dict[tuple, list[int]] = {}
     for i, c in enumerate(crops):
-        by_shape.setdefault(c.shape, []).append(i)
-    for shape, idxs in by_shape.items():
-        stacked = np.stack([crops[i] for i in idxs])
-        out = rz.resize_bilinear_batch(stacked, md.REC_W, md.REC_H)
-        resized[idxs] = out[..., ::-1]  # S2 per-crop swap (cpp:441)
+        groups.setdefault((c.shape, rz.one_plane(c)), []).append(i)
+    for (shape, flat), idxs in groups.items():
+        if flat:
+            planes = np.stack([crops[i][..., 0] for i in idxs])
+            out = rz.resize_bilinear_batch(planes, md.REC_W, md.REC_H)
+            resized[idxs] = out[..., None]
+        else:
+            stacked = np.stack([crops[i] for i in idxs])
+            out = rz.resize_bilinear_batch(stacked, md.REC_W, md.REC_H)
+            resized[idxs] = out[..., ::-1]  # S2 per-crop swap (cpp:441)
     return md.ink_map_u8(resized, params["ink_w"])
 
 

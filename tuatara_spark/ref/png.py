@@ -273,7 +273,7 @@ def decode_png(buf: bytes) -> np.ndarray:
     if color_type in (0, 4) and bit_depth < 8:   # scale gray to 8-bit
         px = px * np.uint8(255 // ((1 << bit_depth) - 1))
     if color_type == 0:                      # gray
-        return np.repeat(px, 3, axis=2)
+        return np.broadcast_to(px, px.shape[:2] + (3,))
     if color_type == 2:                      # RGB
         return px
     if color_type == 3:                      # palette
@@ -281,5 +281,5 @@ def decode_png(buf: bytes) -> np.ndarray:
             raise ValueError("palette PNG missing PLTE")
         return palette[px[..., 0]]
     if color_type == 4:                      # gray + alpha
-        return np.repeat(px[..., :1], 3, axis=2)
+        return np.broadcast_to(px[..., :1], px.shape[:2] + (3,))
     return np.ascontiguousarray(px[..., :3])  # RGBA → RGB

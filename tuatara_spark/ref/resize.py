@@ -9,6 +9,15 @@ OpenCV's 8-bit path uses 11-bit fixed-point coefficients, so individual
 pixels can differ from the float computation by ±1 LSB; the C++ binary
 cannot run in this environment, so the float rule is the pinned semantic and
 the oracle and the Spark engine share this exact code path (SURVEY.md §0.2).
+
+One-plane rule: an (H, W, C) image whose channel axis has stride 0 (a
+``broadcast_to`` view: TPBIT pages and gray pages of every decoder) has
+identical channels by construction, so ``resize_bilinear`` and
+``resize_aspect_ratio`` interpolate and pad channel 0 only and return a
+stride-0 broadcast of that plane — the same bytes as the three-channel
+computation. The test is on strides alone (``one_plane``); pixels are
+never compared. Results may therefore be READ-ONLY views: copy before
+mutating.
 """
 
 from __future__ import annotations
@@ -16,10 +25,24 @@ from __future__ import annotations
 import numpy as np
 
 
+def one_plane(img: np.ndarray) -> bool:
+    """True when ``img`` is (H, W, C>1) with a stride-0 channel axis, i.e.
+    every channel is the same plane by construction."""
+    return img.ndim == 3 and img.shape[2] > 1 and img.strides[2] == 0
+
+
+def _broadcast_plane(plane: np.ndarray, channels: int) -> np.ndarray:
+    return np.broadcast_to(plane[..., None], plane.shape + (channels,))
+
+
 def resize_bilinear(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Bilinear resize of an (H, W) or (H, W, C) uint8 image to
-    (out_h, out_w[, C]), cv::INTER_LINEAR sampling rule."""
+    (out_h, out_w[, C]), cv::INTER_LINEAR sampling rule. A ``one_plane``
+    image is resized on channel 0 and returned as a stride-0 broadcast."""
     img = np.asarray(img)
+    if one_plane(img):
+        return _broadcast_plane(resize_bilinear(img[..., 0], out_w, out_h),
+                                img.shape[2])
     in_h, in_w = img.shape[:2]
     if in_h == out_h and in_w == out_w:
         return img.copy()
@@ -36,9 +59,12 @@ def resize_bilinear(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     if img.ndim == 3:
         fy = fy[..., None]
         fx = fx[..., None]
-    f = img.astype(np.float32)
-    top = f[y0][:, x0] * (1 - fx) + f[y0][:, x1] * fx
-    bot = f[y1][:, x0] * (1 - fx) + f[y1][:, x1] * fx
+    # gather each source row once, in the input dtype; cast to float32
+    # only after the column gather (same float ops, same order)
+    r0, r1 = img[y0], img[y1]
+    f32 = np.float32
+    top = r0[:, x0].astype(f32) * (1 - fx) + r0[:, x1].astype(f32) * fx
+    bot = r1[:, x0].astype(f32) * (1 - fx) + r1[:, x1].astype(f32) * fx
     out = top * (1 - fy) + bot * fy
     if img.dtype == np.uint8:
         return np.clip(np.floor(out + 0.5), 0, 255).astype(np.uint8)
@@ -98,8 +124,14 @@ def resize_aspect_ratio(img: np.ndarray, square_size: int = 1024,
     Returns (resized, ratio, size_heatmap) where ratio is the applied scale
     (caller inverts it, tuatara.cpp:360-361) and size_heatmap =
     (target_w // 2, target_h // 2) — computed but unused by the caller
-    (quirk Q6 territory; kept for stage parity).
+    (quirk Q6 territory; kept for stage parity). A ``one_plane`` page is
+    resized and padded on channel 0; ``resized`` is then a stride-0
+    broadcast (read-only).
     """
+    if one_plane(img):
+        resized, ratio, size_heatmap = resize_aspect_ratio(
+            img[..., 0], square_size, mag_ratio)
+        return _broadcast_plane(resized, img.shape[2]), ratio, size_heatmap
     height, width = img.shape[:2]
     # single-precision ratio math mirroring the reference's C++ `float`
     # (tuatara.cpp:212-216): float64 here could truncate int(h*ratio) one

@@ -232,7 +232,7 @@ def decode_tiff(buf) -> np.ndarray:
         plane = (bits_arr * np.uint8(255))
         if photo == 0:                   # WhiteIsZero: 0 bit = white
             plane = np.uint8(255) - plane
-        return np.repeat(plane[:, :, None], 3, axis=2)
+        return np.broadcast_to(plane[:, :, None], plane.shape + (3,))
     px = rows[:, :w * spp].reshape(h, w, spp)
     if predictor == 2:                   # horizontal differencing
         px = np.cumsum(px.astype(np.uint32), axis=1).astype(np.uint8)
@@ -244,7 +244,7 @@ def decode_tiff(buf) -> np.ndarray:
         g = px[..., 0]
         if photo == 0:
             g = np.uint8(255) - g
-        return np.repeat(g[:, :, None], 3, axis=2)
+        return np.broadcast_to(g[:, :, None], g.shape + (3,))
     return np.ascontiguousarray(px[..., :3])
 
 
