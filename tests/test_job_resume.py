@@ -424,6 +424,35 @@ def test_empty_run_dirs_do_not_brick_reads(spark, warc_dir, tmp_path):
     assert cat.read_latest(spark).count() == 2
 
 
+def test_empty_bucket_manifests_carry_the_job_counters(spark, tmp_path):
+    """A crawl bucket that held no pages gets a manifest with the crawl
+    job's own counters, all 0 — not the OCR job's counter names."""
+    from tuatara_spark.sources import warc as W
+    d = tmp_path / "tiny"
+    d.mkdir()
+    pages = [{"url": f"https://c.org/{i}",
+              "date": "2026-02-01T00:00:00Z", "status": 200,
+              "content_type": "text/html",
+              "body": b"<html><body><p>tiny</p></body></html>"}
+             for i in range(2)]
+    (d / "t.warc.gz").write_bytes(W.encode_warc(pages))
+    root = str(tmp_path / "t")
+    job.run_crawl(spark, str(d), root, num_buckets=8, groups=4)
+    cat = Catalog(root)
+    full = {r.part_id for r in cat.read_table(spark).select("part_id")
+            .distinct().collect()}
+    man = [m for s in cat.snapshots()
+           for m in cat.manifests_for(s["snapshot_id"])]
+    assert sorted(m["bucket"] for m in man) == list(range(8))
+    assert len(full) < 8
+    for m in man:
+        assert set(m["counters"]) == set(job._CRAWL_COUNTERS)
+        if m["bucket"] not in full:
+            assert m["counters"] == dict.fromkeys(job._CRAWL_COUNTERS, 0)
+        else:
+            assert m["counters"]["pages"] >= 1
+
+
 def test_read_buckets_manifest_pruning(spark, warc_dir, tmp_path):
     """Bucket reads prune at TWO levels: snapshots whose bucket list
     misses the predicate are never opened (manifest pruning), and the

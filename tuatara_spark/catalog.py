@@ -173,7 +173,8 @@ class Catalog:
         """A committed run whose buckets held zero rows writes no data
         files (only _SUCCESS) — legitimate (processed-empty buckets are
         still committed for resume), but spark.read.parquet on such a
-        dir throws UNABLE_TO_INFER_SCHEMA; readers must skip it."""
+        dir throws UNABLE_TO_INFER_SCHEMA; readers and the job's counter
+        re-read must skip it."""
         import glob as _glob
         return bool(_glob.glob(os.path.join(d, "**", "*.parquet"),
                                recursive=True))
@@ -230,15 +231,15 @@ class Catalog:
                manifests: dict[int, dict], totals: dict,
                extra: dict | None = None) -> None:
         """Commit a run: per-bucket manifests, then snapshot, then CURRENT
-        (atomic rename). ``manifests[b]`` = counters dict for bucket b."""
+        (atomic rename). ``manifests[b]`` = counters dict for bucket b;
+        the caller names the counters, so a bucket it leaves out gets
+        an empty dict."""
         mdir = os.path.join(self.manifest_dir, str(sid))
         os.makedirs(mdir, exist_ok=True)
         run = f"run_{sid:06d}"
         for b in buckets:
             m = {"snapshot_id": sid, "bucket": int(b), "run": run,
-                 "counters": manifests.get(int(b),
-                                           {"pages": 0, "regions": 0,
-                                            "chars": 0, "failures": 0})}
+                 "counters": manifests.get(int(b), {})}
             with open(os.path.join(mdir, f"part-{int(b):05d}.json"), "w") as f:
                 json.dump(m, f)
         snap = {

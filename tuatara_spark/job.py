@@ -21,8 +21,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import glob
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -59,19 +57,20 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
         buckets = [int(b) for b in chunk]
         gdf = group_df(buckets)
         gdf.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
-        # a group whose buckets held no rows writes no parquet files
-        per_bucket: dict[int, dict] = {}
-        if glob.glob(os.path.join(run_dir, "**", "*.parquet"), recursive=True):
+        # a bucket with no rows is committed too (processed-empty), with
+        # every counter 0; a group with no rows writes no parquet files
+        per_bucket = {b: dict.fromkeys(counters, 0) for b in buckets}
+        if Catalog._has_parquet(run_dir):
             # the schema is the one just written: pinning it skips the
             # footer-inference job a plain read runs
             rows = (spark.read.schema(gdf.schema).parquet(run_dir)
                     .groupBy("part_id")
                     .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
                     .collect())
-            per_bucket = {int(r.part_id): {k: int(r[k] or 0)
-                                           for k in counters} for r in rows}
+            per_bucket.update({int(r.part_id): {k: int(r[k] or 0)
+                                                for k in counters}
+                               for r in rows})
         totals = {k: sum(c[k] for c in per_bucket.values()) for k in counters}
-        # buckets with zero rows still count as committed (processed-empty)
         cat.commit(sid, buckets, per_bucket, totals, extra=extra)
         if fail_after_groups is not None and groups_run >= fail_after_groups:
             raise InjectedFailure(f"injected failure after {groups_run} groups")

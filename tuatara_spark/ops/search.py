@@ -37,7 +37,6 @@ global scalars (N, avgdl) are one tiny aggregate broadcast back via a
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import DataFrame, functions as F
 
 IDF_SCALE = 10 ** 6
@@ -226,9 +225,9 @@ def bpe_encode(df: DataFrame, merges, col: str = "syms",
 
     Scale shape: per-row cost is O(len · k) with k plan-literal rules —
     right for char-level/analysis vocabularies (k ≲ 100). A
-    production 50k-rule tokenizer would overflow a literal plan; that
-    regime is `bpe_encode_arrow` (Arrow-batched, closure-captured rule
-    table), pinned equivalent by pytest.
+    production 50k-rule tokenizer would overflow a literal plan, and no
+    encoder here serves that regime. Queries use `bpe_encode_replace`;
+    this fold is the reference the tests compare it against.
     """
     expr = F.col(col)
     for _, left, right, _ in sorted(merges):
@@ -268,39 +267,6 @@ def bpe_encode_replace(df: DataFrame, merges, col: str = "syms",
                                F.expr("cast(array() as array<string>)"))
                         .otherwise(toks))
             .drop("_s"))
-
-
-def bpe_encode_arrow(df: DataFrame, merges, col: str = "syms",
-                     out_col: str = "tokens") -> DataFrame:
-    """`bpe_encode` for production-sized merge tables: the rules live
-    in the UDF closure (one broadcast per executor, not plan literals)
-    and documents stream through as Arrow batches. Semantics are
-    BIT-IDENTICAL to the Catalyst chain — same rank order, same
-    leftmost-first non-overlapping pass per rule — enforced by
-    tests/test_ops_extra.py equivalence over random corpora. The
-    per-token loop is Python, but it runs on executors over Arrow
-    batches (never per-row serialization) and BPE's sequential
-    left-fold per rule admits no vectorized form."""
-    from pyspark.sql.functions import pandas_udf
-
-    ordered = [(left, right) for _, left, right, _ in sorted(merges)]
-
-    @pandas_udf("array<string>")
-    def _enc(s: pd.Series) -> pd.Series:
-        def one(toks):
-            toks = list(toks)
-            for left, right in ordered:
-                out = []
-                for t in toks:
-                    if out and out[-1] == left and t == right:
-                        out[-1] = left + right
-                    else:
-                        out.append(t)
-                toks = out
-            return toks
-        return s.apply(one)
-
-    return df.withColumn(out_col, _enc(F.col(col)))
 
 
 # ----------------------------------------------------------- WordPiece ----

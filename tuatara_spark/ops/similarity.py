@@ -194,41 +194,6 @@ def cosine_dup_pairs(df: DataFrame, threshold: float = 0.9,
             .select("id_a", "id_b", "cosine"))
 
 
-def cosine_dup_pairs_batched(df: DataFrame, threshold: float = 0.9,
-                             block_col: str = "label",
-                             vec_col: str = "embedding",
-                             id_col: str = "vec_id") -> DataFrame:
-    """Scale-path twin of :func:`cosine_dup_pairs`: the per-pair cosine is
-    one row-wise ``einsum`` over the stacked Arrow batch instead of an
-    interpreted ``zip_with``+``aggregate`` fold per pair. Join shape is
-    identical (blocked self-join, never globally quadratic); only the
-    scoring kernel changes. Values may differ from the Catalyst form in
-    final ulps (BLAS pairwise vs sequential fold), so oracle-checked
-    queries keep the Catalyst form."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in va])
-        b = np.stack([np.asarray(v, dtype=np.float64) for v in vb])
-        dots = np.einsum("ij,ij->i", a, b)
-        return pd.Series(dots / (np.linalg.norm(a, axis=1)
-                                 * np.linalg.norm(b, axis=1)))
-
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(block_col).alias("_blk"),
-                     F.col(vec_col).alias("_v"))
-    left = base.select(F.col("_id").alias("id_a"), "_blk",
-                       F.col("_v").alias("va"))
-    right = base.select(F.col("_id").alias("id_b"), "_blk",
-                        F.col("_v").alias("vb"))
-    return (left.join(right, "_blk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", pair_cos("va", "vb"))
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine"))
-
-
 def ivf_centroids(df: DataFrame, n_centroids: int = 8, n_iters: int = 5,
                   sample: int = 2048, vec_col: str = "embedding",
                   seed: int = 11, id_col: str = "vec_id") -> np.ndarray:

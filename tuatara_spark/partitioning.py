@@ -34,27 +34,26 @@ DEFAULT_SALT_BUCKETS = 16
 _NULL_URL_SENTINEL = "\x00null-url"
 
 
-def _url(url_col: str):
-    return F.coalesce(F.col(url_col), F.lit(_NULL_URL_SENTINEL))
+def _url():
+    return F.coalesce(F.col("url"), F.lit(_NULL_URL_SENTINEL))
 
 
-def with_bucket(df: DataFrame, num_buckets: int = DEFAULT_NUM_BUCKETS,
-                url_col: str = "url") -> DataFrame:
+def with_bucket(df: DataFrame,
+                num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
     """Add the stable url-hash bucket column ``part_id``."""
     return df.withColumn(
-        "part_id", F.pmod(F.xxhash64(_url(url_col)), F.lit(num_buckets))
+        "part_id", F.pmod(F.xxhash64(_url()), F.lit(num_buckets))
         .cast("int"))
 
 
 def with_salt(df: DataFrame, heavy_bytes: int = DEFAULT_HEAVY_BYTES,
-              salt_buckets: int = DEFAULT_SALT_BUCKETS,
-              url_col: str = "url", payload_col: str = "html") -> DataFrame:
+              salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
     """Add ``salt``: 0 for normal rows; a second, independent url hash for
-    heavy rows so they spread across tasks within a bucket."""
-    heavy = F.length(F.col(payload_col)) > F.lit(heavy_bytes)
+    heavy rows (``html`` longer than ``heavy_bytes``) so they spread
+    across tasks within a bucket."""
+    heavy = F.length(F.col("html")) > F.lit(heavy_bytes)
     salt = F.when(
-        heavy,
-        F.pmod(F.xxhash64(_url(url_col), F.lit(1)), F.lit(salt_buckets)))
+        heavy, F.pmod(F.xxhash64(_url(), F.lit(1)), F.lit(salt_buckets)))
     return df.withColumn("salt", salt.otherwise(F.lit(0)).cast("int"))
 
 

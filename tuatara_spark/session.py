@@ -65,8 +65,7 @@ def get_spark(app: str = "tuatara-spark", cores: int | str | None = None,
         # 4.29→3.74 s, hits 3.51→3.29 s, tier 6.83→6.32 s at matched
         # regimes; HOF-interpreted queries unchanged). Scale-neutral:
         # compiled-class cache sizing, not a local[32] tune.
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         # Always use the sort-based shuffle writer, never bypass-merge.
         # Bypass-merge (default for <=200 reduce partitions) opens one
         # spill file + serializer/compression stream PER REDUCE
@@ -79,8 +78,7 @@ def get_spark(app: str = "tuatara-spark", cores: int | str | None = None,
         # production-width shuffles (>200 partitions) already take the
         # sort-writer path, so this pins small shuffles to the same
         # code path the engine uses at scale.
-        .config("spark.shuffle.sort.bypassMergeThreshold",
-                os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "0"))
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
     )
