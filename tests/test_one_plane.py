@@ -177,10 +177,10 @@ def _gray_round_trips():
         "tiff_gray8": (tiff.encode_tiff(g), g, True),
         "tiff_bilevel": (tiff.encode_tiff(b, bilevel=True), b, True),
         "jpeg_gray": (jpeg.encode_jpeg(b, quality=100), b, True),
-        # BMP and GIF encoders widen a gray plane; their decoders expand a
-        # palette, so the decoded page is a full three-channel array
-        "bmp_gray": (bmp.encode_bmp(b, bpp=8), b, False),
-        "gif_gray": (gif.encode_gif(b), b, False),
+        # BMP and GIF encoders write a gray palette; their decoders read
+        # one column of it
+        "bmp_gray": (bmp.encode_bmp(b, bpp=8), b, True),
+        "gif_gray": (gif.encode_gif(b), b, True),
     }
 
 

@@ -152,3 +152,25 @@ def test_multimodal_meta_and_thumbnail(spark, weights):
     thumbs = multimodal.thumbnail(sdf, 16, 16).collect()
     assert len(thumbs) == 4
     assert all(len(t.thumb) == 16 * 16 * 3 for t in thumbs)
+
+
+def test_both_sniffers_read_one_table(spark):
+    """``fixtures.sniff_format`` and the Catalyst ``sniff_format_col`` agree
+    on one payload per ``FORMATS`` row, a RIFF of another form, a buffer
+    shorter than every 4-byte magic, an empty one and junk."""
+    from tuatara_spark import fixtures as fx
+    cases = {}
+    for i, (magic, form, name) in enumerate(fx.FORMATS):
+        body = magic.ljust(8, b"\0") + (form or b"") + b"payload"
+        cases[f"{i}:{name}"] = (body, name)
+    cases["riff_avi"] = (b"RIFF\0\0\0\0AVI LIST", "riff")
+    cases["short"] = (b"TP", "unknown")
+    cases["empty"] = (b"", "unknown")
+    cases["junk"] = (b"\x00junk-not-a-format", "unknown")
+    for key, (buf, name) in cases.items():
+        assert fx.sniff_format(buf) == name, key
+    df = spark.createDataFrame(
+        [(k, buf) for k, (buf, _) in cases.items()], "url string, html binary")
+    got = {r.url: r.f for r in df.select(
+        "url", multimodal.sniff_format_col("html").alias("f")).collect()}
+    assert got == {k: fx.sniff_format(buf) for k, (buf, _) in cases.items()}

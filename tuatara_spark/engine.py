@@ -6,8 +6,8 @@ The reference engine is one C-level function per image
 the hot path (input_hint requirement). Each batch goes through two shared
 steps, the only implementation of each:
 
-* ``fixtures.decode_payloads`` — payload bytes → pages, same-shape TPBIT
-  pages unpacked in one stacked ``unpackbits``;
+* ``fixtures.decode_payloads`` — payload bytes → pages, one
+  ``fixtures.decode_payload`` per row (a bad row becomes an error row);
 * ``ocr_batch`` — the batch kernel: shape-grouped detection as stacked
   tensors, then ALL region crops of the batch through recognition as a
   single matmul (strictly more vectorized than the reference's chunk-of-4

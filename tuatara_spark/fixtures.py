@@ -19,6 +19,8 @@ same float32 constant on every page. See tuatara_spark.font docstring.
 
 from __future__ import annotations
 
+import importlib
+
 import numpy as np
 import pandas as pd
 
@@ -43,6 +45,7 @@ _ALLOWED_UNIQUE = sorted(set(ALLOWED_CHARS))
 
 TPAGE_MAGIC = b"TPG1"
 TPBIT_MAGIC = b"TPB1"
+TPGV_MAGIC = b"TPV1"
 
 EPOCH = np.datetime64("2026-01-01T00:00:00", "us")
 
@@ -149,85 +152,92 @@ def decode_tpbit(buf: bytes) -> np.ndarray:
     return np.broadcast_to(plane[:, :, None], (h, w, 3))
 
 
+# Every payload format the engine recognizes, as (magic prefix, RIFF form
+# type at bytes 8:12 or None, name); the first matching row wins. The
+# Python sniffer and the Catalyst one (ops/multimodal.sniff_format_col)
+# both read this table.
+FORMATS = [
+    (TPAGE_MAGIC, None, "tpage"),
+    (TPBIT_MAGIC, None, "tpbit"),
+    (TPGV_MAGIC, None, "tpgv"),
+    (b"\x89PNG", None, "png"),
+    (b"\xff\xd8\xff", None, "jpeg"),
+    (b"RIFF", b"WAVE", "wav"),
+    (b"RIFF", b"WEBP", "webp"),
+    (b"RIFF", None, "riff"),
+    (b"GIF8", None, "gif"),
+    (b"BM", None, "bmp"),
+    (b"II*\x00", None, "tiff"),
+    (b"MM\x00*", None, "tiff"),
+    (b"%PDF-", None, "pdf"),
+    (b"ID3", None, "mp3"),
+    (b"fLaC", None, "flac"),
+    (b"OggS", None, "ogg"),
+    (b"<html", None, "html"),
+    (b"<!DOC", None, "html"),
+]
+
+
+def sniff_format(buf) -> str:
+    """Format name of a payload from ``FORMATS``, or ``"unknown"``."""
+    head = bytes(buf[:12])
+    for magic, form, name in FORMATS:
+        if head.startswith(magic) and (form is None or head[8:12] == form):
+            return name
+    return "unknown"
+
+
+def _ref_decoder(name: str):
+    """``ref/<name>.py``'s ``decode_<name>``, imported on first use."""
+    def decode(buf) -> np.ndarray:
+        codec = importlib.import_module(f"tuatara_spark.ref.{name}")
+        return getattr(codec, f"decode_{name}")(buf)
+    return decode
+
+
+def _decode_webp(buf) -> np.ndarray:
+    from tuatara_spark.ref.webp import decode_webp
+    img = decode_webp(bytes(buf))
+    return img[..., :3] if img.shape[2] == 4 else img
+
+
+# image format name → decoder to (H, W, 3) uint8 RGB
+DECODERS = {"tpage": decode_tpage, "tpbit": decode_tpbit,
+            **{n: _ref_decoder(n) for n in ("png", "jpeg", "gif", "bmp",
+                                            "tiff")},
+            "webp": _decode_webp}
+
+
 def decode_payload(buf: bytes) -> np.ndarray:
-    """Decode any supported page payload to an (H, W, 3) uint8 RGB array,
-    dispatching on the magic (TPAGE/TPBIT rasters, real PNG — the
-    reference's own fixture format, examples/resume.cpp:9 — real JPEG
-    baseline/progressive, or real GIF). The returned array may be a READ-ONLY view (TPAGE: frombuffer;
-    TPBIT and gray PNG/JPEG/TIFF: stride-0 channel broadcast, which the
-    OCR front end resizes and detects on one plane) — copy before
-    mutating."""
-    magic = bytes(buf[:4])
-    if magic == TPAGE_MAGIC:
-        return decode_tpage(buf)
-    if magic == TPBIT_MAGIC:
-        return decode_tpbit(buf)
-    if magic == b"\x89PNG":
-        from tuatara_spark.ref.png import decode_png
-        return decode_png(buf)
-    if magic[:3] == b"\xff\xd8\xff":
-        from tuatara_spark.ref.jpeg import decode_jpeg
-        return decode_jpeg(buf)
-    if magic == b"GIF8":
-        from tuatara_spark.ref.gif import decode_gif
-        return decode_gif(buf)
-    if magic == b"RIFF" and bytes(buf[8:12]) == b"WEBP":
-        from tuatara_spark.ref.webp import decode_webp
-        img = decode_webp(bytes(buf))
-        return img[..., :3] if img.shape[2] == 4 else img
-    if magic[:2] == b"BM":
-        from tuatara_spark.ref.bmp import decode_bmp
-        return decode_bmp(buf)
-    if magic in (b"II*\x00", b"MM\x00*"):
-        from tuatara_spark.ref.tiff import decode_tiff
-        return decode_tiff(buf)
-    raise ValueError(f"unknown page payload magic {magic!r}")
+    """Decode any image payload in ``DECODERS`` to an (H, W, 3) uint8 RGB
+    array: TPAGE/TPBIT rasters, real PNG (the reference's own fixture
+    format, examples/resume.cpp:9), JPEG baseline/progressive, GIF, BMP,
+    TIFF and lossless WebP (alpha dropped). The returned array may be a
+    READ-ONLY view (TPAGE: frombuffer; TPBIT and gray pages of every real
+    format: stride-0 channel broadcast, which the OCR front end resizes
+    and detects on one plane) — copy before mutating."""
+    decode = DECODERS.get(sniff_format(buf))
+    if decode is None:
+        raise ValueError(
+            f"unknown page payload magic {bytes(buf[:4])!r}")
+    return decode(buf)
 
 
 def decode_payloads(bufs) -> tuple[list, list]:
     """Decode a batch of payloads (bytes-like, or None for a null row) →
     (images, errors), two lists in input order. A row either has an image
-    (as ``decode_payload`` returns it) or a ``"decode: …"`` error string.
-
-    Same-shape TPBIT payloads unpack in ONE stacked ``unpackbits`` per
-    shape group instead of one call per page; other formats decode per
-    row (their entropy coding is sequential per file). If a stacked group
-    throws, its rows fall back to ``decode_payload`` one by one, so a
-    poison page becomes an error row, never a failed task."""
-    n = len(bufs)
-    images: list = [None] * n
-    errors: list = [None] * n
-    tpbit: dict[tuple[int, int], list[tuple[int, memoryview]]] = {}
+    (as ``decode_payload`` returns it) or a ``"decode: …"`` error string,
+    so a poison page becomes an error row, never a failed task."""
+    images: list = [None] * len(bufs)
+    errors: list = [None] * len(bufs)
     for i, b in enumerate(bufs):
         if b is None:
             errors[i] = "decode: null payload"
             continue
-        mv = memoryview(b)
         try:
-            if bytes(mv[:4]) == TPBIT_MAGIC and len(mv) >= 8:
-                h = int.from_bytes(mv[4:6], "little")
-                w = int.from_bytes(mv[6:8], "little")
-                if len(mv) >= 8 + (h * w + 7) // 8:
-                    tpbit.setdefault((h, w), []).append((i, mv))
-                    continue
-            images[i] = decode_payload(mv)
+            images[i] = decode_payload(memoryview(b))
         except Exception as e:
             errors[i] = f"decode: {e}"
-    for (h, w), grp in tpbit.items():
-        try:
-            nb = (h * w + 7) // 8
-            packed = np.stack([np.frombuffer(m, np.uint8, count=nb, offset=8)
-                               for _, m in grp])
-            planes = ((np.unpackbits(packed, axis=1, count=h * w) ^ 1)
-                      * np.uint8(255)).reshape(len(grp), h, w)
-            for j, (i, _) in enumerate(grp):
-                images[i] = np.broadcast_to(planes[j][:, :, None], (h, w, 3))
-        except Exception:
-            for i, m in grp:
-                try:
-                    images[i] = decode_payload(m)
-                except Exception as e:
-                    errors[i] = f"decode: {e}"
     return images, errors
 
 

@@ -116,19 +116,6 @@ def keep_first(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------------------- shingles ----
 
-def shingle_expr(text_col: str, k: int = 5):
-    """Array of lowercase character k-grams — pure Catalyst.
-
-    NOTE: the ``transform`` lambda is evaluated INTERPRETED per element by
-    Catalyst; hot paths use ``shingle_tokens`` (compiled explode) instead.
-    Kept for small per-row uses and as the semantic reference."""
-    lc = f"lower({text_col})"
-    return F.expr(
-        f"CASE WHEN length({lc}) < {k} THEN array(lower({text_col})) "
-        f"ELSE array_distinct(transform(sequence(1, length({lc}) - {k} + 1), "
-        f"i -> substring({lc}, i, {k}))) END")
-
-
 def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
                    compute_partitions: int | None = None) -> DataFrame:
     """(_id, _s) k-gram token stream (with in-doc duplicates), fully
@@ -136,8 +123,8 @@ def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
     interpreted HOF lambda in sight (whole-stage codegen keeps the
     explode+substring in one stage; only (_id, _s) ever shuffles).
 
-    ``greatest(.., 1)`` reproduces shingle_expr's short-text rule: for
-    length < k the single token IS the whole (lowercased) text.
+    ``greatest(.., 1)`` is the short-text rule: for length < k the single
+    token IS the whole (lowercased) text.
 
     The widening repartition is keyed BY the doc id: hashpartitioning
     on ``_id`` satisfies ClusteredDistribution for every downstream
@@ -545,8 +532,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
 def segment_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", seg_tokens: int = 8,
-                  min_count: int = 2,
-                  broadcast_drop: bool = True) -> DataFrame:
+                  min_count: int = 2) -> DataFrame:
     """C4-style repeated-segment removal (Raffel et al. 2020 §2.2 drop any
     three-sentence span occurring more than once in the corpus; CCNet's
     line-level analogue): split each document into non-overlapping
@@ -563,10 +549,9 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
     segment-count groupBy (map-side partial aggregation — one row per
     DISTINCT segment crosses the wire) and the per-document rebuild.
     Scale: the drop list holds only segments with count ≥ min_count —
-    boilerplate is a small fraction of distinct segments, so it
-    broadcasts (C4 reports ~0.02% of spans dropped); set
-    ``broadcast_drop=False`` to fall back to a shuffle anti-join when a
-    pathological corpus makes it large. The left_anti + groupBy rebuild
+    boilerplate is a small fraction of distinct segments, so it always
+    broadcasts (C4 reports ~0.02% of spans dropped). The left_anti +
+    groupBy rebuild
     reuses the explode's (id, seg_idx) partitioning."""
     k = int(seg_tokens)
     toks = F.split(F.col(text_col), " ")
@@ -590,9 +575,7 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
                 .alias("seg")))
     drop = (exploded.groupBy("seg").agg(F.count("*").alias("cnt"))
             .where(F.col("cnt") >= min_count).select("seg"))
-    if broadcast_drop:
-        drop = F.broadcast(drop)
-    kept = exploded.join(drop, "seg", "left_anti")
+    kept = exploded.join(F.broadcast(drop), "seg", "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.count("*").alias("n_kept"),
         F.array_join(

@@ -45,8 +45,7 @@ ENTITIES = (("&nbsp;", " "), ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
 
 
 def strip_boilerplate(df: DataFrame, col: str = "html",
-                      out_col: str = "main_text",
-                      decode_entities: bool = True) -> DataFrame:
+                      out_col: str = "main_text") -> DataFrame:
     """Boilerplate strip: drop script/style/nav/header/footer/aside blocks
     and comments, strip remaining tags, decode the common named character
     references, collapse whitespace. Pure Catalyst; one projection, no
@@ -58,9 +57,8 @@ def strip_boilerplate(df: DataFrame, col: str = "html",
         c = F.regexp_replace(c, _block_re(tag), " ")
     c = F.regexp_replace(c, COMMENT_RE, " ")
     c = F.regexp_replace(c, TAG_RE, " ")
-    if decode_entities:
-        for ent, rep in ENTITIES:
-            c = F.replace(c, F.lit(ent), F.lit(rep))
+    for ent, rep in ENTITIES:
+        c = F.replace(c, F.lit(ent), F.lit(rep))
     c = F.trim(F.regexp_replace(c, WS_RE, " "))
     return df.withColumn(out_col, c)
 

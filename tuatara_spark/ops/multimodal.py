@@ -1,11 +1,11 @@
 """Multimodal-column operators: opaque binary payloads + typed metadata.
 
-Images/audio/video ride as ``binary`` columns with format sniffing; decode /
-feature-extract / resize / frame-sample / scene-cut run as
-Arrow-vectorized ``mapInPandas`` stages. TPAGE/TPBIT rasters, PNG
-(ref/png.py, full spec matrix), JPEG (ref/jpeg.py, baseline +
-progressive), GIF (ref/gif.py, LZW) and WAV audio (ops/audio.py) all
-decode for real; only COMPRESSED audio (mp3/aac) and real video codecs
+Images/audio/video ride as ``binary`` columns; their formats are sniffed
+from the one table ``fixtures.FORMATS`` and images decode through
+``fixtures.decode_payload``. Decode / feature-extract / resize /
+frame-sample / scene-cut run as Arrow-vectorized ``mapInPandas`` stages.
+TPAGE/TPBIT rasters, PNG, JPEG, GIF, BMP, TIFF, lossless WebP (ref/*.py)
+and WAV audio (ops/audio.py) all decode for real; only COMPRESSED audio (mp3/aac) and real video codecs
 remain explicit deterministic stubs (NotImplementedError) — no codec
 library exists in this container — while the Spark-side plumbing
 (schema, batching, partitioning) is real and tested.
@@ -24,42 +24,22 @@ from pyspark.sql.types import (BinaryType, BooleanType, FloatType,
 
 from tuatara_spark import fixtures as fx
 
-_MAGICS = [
-    (b"TPG1", "tpage"),
-    (b"TPB1", "tpbit"),
-    (b"TPV1", "tpgv"),
-    (b"\x89PNG", "png"),
-    (b"\xff\xd8\xff", "jpeg"),
-    (b"RIFF", "riff"),
-    (b"GIF8", "gif"),
-    (b"BM", "bmp"),
-    (b"II*\x00", "tiff"),
-    (b"MM\x00*", "tiff"),
-    (b"%PDF-", "pdf"),
-    (b"ID3", "mp3"),
-    (b"fLaC", "flac"),
-    (b"OggS", "ogg"),
-    (b"<html", "html"),
-    (b"<!DOC", "html"),
-]
-
-
 def sniff_format_col(col: str = "html") -> "F.Column":
-    """Format from magic bytes — native Catalyst, no UDF. RIFF payloads
-    are disambiguated by their form type at offset 9 (WAVE → wav,
-    WEBP → webp, anything else stays riff)."""
+    """Format from magic bytes (``fixtures.FORMATS``, first match wins) —
+    native Catalyst, no UDF. A RIFF row also matches its form type at
+    offset 9 (WAVE → wav, WEBP → webp, anything else stays riff)."""
     c = F.col(col)
+
+    def starts(magic: bytes, pos: int = 1) -> "F.Column":
+        return (F.hex(F.substring(c, pos, len(magic)))
+                == F.lit(magic.hex().upper()))
+
     expr = F.lit("unknown")
-    for magic, name in reversed(_MAGICS):
-        hexmagic = magic.hex()
-        expr = F.when(F.hex(F.substring(c, 1, len(magic)))
-                      == F.lit(hexmagic.upper()), F.lit(name)).otherwise(expr)
-    is_riff = F.hex(F.substring(c, 1, 4)) == F.lit(b"RIFF".hex().upper())
-    form = F.hex(F.substring(c, 9, 4))
-    expr = F.when(is_riff & (form == F.lit(b"WAVE".hex().upper())),
-                  F.lit("wav")).otherwise(
-           F.when(is_riff & (form == F.lit(b"WEBP".hex().upper())),
-                  F.lit("webp")).otherwise(expr))
+    for magic, form, name in reversed(fx.FORMATS):
+        cond = starts(magic)
+        if form is not None:
+            cond = cond & starts(form, 9)
+        expr = F.when(cond, F.lit(name)).otherwise(expr)
     return expr
 
 
@@ -129,59 +109,23 @@ def _webp_lossy_dims(buf: bytes) -> tuple[str, int, int] | None:
 
 
 def _decode_meta(buf: bytes) -> tuple[str, int | None, int | None, float | None]:
-    if buf[:4] == fx.TPAGE_MAGIC:
-        img = fx.decode_tpage(buf)
-        return ("tpage", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:4] == fx.TPBIT_MAGIC:
-        img = fx.decode_tpbit(buf)
-        return ("tpbit", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:4] == b"\x89PNG":
-        from tuatara_spark.ref.png import decode_png
-        img = decode_png(buf)   # real decode: pure-NumPy PNG (ref/png.py)
-        return ("png", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:3] == b"\xff\xd8\xff":
-        from tuatara_spark.ref.jpeg import decode_jpeg
-        img = decode_jpeg(buf)  # real decode: baseline + progressive
-        return ("jpeg", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:4] == b"GIF8":
-        from tuatara_spark.ref.gif import decode_gif
-        img = decode_gif(buf)   # real decode: pure-Python LZW (ref/gif.py)
-        return ("gif", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:2] == b"BM":
-        from tuatara_spark.ref.bmp import decode_bmp
-        img = decode_bmp(buf)   # real decode: pure-NumPy BMP (ref/bmp.py)
-        return ("bmp", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:4] in (b"II*\x00", b"MM\x00*"):
-        from tuatara_spark.ref.tiff import decode_tiff
-        img = decode_tiff(buf)  # real decode: pure-NumPy TIFF (ref/tiff.py)
-        return ("tiff", img.shape[1], img.shape[0],
-                float(img.mean(dtype=np.float64)))
-    if buf[:4] == b"RIFF" and buf[8:12] == b"WEBP":
+    fmt = fx.sniff_format(buf)
+    if fmt == "webp":
         lossy = _webp_lossy_dims(buf)
         if lossy is not None:
             # lossy VP8 / extended VP8X: dimensions from the public
             # headers (RFC 6386 §9.1 / RFC 9649 §2.5) — the dominant
             # wild-WebP case. Pixel decode stays out of clean-room
             # scope, so mean_luma is None (metadata row, not a stub).
-            fmt, w, h = lossy
-            return (fmt, w, h, None)
-        from tuatara_spark.ref.webp import decode_webp
-        img = decode_webp(buf)
-        return ("webp", img.shape[1], img.shape[0],
-                float(img[..., :3].mean(dtype=np.float64)))
-    for magic, name in ((b"RIFF", "riff (use ops.audio.extract_audio_meta)"),
-                        (b"TPV1", "tpgv (use frame_sample/scene_changes)"),
-                        (b"%PDF-", "pdf (use extract_pdf_text_col)")):
-        if buf[:len(magic)] == magic:
-            raise NotImplementedError(
-                f"{name}: not an image payload for this operator")
-    return ("unknown", None, None, None)
+            return lossy + (None,)
+    if fmt in ("wav", "riff", "tpgv", "pdf"):
+        # audio, video and PDF have their own operators: a stub row here
+        raise NotImplementedError(f"{fmt}: not an image payload")
+    if fmt not in fx.DECODERS:
+        return ("unknown", None, None, None)
+    img = fx.decode_payload(buf)
+    return (fmt, img.shape[1], img.shape[0],
+            float(img.mean(dtype=np.float64)))
 
 
 def extract_media_meta(df: DataFrame, col: str = "html",
@@ -215,17 +159,27 @@ def extract_media_meta(df: DataFrame, col: str = "html",
     return df.select(key_col, col).mapInPandas(fn, META_SCHEMA)
 
 
-TPGV_MAGIC = b"TPV1"
-
-
 def encode_tpgv(frames: list) -> bytes:
     """Synthetic video container: b'TPV1' + uint16 n_frames + concatenated
     TPAGE frames (deterministic; plays the role of an mp4 in this codec-free
     container — real video decode would be a stubbed branch like PNG)."""
-    from tuatara_spark import fixtures as fx_
-    out = [TPGV_MAGIC, len(frames).to_bytes(2, "little")]
-    out += [fx_.encode_tpage(f) for f in frames]
+    out = [fx.TPGV_MAGIC, len(frames).to_bytes(2, "little")]
+    out += [fx.encode_tpage(f) for f in frames]
     return b"".join(out)
+
+
+def _tpgv_frames(buf: bytes) -> Iterator[bytes]:
+    """The TPAGE frame payloads of a TPGV container, in order; nothing for
+    any other payload."""
+    if buf[:4] != fx.TPGV_MAGIC:
+        return
+    off = 6
+    for _ in range(int.from_bytes(buf[4:6], "little")):
+        h = int.from_bytes(buf[off + 4:off + 6], "little")
+        w = int.from_bytes(buf[off + 6:off + 8], "little")
+        end = off + 8 + h * w * 3
+        yield buf[off:end]
+        off = end
 
 
 FRAME_SCHEMA = StructType([
@@ -246,23 +200,13 @@ def frame_sample(df: DataFrame, every_k: int = 2, col: str = "html",
         for pdf in batches:
             urls, idxs, frames, lumas = [], [], [], []
             for key, buf in zip(pdf[key_col], pdf[col]):
-                buf = bytes(buf)
-                if buf[:4] != TPGV_MAGIC:
-                    continue
-                n = int.from_bytes(buf[4:6], "little")
-                off = 6
-                for i in range(n):
-                    h = int.from_bytes(buf[off + 4:off + 6], "little")
-                    w = int.from_bytes(buf[off + 6:off + 8], "little")
-                    end = off + 8 + h * w * 3
+                for i, payload in enumerate(_tpgv_frames(bytes(buf))):
                     if i % every_k == 0:
-                        payload = buf[off:end]
                         img = fx.decode_tpage(payload)
                         urls.append(key)
                         idxs.append(i)
                         frames.append(payload)
                         lumas.append(float(img.mean(dtype=np.float64)))
-                    off = end
             yield pd.DataFrame({"url": urls, "frame_idx": idxs,
                                 "frame": frames, "mean_luma": lumas})
 
@@ -292,27 +236,18 @@ def scene_changes(df: DataFrame, thr_e2: int = 2000, col: str = "html",
         for pdf in batches:
             urls, idxs, sads, means, cuts = [], [], [], [], []
             for key, buf in zip(pdf[key_col], pdf[col]):
-                buf = bytes(buf)
-                if buf[:4] != TPGV_MAGIC:
-                    continue
-                n = int.from_bytes(buf[4:6], "little")
-                off = 6
                 prev = None
-                for i in range(n):
-                    h = int.from_bytes(buf[off + 4:off + 6], "little")
-                    w = int.from_bytes(buf[off + 6:off + 8], "little")
-                    end = off + 8 + h * w * 3
-                    img = fx.decode_tpage(buf[off:end]).astype(np.int64)
+                for i, payload in enumerate(_tpgv_frames(bytes(buf))):
+                    img = fx.decode_tpage(payload).astype(np.int64)
                     if prev is not None:
                         sad = int(np.abs(img - prev).sum())
-                        npx = h * w * 3
+                        npx = img.size
                         urls.append(key)
                         idxs.append(i)
                         sads.append(sad)
                         means.append(sad * 10_000 // npx)
                         cuts.append(sad * 100 >= thr_e2 * npx)
                     prev = img
-                    off = end
             yield pd.DataFrame({"url": urls, "frame_idx": idxs,
                                 "sad": sads, "mean_diff_e4": means,
                                 "is_cut": cuts})
@@ -338,7 +273,7 @@ def image_features(df: DataFrame, col: str = "html",
     ratio, the ink bounding box, and the densest row/column (profile
     argmax) — the cheap layout features a page-classification or
     quality-filter stage consumes. Works on any decodable payload
-    (TPAGE / TPBIT / PNG via ``fixtures.decode_payloads``); undecodable
+    (every image format of ``fixtures.decode_payloads``); undecodable
     rows are skipped (one error row per format is the meta op's job)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -417,9 +352,9 @@ RESIZED_SCHEMA = StructType([
 def thumbnail(df: DataFrame, out_w: int = 32, out_h: int = 32,
               col: str = "html", key_col: str = "url",
               out_format: str = "raw") -> DataFrame:
-    """Decode ANY supported payload (TPAGE/TPBIT/PNG/JPEG via
-    ``fixtures.decode_payloads``) + bilinear resize to a thumbnail — same
-    resize kernel as the extraction pipeline. ``out_format``: 'raw'
+    """Decode ANY supported image payload (``fixtures.decode_payloads``)
+    + bilinear resize to a thumbnail — same resize kernel as the
+    extraction pipeline. ``out_format``: 'raw'
     (H·W·3 bytes) or 'jpeg' (baseline q85 via ref/jpeg.py — the realistic
     wire format for a thumbnail column at 100 TB: ~30× smaller).
     Undecodable payloads are skipped (per-format error rows are the meta
@@ -456,13 +391,12 @@ def phash64(df: DataFrame, col: str = "html",
     standard error-row-free projection for derived signatures). Returns
     (key, phash:long).
 
-    Batched end-to-end: decode via ``fixtures.decode_payloads`` (stacked
-    TPBIT unpackbits per shape group), then the aHash vectorized per shape
-    group. Block means are EXACT integer sums over the uint8 stack
-    (one ``np.sum(dtype=int64)`` pass) divided once in float64 — a
-    channel-averaged float64 image per row would cost 24 bytes/pixel of
-    transient memory per image and was measured to saturate memory
-    bandwidth with 32 concurrent workers; the integer-sum form touches
+    Batched end-to-end: decode via ``fixtures.decode_payloads``, then the
+    aHash vectorized per shape group. Block means are EXACT integer sums
+    over the uint8 stack (one ``np.sum(dtype=int64)`` pass) divided once
+    in float64 — a channel-averaged float64 image per row would cost 24
+    bytes/pixel of transient memory per image and was measured to saturate
+    memory bandwidth with 32 concurrent workers; the integer-sum form touches
     the uint8 bytes once and allocates only the (k,8,8) block table.
     Identical pixels ⇒ identical integer sums ⇒ identical hash (the
     property the dedup gate pins); the final 8 bytes per image are

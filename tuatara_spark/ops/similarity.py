@@ -9,7 +9,9 @@ Scale notes (100 TB): brute force is a full scan per query — fine for
 offline joins, wrong for online probes; the LSH variant turns a probe into
 a bucket-pruned scan (the bucket column is a cheap persisted/partition
 column). For batched query sets, broadcast the (small) query table and let
-the bucket equi-join prune.
+the bucket equi-join prune. ``cosine_topk_batched`` is NOT a scale path:
+BENCH/crossover.json measures it at 0.27–0.45× ``cosine_topk`` at every
+size; it stays only as a frozen bench.py line.
 """
 
 from __future__ import annotations
@@ -54,23 +56,20 @@ def cosine_topk(df: DataFrame, query_vec, k: int = 10,
 def cosine_topk_batched(df: DataFrame, query_vec, k: int = 10,
                         vec_col: str = "embedding",
                         id_col: str = "vec_id") -> DataFrame:
-    """Scale-path brute-force cosine top-k: one NumPy matmul per Arrow
-    batch via pandas_udf, instead of Catalyst ``zip_with``/``aggregate``
-    lambdas (which Catalyst evaluates INTERPRETED per element — measured
-    ~250× per-element overhead on this engine; see ops/dedup.simhash64).
+    """Brute-force cosine top-k as one NumPy matmul per Arrow batch via
+    pandas_udf, instead of Catalyst ``zip_with``/``aggregate`` lambdas.
 
     Semantics match ``cosine_topk``; values may differ in final ulps
     because BLAS accumulates pairwise while the Catalyst fold is
-    sequential — so oracle-checked queries keep the Catalyst form, and the
-    100 TB hot path uses this one.
+    sequential.
 
-    Measured crossover (BENCH/crossover.json, 32 cores, dim=64): for this
-    SINGLE-query dot the Catalyst HOF is still ahead at 256k rows (one
-    interpreted dot/row is cheaper than exporting the vector column over
-    Arrow); the batched time stays flat while the HOF grows ~linearly, so
-    the win arrives around ~1M rows/core-batch — and immediately for
-    multi-dot scorers (with_ivf_cell_batched: 4.1×, with_lsh_bucket_batched:
-    1.6× at 256k rows).
+    Not the scale path: BENCH/crossover.json (32 cores, dim=64) measures
+    it at 0.27–0.45× the Catalyst form at every size from 2k to 256k rows
+    (exporting the vector column over Arrow costs more than one
+    interpreted dot per row). It stays only as a frozen bench.py line;
+    use ``cosine_topk``. The multi-dot scorers are where batching pays
+    (with_ivf_cell_batched: 4.1×, with_lsh_bucket_batched: 1.6× at 256k
+    rows).
     """
     from pyspark.sql.functions import pandas_udf
 

@@ -6,7 +6,9 @@ top-down rows, 4-byte row padding, BI_RGB and BI_RLE8 compression.
 encode: fixture-grade 24-bit BI_RGB (and 8-bit palette) writer so every
 decode path round-trips without an image library.
 
-Output is (H, W, 3) uint8 RGB like the other ref codecs.
+Output is (H, W, 3) uint8 RGB like the other ref codecs; a paletted image
+whose palette is all gray comes back as a read-only stride-0 broadcast of
+one plane.
 """
 
 from __future__ import annotations
@@ -42,6 +44,11 @@ def decode_bmp(buf) -> np.ndarray:
         pal = np.frombuffer(data[pal_off:pal_off + 4 * n_colors],
                             np.uint8).reshape(-1, 4)
         palette = pal[:, [2, 1, 0]].copy()   # BGRX → RGB
+    # a gray palette (three equal columns) decodes one plane, returned as
+    # a stride-0 channel broadcast like the other ref codecs' gray pages
+    gray = palette is not None and bool((palette == palette[:, :1]).all())
+    if gray:
+        palette = palette[:, :1]
     if comp == 1:
         if bpp != 8:
             raise ValueError("BMP: RLE8 requires 8-bit")
@@ -70,7 +77,8 @@ def decode_bmp(buf) -> np.ndarray:
             px = palette[np.minimum(idx, len(palette) - 1)]
     if not top_down:
         px = px[::-1]
-    return np.ascontiguousarray(px)
+    px = np.ascontiguousarray(px)
+    return np.broadcast_to(px, (h, w, 3)) if gray else px
 
 
 def _rle8_decode(data, w: int, h: int) -> np.ndarray:

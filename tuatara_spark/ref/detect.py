@@ -30,26 +30,24 @@ def minmax_normalize(m: np.ndarray) -> np.ndarray:
     return np.zeros_like(m)
 
 
-def get_detected_boxes(textmap: np.ndarray, linkmap: np.ndarray,
-                       text_threshold: float = TEXT_THRESHOLD,
-                       link_threshold: float = LINK_THRESHOLD,
-                       low_text: float = LOW_TEXT,
-                       debug_discarded_stages: bool = False):
+def get_detected_boxes(textmap: np.ndarray, linkmap: np.ndarray):
     """Returns (det, labels): det = list of (4,2) float32 corner arrays in
     component-label order (quirk Q5 — raster order of first pixel), labels =
-    the CCL label image. Mirrors tuatara.cpp:119-204.
+    the CCL label image. Mirrors tuatara.cpp:119-204 at the reference's
+    fixed thresholds (TEXT_THRESHOLD, LINK_THRESHOLD, LOW_TEXT).
 
-    ``debug_discarded_stages`` additionally runs the square-override and
-    corner-canonicalization stages (S15/S16) whose results the reference
-    computes and then discards (tuatara.cpp:183-200) — output-neutral.
+    The square-override and corner-canonicalization stages (S15/S16), whose
+    results the reference computes and then discards (tuatara.cpp:183-200),
+    are not run; ``geometry.square_override`` and
+    ``geometry.canonicalize_corners`` keep their own tests.
     """
     tn = minmax_normalize(textmap)
     ln = minmax_normalize(linkmap)
     img_h, img_w = tn.shape
 
     # cv::threshold THRESH_BINARY uses strict > (tuatara.cpp:131-132)
-    text_score = tn > np.float32(low_text)
-    link_score = ln > np.float32(link_threshold)
+    text_score = tn > np.float32(LOW_TEXT)
+    link_score = ln > np.float32(LINK_THRESHOLD)
     # combine + clip (tuatara.cpp:136-137)
     comb = (text_score | link_score).astype(np.uint8)
 
@@ -67,7 +65,7 @@ def get_detected_boxes(textmap: np.ndarray, linkmap: np.ndarray,
         size = int(stats[k, 4])
         if size < 10:           # tuatara.cpp:146-148
             continue
-        if comp_max[k] < np.float32(text_threshold):  # tuatara.cpp:150-154
+        if comp_max[k] < np.float32(TEXT_THRESHOLD):  # tuatara.cpp:150-154
             continue
         x, y, w, h = (int(stats[k, 0]), int(stats[k, 1]),
                       int(stats[k, 2]), int(stats[k, 3]))
@@ -93,8 +91,5 @@ def get_detected_boxes(textmap: np.ndarray, linkmap: np.ndarray,
             np.stack([first + sx, ys + sy], axis=1),
             np.stack([last + sx, ys + sy], axis=1),
         ])
-        corners = g.min_area_rect(pts)
-        if debug_discarded_stages:
-            _ = g.canonicalize_corners(g.square_override(corners, pts))
-        det.append(corners)
+        det.append(g.min_area_rect(pts))
     return det, labels

@@ -157,11 +157,17 @@ def _deinterlace(idx: np.ndarray) -> np.ndarray:
     return out
 
 
+def _is_gray(table: np.ndarray) -> bool:
+    return bool((table == table[:, :1]).all())
+
+
 def decode_gif_frames(buf) -> list[np.ndarray]:
     """All frames of a GIF as (H, W, 3) uint8 RGB arrays composited on
     the logical screen (each frame starts from the previous composite —
     disposal 'do not dispose', the dominant web case; transparent pixels
-    leave the underlying composite visible)."""
+    leave the underlying composite visible). While every color table seen
+    so far is gray, a frame is a read-only stride-0 broadcast of one
+    plane."""
     data = memoryview(buf).cast("B")
     if bytes(data[:6]) not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
@@ -176,6 +182,7 @@ def decode_gif_frames(buf) -> list[np.ndarray]:
                                  (sh, sw, 3)).copy()
     else:
         screen = np.zeros((sh, sw, 3), dtype=np.uint8)
+    gray = gct is None or _is_gray(gct)
     frames: list[np.ndarray] = []
     transparent = None
     while pos < len(data):
@@ -237,7 +244,9 @@ def decode_gif_frames(buf) -> list[np.ndarray]:
             region[:] = np.where(mask, rgb, region)
         else:
             region[:] = rgb
-        frames.append(screen.copy())
+        gray = gray and _is_gray(table)
+        frames.append(np.broadcast_to(screen[..., :1].copy(), screen.shape)
+                      if gray else screen.copy())
         transparent = None
     if not frames:
         raise ValueError("gif: no image data")

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tuatara_spark import engine
 from tuatara_spark import weights as wt
-from tuatara_spark.fixtures import TPAGE_MAGIC  # noqa: F401 (doc pointer)
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
