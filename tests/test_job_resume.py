@@ -370,6 +370,40 @@ def test_crawl_refresh_upsert_and_read_latest(spark, warc_dir, tmp_path):
     assert "crawl page 0" in old["https://c.org/0"]
 
 
+def test_read_latest_breaks_ties_by_run_after_expiry(spark, tmp_path):
+    """A refresh that re-commits every url with the SAME warc_ts must
+    still win in read_latest after expire_snapshots squashed the
+    original crawl and part of the refresh into one base snapshot:
+    the tie breaks on each row's own run, not on the base's one id."""
+    from tuatara_spark.sources import warc as W
+    root = str(tmp_path / "t")
+
+    def crawl(version, refresh):
+        d = tmp_path / f"warc_{version}"
+        d.mkdir()
+        pages = [{"url": f"https://c.org/{i}",
+                  "date": "2026-01-01T00:00:00Z", "status": 200,
+                  "content_type": "text/html",
+                  "body": f"<html><body><p>{version} page {i}</p>"
+                          f"</body></html>".encode()} for i in range(40)]
+        (d / "w.warc.gz").write_bytes(W.encode_warc(pages))
+        job.run_crawl(spark, str(d), root, num_buckets=8, groups=2,
+                      refresh=refresh)
+
+    crawl("v1", refresh=False)
+    crawl("v2", refresh=True)
+    cat = Catalog(root)
+
+    def v2_wins():
+        return sum(r.main_text.startswith("v2 page")
+                   for r in cat.read_latest(spark).collect())
+
+    assert v2_wins() == 40
+    assert len(cat.expire_snapshots(keep_last=1)) == 3
+    assert cat.read_table(spark).count() == 80
+    assert v2_wins() == 40
+
+
 def test_crawl_refresh_crash_resumes_generation(spark, warc_dir, tmp_path):
     """A crash mid-refresh must be completable: resume is scoped to the
     refresh GENERATION, so the original crawl's committed buckets don't

@@ -156,14 +156,18 @@ def test_multimodal_meta_and_thumbnail(spark, weights):
 
 def test_both_sniffers_read_one_table(spark):
     """``fixtures.sniff_format`` and the Catalyst ``sniff_format_col`` agree
-    on one payload per ``FORMATS`` row, a RIFF of another form, a buffer
-    shorter than every 4-byte magic, an empty one and junk."""
+    on one payload per ``FORMATS`` row, a RIFF of another form, an
+    untagged MP3, a buffer shorter than every 4-byte magic, an empty one
+    and junk."""
     from tuatara_spark import fixtures as fx
+    from tuatara_spark.ops import audio
     cases = {}
     for i, (magic, form, name) in enumerate(fx.FORMATS):
         body = magic.ljust(8, b"\0") + (form or b"") + b"payload"
         cases[f"{i}:{name}"] = (body, name)
     cases["riff_avi"] = (b"RIFF\0\0\0\0AVI LIST", "riff")
+    # an untagged MP3 starts with a bare frame sync (ff fb 90 00)
+    cases["mp3_untagged"] = (audio.encode_mp3_fixture(n_frames=2), "mp3")
     cases["short"] = (b"TP", "unknown")
     cases["empty"] = (b"", "unknown")
     cases["junk"] = (b"\x00junk-not-a-format", "unknown")

@@ -1108,6 +1108,26 @@ def test_bpe_encode_plan_is_shuffle_free_projection(spark):
         assert bad not in plan
 
 
+def _bloom_shuffle_probe(candidates, bloom, m_bits, k):
+    """Reference probe: explode each candidate to its k (word_idx, bit)
+    positions, shuffle-join them against the word table, regroup."""
+    from pyspark.sql import functions as F
+    from tuatara_spark.ops import frontier
+    probes = candidates.select(
+        F.col("url").alias("_v"), F.explode(F.array(
+            *frontier._bloom_positions(F.col("url"), m_bits, k))).alias("p"))
+    probes = probes.select(
+        "_v", F.expr("p div 64").alias("word_idx"),
+        (F.col("p") % 64).cast("int").alias("bit"))
+    hit = (probes.join(bloom, "word_idx", "left")
+           .select("_v", F.expr(
+               "shiftright(coalesce(bits, cast(0 as bigint)), bit) % 2 != 0")
+               .alias("_set")))
+    return (hit.groupBy("_v")
+            .agg(F.min("_set").alias("possibly_seen"))
+            .select(F.col("_v").alias("url"), "possibly_seen"))
+
+
 def test_bloom_seen_set_membership_and_path_agreement(spark):
     from tuatara_spark.ops import frontier
     seen = spark.range(80).selectExpr("concat('u', id) AS url")
@@ -1115,10 +1135,11 @@ def test_bloom_seen_set_membership_and_path_agreement(spark):
     bloom = frontier.bloom_build(seen, m_bits=1 << 13, k=4).persist()
     try:
         a = {r.url: r.possibly_seen for r in frontier.bloom_might_contain(
-            cand, bloom, m_bits=1 << 13, k=4, broadcast=True).collect()}
-        b = {r.url: r.possibly_seen for r in frontier.bloom_might_contain(
-            cand, bloom, m_bits=1 << 13, k=4, broadcast=False).collect()}
-        # no false negatives, ever; both probe strategies agree exactly
+            cand, bloom, m_bits=1 << 13, k=4).collect()}
+        b = {r.url: r.possibly_seen for r in _bloom_shuffle_probe(
+            cand, bloom, m_bits=1 << 13, k=4).collect()}
+        # no false negatives, ever; the broadcast map probe agrees
+        # exactly with the shuffle-join reference
         assert all(a[f"u{i}"] for i in range(80))
         assert a == b
         # tiny saturation (320 bits in 8192) → the unseen half is

@@ -4,7 +4,7 @@ checkpointing (exactly-once per file; availableNow drain)."""
 import os
 import time
 
-from tuatara_spark import fixtures as fx, streaming as st
+from tuatara_spark import engine, fixtures as fx, streaming as st
 
 
 def _wait_done(query, timeout=120):
@@ -21,7 +21,7 @@ def test_stream_extracts_incrementally(spark, weights, tmp_path):
     fx.pages_to_parquet(first, os.path.join(in_dir, "batch0.parquet"))
 
     pages = st.read_page_stream(spark, in_dir)
-    q = st.start_to_parquet(st.extract_stream(pages, weights=weights),
+    q = st.start_to_parquet(engine.extract_df(pages, weights=weights),
                             out_dir, ck_dir)
     _wait_done(q)
     got = {r.url: r.text for r in spark.read.parquet(out_dir).collect()}
@@ -31,7 +31,7 @@ def test_stream_extracts_incrementally(spark, weights, tmp_path):
     # a second file lands; a new availableNow run drains ONLY the new file
     second = fx.make_pages(5, seed=32)
     fx.pages_to_parquet(second, os.path.join(in_dir, "batch1.parquet"))
-    q2 = st.start_to_parquet(st.extract_stream(
+    q2 = st.start_to_parquet(engine.extract_df(
         st.read_page_stream(spark, in_dir), weights=weights), out_dir, ck_dir)
     _wait_done(q2)
     rows = spark.read.parquet(out_dir).collect()
@@ -57,7 +57,7 @@ def test_stateful_host_counters_accumulate(spark, weights, tmp_path):
         def sink(batch_df, _bid):
             collected.extend(batch_df.collect())
 
-        counters = st.host_counter_stream(st.extract_stream(
+        counters = st.host_counter_stream(engine.extract_df(
             st.read_page_stream(spark, in_dir), weights=weights))
         q = (counters.writeStream.foreachBatch(sink)
              .outputMode("update")

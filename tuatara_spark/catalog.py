@@ -130,19 +130,22 @@ class Catalog:
         expire_snapshots) references every run of the expired prefix."""
         return snap.get("runs") or [snap["run"]]
 
-    def committed_run_dirs(self, as_of: int | None = None) -> list[str]:
-        snaps = self.snapshots()
-        if as_of is not None:
-            snaps = [s for s in snaps if s["snapshot_id"] <= as_of]
+    def committed_run_dirs(self) -> list[str]:
         return [os.path.join(self.data_dir, r)
-                for s in snaps for r in self._runs_of(s)]
+                for s in self.snapshots() for r in self._runs_of(s)]
 
-    def _union_runs(self, spark, snaps, with_snapshot_id: bool = False):
+    def _union_runs(self, spark, snaps, with_commit_seq: bool = False):
         """Union the parquet-bearing run dirs of ``snaps`` (additive
         schema evolution via allowMissingColumns; processed-empty runs
         skipped — see _has_parquet). The ONE implementation behind
         read_table / read_latest / read_buckets. Returns None when no
-        run has data."""
+        run has data.
+
+        ``with_commit_seq`` tags each row with ``_commit_seq``, the
+        snapshot id its run was committed under (the ``<sid>`` of its
+        ``run_<sid>`` dir) — not the id of the snapshot that lists it,
+        which for a squash base is one id for every run of the
+        expired prefix."""
         from pyspark.sql import functions as F
         pieces = []
         for sn in snaps:
@@ -151,9 +154,9 @@ class Catalog:
                 if not self._has_parquet(d):
                     continue
                 df = spark.read.parquet(d)
-                if with_snapshot_id:
+                if with_commit_seq:
                     df = df.withColumn(
-                        "_snapshot_id", F.lit(int(sn["snapshot_id"])))
+                        "_commit_seq", F.lit(int(r.split("_", 1)[1])))
                 pieces.append(df)
         if not pieces:
             return None
@@ -334,16 +337,17 @@ class Catalog:
 
     # -- merge-on-read upsert view -----------------------------------------
 
-    def read_latest(self, spark, key_col: str = "url",
-                    ts_col: str = "warc_ts", as_of: int | None = None):
+    def read_latest(self, spark, as_of: int | None = None):
         """Keep-latest merge-on-read view — the Iceberg upsert resolution
         for RE-CRAWLED pages: when refresh runs commit newer rows for
         urls that earlier snapshots already hold, the reader resolves
-        each key to the row with the greatest (ts, snapshot_id). Ties on
-        the timestamp break by commit order, so a re-fetch that kept the
-        crawl timestamp still supersedes. Composes with ``as_of`` time
-        travel (the historical view resolves only among runs committed
-        by then). Returns None if nothing is committed.
+        each url to the row with the greatest (warc_ts, commit order).
+        Ties on the timestamp break by the commit order of the row's own
+        run, so a re-fetch that kept the crawl timestamp still
+        supersedes, also after ``expire_snapshots`` squashed both runs
+        into one base. Composes with ``as_of`` time travel (the
+        historical view resolves only among runs committed by then).
+        Returns None if nothing is committed.
 
         Scale: one window over the key — at 10^12 rows this shuffles on
         url exactly once, the same cost Iceberg MoR pays in its
@@ -352,14 +356,14 @@ class Catalog:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
         df = self._union_runs(spark, self._snaps_as_of(as_of),
-                              with_snapshot_id=True)
+                              with_commit_seq=True)
         if df is None:
             return None
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(ts_col).desc(), F.col("_snapshot_id").desc())
+        w = Window.partitionBy("url").orderBy(
+            F.col("warc_ts").desc(), F.col("_commit_seq").desc())
         return (df.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
-                .drop("_rn", "_snapshot_id"))
+                .drop("_rn", "_commit_seq"))
 
     # -- manifest-based bucket pruning --------------------------------------
 

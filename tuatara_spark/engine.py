@@ -107,15 +107,14 @@ def ocr_batch(params: dict, images: list, errors: list) -> list:
 
 
 def make_extractor(weights_bc, passthrough: list[str]):
-    """Build the mapInArrow function. ``weights_bc`` is a pyspark Broadcast
-    (or a plain dict for driver-side testing)."""
+    """Build the mapInArrow function over the weights Broadcast
+    ``weights_bc``."""
 
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         params = None
         for batch in batches:
             if params is None:
-                params = (weights_bc.value if hasattr(weights_bc, "value")
-                          else weights_bc)
+                params = weights_bc.value
             # payload bytes are zero-copy Arrow buffer views (None if null)
             images, errors = fx.decode_payloads(
                 [sc.as_buffer() for sc in batch.column("html")])

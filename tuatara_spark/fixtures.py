@@ -171,6 +171,9 @@ FORMATS = [
     (b"MM\x00*", None, "tiff"),
     (b"%PDF-", None, "pdf"),
     (b"ID3", None, "mp3"),
+    # untagged MP3: an MPEG frame sync, 0xFF then a byte with its top 3
+    # bits set
+    *((bytes([0xFF, b]), None, "mp3") for b in range(0xE0, 0x100)),
     (b"fLaC", None, "flac"),
     (b"OggS", None, "ogg"),
     (b"<html", None, "html"),

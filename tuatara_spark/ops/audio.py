@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (FloatType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
+from tuatara_spark import fixtures as fx
+
 
 # sample encodings: (format tag, bits) → label. Tag 1 = integer PCM,
 # tag 3 = IEEE float (public WAVE_FORMAT_IEEE_FLOAT extension, 1994);
@@ -380,6 +382,11 @@ AUDIO_META_SCHEMA = StructType([
 ])
 
 
+# header-walk formats by ``fixtures.sniff_format`` name
+_HEADER_PARSERS = {"mp3": parse_mp3_meta, "flac": parse_flac_meta,
+                   "ogg": parse_ogg_meta}
+
+
 def extract_audio_meta(df: DataFrame, col: str = "html",
                        key_col: str = "url") -> DataFrame:
     """Decode audio payloads → typed metadata + cheap signal features
@@ -396,16 +403,8 @@ def extract_audio_meta(df: DataFrame, col: str = "html",
             for key, buf in zip(pdf[key_col], pdf[col]):
                 row = dict.fromkeys(out)
                 row["url"] = key
-                head = bytes(memoryview(buf)[:4]) if buf is not None else b""
-                hdr_parser = None
-                if head[:3] == b"ID3" or (
-                        len(head) >= 2 and head[0] == 0xFF
-                        and (head[1] & 0xE0) == 0xE0):
-                    hdr_parser = parse_mp3_meta
-                elif head == b"fLaC":
-                    hdr_parser = parse_flac_meta
-                elif head == b"OggS":
-                    hdr_parser = parse_ogg_meta
+                hdr_parser = (_HEADER_PARSERS.get(fx.sniff_format(buf))
+                              if buf is not None else None)
                 if hdr_parser is not None:
                     # header-walk formats: real metadata, NULL rms/peak
                     # (signal decode out of scope)

@@ -85,13 +85,11 @@ def release_caches() -> int:
     return n
 
 
-def _wide(df: DataFrame, requested: int | None) -> int:
+def _wide(df: DataFrame) -> int:
     """Partition width for CPU-heavy stages: 2× the session's
-    defaultParallelism unless explicitly requested. A hardcoded count would
-    become the stage-width ceiling on a real cluster (the sandbox's 64 is
-    just 2×32 local threads)."""
-    if requested is not None:
-        return requested
+    defaultParallelism. A hardcoded count would become the stage-width
+    ceiling on a real cluster (the sandbox's 64 is just 2×32 local
+    threads)."""
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
@@ -116,8 +114,8 @@ def keep_first(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------------------- shingles ----
 
-def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
-                   compute_partitions: int | None = None) -> DataFrame:
+def shingle_tokens(df: DataFrame, text_col: str, id_col: str,
+                   k: int) -> DataFrame:
     """(_id, _s) k-gram token stream (with in-doc duplicates), fully
     compiled: explode a position sequence, then one substring per row — no
     interpreted HOF lambda in sight (whole-stage codegen keeps the
@@ -132,7 +130,7 @@ def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
     (_id,_g) dedup), so the EXPLODED gram table never reshuffles — only
     narrow doc rows move. Skew is unchanged: a row's explode is always
     generated inside one task either way."""
-    base = (df.repartition(_wide(df, compute_partitions), F.col(id_col))
+    base = (df.repartition(_wide(df), F.col(id_col))
             .select(F.col(id_col).alias("_id"),
                     F.lower(F.col(text_col)).alias("_lc")))
     pos = F.explode(F.expr(
@@ -146,8 +144,7 @@ def shingle_tokens(df: DataFrame, text_col: str, id_col: str, k: int,
 
 def minhash_signature(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_perm: int = 32,
-                      k: int = 5,
-                      compute_partitions: int | None = None) -> DataFrame:
+                      k: int = 5) -> DataFrame:
     """(_id, shingles, sig): shingles = the doc's distinct k-gram set
     HASHED to int64 (xxhash64 of each gram — set cardinalities, hence
     Jaccard, are preserved up to a 2⁻⁶⁴ collision); sig[j] = min over
@@ -165,7 +162,7 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     is orders of magnitude heavier per row than the row's bytes, so
     input-split partitioning (often 1 partition for a small dimension
     table) would serialize the whole stage."""
-    tok = (shingle_tokens(df, text_col, id_col, k, compute_partitions)
+    tok = (shingle_tokens(df, text_col, id_col, k)
            .withColumn("_hs", F.xxhash64("_s")))
     # expression strings, not per-column builders: the num_perm min
     # aggregates built via F.min(F.xxhash64(...)).alias(...) cost ~4
@@ -215,8 +212,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_perm: int = 32,
                       bands: int = 8, k: int = 5,
                       threshold: float = 0.6,
-                      max_bucket: int | None = 50,
-                      verify_partitions: int | None = None) -> DataFrame:
+                      max_bucket: int | None = 50) -> DataFrame:
     """Near-duplicate pairs by MinHash banding + exact Jaccard verification.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
@@ -248,7 +244,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     cand = (left.join(right, ["band_idx", "band_hash"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
-            .repartition(_wide(df, verify_partitions), "id_a", "id_b")
+            .repartition(_wide(df), "id_a", "id_b")
             .dropDuplicates())
     sh = sig.select("_id", "shingles", F.size("shingles").alias("_ns"))
     cand = (cand
@@ -282,8 +278,7 @@ def minhash_dedup_keep_first(df: DataFrame, text_col: str = "text",
 # --------------------------------------------------------------- SimHash ---
 
 def _simhash_sigs(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  compute_partitions: int | None = None) -> DataFrame:
+                  id_col: str = "doc_id") -> DataFrame:
     """(id, simhash) signature table WITHOUT joining back to ``df`` —
     the pair operator only consumes signatures, so the join-back (a
     full-table shuffle at corpus width) would be pure overhead there.
@@ -301,8 +296,7 @@ def _simhash_sigs(df: DataFrame, text_col: str = "text",
     output). Skew is unchanged by the keying: a row's explode is always
     generated inside one task in either formulation.
     """
-    tok = df.repartition(_wide(df, compute_partitions),
-                         F.col(id_col)).select(
+    tok = df.repartition(_wide(df), F.col(id_col)).select(
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
         .alias("_tok")).withColumn("_h", F.xxhash64("_tok"))
@@ -322,18 +316,15 @@ def _simhash_sigs(df: DataFrame, text_col: str = "text",
 
 
 def simhash64(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id",
-              compute_partitions: int | None = None) -> DataFrame:
+              id_col: str = "doc_id") -> DataFrame:
     """Add a 64-bit SimHash over whitespace tokens (all input columns
     preserved; see :func:`_simhash_sigs` for the algorithm)."""
-    return df.join(_simhash_sigs(df, text_col, id_col,
-                                 compute_partitions), id_col)
+    return df.join(_simhash_sigs(df, text_col, id_col), id_col)
 
 
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", max_hamming: int = 3,
                   max_bucket: int | None = 50,
-                  verify_partitions: int | None = None,
                   strict: bool = True) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Signature from
     :func:`simhash64`; candidate generation + verify delegate to the
@@ -342,7 +333,6 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     sigs = _simhash_sigs(df, text_col, id_col)
     return hamming_pairs64(sigs, id_col=id_col, sig_col="simhash",
                            max_hamming=max_hamming, max_bucket=max_bucket,
-                           verify_partitions=verify_partitions,
                            strict=strict)
 
 
@@ -473,8 +463,7 @@ def _jaccard_at_least(inter, union, threshold: float):
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 3,
-                        threshold: float = 0.5,
-                        verify_partitions: int | None = None) -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Exact k-gram Jaccard near-dup pairs via LOSSLESS prefix filtering
     (the AllPairs/PPJoin prefix filter, Bayardo et al. WWW'07 /
     Chaudhuri et al. ICDE'06 — public algorithms).
@@ -494,10 +483,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     bucket cap — dropping a bucket would break exactness; the frequency
     order IS the skew control.
     """
-    vp = _wide(df, verify_partitions)
     # compiled token stream → per-doc distinct grams; one shuffle builds
     # both the dedup'd token table and the gram arrays for verification
-    tok = _persist(shingle_tokens(df, text_col, id_col, k, vp)
+    tok = _persist(shingle_tokens(df, text_col, id_col, k)
                    .select("_id", F.col("_s").alias("_g"))
                    .dropDuplicates(["_id", "_g"]))
     base = tok.groupBy("_id").agg(F.collect_set("_g").alias("grams"))
@@ -513,7 +501,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct()
             # exact verification is the CPU-heavy stage; keep it wide
-            .repartition(vp))
+            .repartition(_wide(df)))
     sh = base.select("_id", "grams", F.size("grams").alias("_ng"))
     cand = (cand.join(sh.select(F.col("_id").alias("id_a"),
                                 F.col("grams").alias("sh_a"),
@@ -563,7 +551,7 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
     # partitioning. Guard: sequence(0, -1) would step DOWN, hence the
     # size > 0 filter before the explode (empty docs emit no segment
     # row, exactly as the old empty-array branch).
-    pre = (df.repartition(_wide(df, None), F.col(id_col))
+    pre = (df.repartition(_wide(df), F.col(id_col))
            .select(F.col(id_col), toks.alias("_tk"), nseg.alias("_ns"))
            .where(F.size("_tk") > 0))
     exploded = (pre.select(
@@ -593,15 +581,13 @@ def segment_dedup(df: DataFrame, text_col: str = "text",
 def hamming_pairs64(sig_df: DataFrame, id_col: str = "doc_id",
                     sig_col: str = "simhash", max_hamming: int = 3,
                     max_bucket: int | None = 50,
-                    verify_partitions: int | None = None,
                     strict: bool = True) -> DataFrame:
     """Banded Hamming self-join over ANY 64-bit signature column (shared
     by text simhash and image perceptual hashes): 4× 16-bit chunk banding
     — a pair within Hamming ≤ 3 must agree on ≥1 chunk (pigeonhole) —
     then one xor+popcount verify, filtered BEFORE the pair-dedup shuffle
     (the simhash verify is trivially cheap, unlike the minhash set
-    intersection, so no explicit wide repartition by default;
-    ``verify_partitions`` forces one when a caller wants it). Returns
+    intersection, so no explicit wide repartition). Returns
     (id_a, id_b, hamming).
 
     ``max_hamming`` ≤ 3 is COMPLETE (4-band pigeonhole); beyond 3 the
@@ -623,9 +609,6 @@ def hamming_pairs64(sig_df: DataFrame, id_col: str = "doc_id",
     banded = sh.select("_id", "_sig",
                        F.posexplode(chunks).alias("chunk_idx", "chunk_val"))
     banded = _cap_buckets(banded, ["chunk_idx", "chunk_val"], max_bucket)
-    if verify_partitions is not None:
-        banded = banded.repartition(verify_partitions,
-                                    "chunk_idx", "chunk_val")
     # No persist of the capped band table (round 6): the cap is now a
     # window over the chunk-key exchange, so both join sides are
     # projections of the SAME shuffle and ReuseExchange shares it —
@@ -652,7 +635,7 @@ def _substr_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     repartition (shingle_tokens pattern): narrow doc rows move once,
     the tokenize + shingle explode + hash run at full width even off a
     one-row-group scan."""
-    return df.repartition(_wide(df, None), F.col(id_col)).select(
+    return df.repartition(_wide(df), F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         F.expr(rf"filter(split(trim({text_col}), '\\s+'), "
                "x -> x != '')").alias("_toks"))
@@ -660,7 +643,7 @@ def _substr_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def exact_substr_spans(df: DataFrame, min_tokens: int = 50,
                        text_col: str = "text", id_col: str = "doc_id",
-                       key_of=None, pre_tokenized=None) -> DataFrame:
+                       key_of=None) -> DataFrame:
     """Cross-document exact-substring duplicate spans — the ExactSubstr
     method of Lee et al. 2021 ("Deduplicating Training Data Makes
     Language Models Better", public arXiv 2107.06499), re-expressed for
@@ -702,9 +685,7 @@ def exact_substr_spans(df: DataFrame, min_tokens: int = 50,
     L = int(min_tokens)
     if key_of is None:
         key_of = F.xxhash64
-    toks = (_substr_tokens(df, text_col, id_col)
-            if pre_tokenized is None else pre_tokenized)
-    sh = toks.select(
+    sh = _substr_tokens(df, text_col, id_col).select(
         "_id",
         F.posexplode(F.expr(
             f"if(size(_toks) < {L}, cast(array() as array<string>), "
@@ -748,8 +729,7 @@ def exact_substr_dedup(df: DataFrame, min_tokens: int = 50,
     # consumers (span finder + rebuild) was measured ~0.1 s SLOWER at
     # bench scale than tokenizing twice — columnar cache
     # materialization of token arrays costs more than the repeated
-    # narrow repartition + split. pre_tokenized exists for callers
-    # that already hold a token table.
+    # narrow repartition + split.
     spans = exact_substr_spans(df, min_tokens=min_tokens,
                                text_col=text_col, id_col=id_col,
                                key_of=key_of)
@@ -829,9 +809,7 @@ def host_line_dedup(df: DataFrame, text_col: str = "text",
 def cross_corpus_jaccard_pairs(old: DataFrame, new: DataFrame,
                                text_col: str = "text",
                                id_col: str = "doc_id", k: int = 3,
-                               threshold: float = 0.5,
-                               verify_partitions: int | None = None
-                               ) -> DataFrame:
+                               threshold: float = 0.5) -> DataFrame:
     """INCREMENTAL near-dup join: exact k-gram Jaccard pairs between a
     NEW document batch and an EXISTING corpus → (id_new, id_old,
     jaccard) — no self-join on either side. This is the nightly 100 TB
@@ -864,11 +842,10 @@ def cross_corpus_jaccard_pairs(old: DataFrame, new: DataFrame,
     batch shuffles only its prefix rows against it. Verification joins
     gram sets per candidate on the id keys; no cartesian anywhere.
     """
-    vp = _wide(new, verify_partitions)
-    tok_old = _persist(shingle_tokens(old, text_col, id_col, k, vp)
+    tok_old = _persist(shingle_tokens(old, text_col, id_col, k)
                        .select("_id", F.col("_s").alias("_g"))
                        .dropDuplicates(["_id", "_g"]))
-    tok_new = _persist(shingle_tokens(new, text_col, id_col, k, vp)
+    tok_new = _persist(shingle_tokens(new, text_col, id_col, k)
                        .select("_id", F.col("_s").alias("_g"))
                        .dropDuplicates(["_id", "_g"]))
     freq_old = tok_old.groupBy("_g").agg(F.count("*").alias("_df"))
@@ -883,7 +860,7 @@ def cross_corpus_jaccard_pairs(old: DataFrame, new: DataFrame,
             .join(tok_old.select(F.col("_id").alias("id_old"), "_g"),
                   "_g")
             .select("id_new", "id_old").distinct()
-            .repartition(vp))
+            .repartition(_wide(new)))
     so = tok_old.groupBy("_id").agg(F.collect_set("_g").alias("sh_o"))
     sn = tok_new.groupBy("_id").agg(F.collect_set("_g").alias("sh_n"))
     cand = (cand.join(sn.select(F.col("_id").alias("id_new"), "sh_n"),

@@ -119,49 +119,29 @@ def bloom_build(df: DataFrame, col: str = "url",
 
 def bloom_might_contain(candidates: DataFrame, bloom: DataFrame,
                         col: str = "url", m_bits: int = 1 << 20,
-                        k: int = 4, broadcast: bool = True) -> DataFrame:
+                        k: int = 4) -> DataFrame:
     """Adds ``possibly_seen``: True iff all k of the candidate's bit
     positions are set in ``bloom`` (same ``m_bits``/``k`` as the
     build); a word absent from the bitmap is an unset bit.
 
-    Two probe strategies, chosen by ``broadcast``:
-
-    * ``True`` (default): the bitmap - at most m_bits/64 rows,
-      ~128 KiB per 2^20 bits - collapses into a ONE-ROW ``map<long,
-      long>`` cross-joined broadcast against the candidates, and
-      ``forall`` over the k positions evaluates entirely inside
-      whole-stage codegen. The candidate table NEVER shuffles - the
-      probe is a per-row map lookup, which is what makes this viable
-      as a filter stage in front of a 10^10-row fetch list.
-    * ``False``: for bitmaps too big to broadcast (10^11-URL
-      frontiers want m_bits ~ 10^12), candidates explode to k
-      (word_idx, bit) probes shuffle-joined against the word table,
-      then regroup - moves (id, word) pairs, never the text corpus."""
+    The bitmap - at most m_bits/64 rows, ~128 KiB per 2^20 bits -
+    collapses into a ONE-ROW ``map<long, long>`` cross-joined broadcast
+    against the candidates, and ``forall`` over the k positions
+    evaluates entirely inside whole-stage codegen. The candidate table
+    NEVER shuffles - the probe is a per-row map lookup, which is what
+    makes this viable as a filter stage in front of a 10^10-row fetch
+    list. A bitmap over the broadcast budget is resized to fit it."""
     c = F.col(col)
-    if broadcast:
-        bm = bloom.agg(F.map_from_entries(
-            F.collect_list(F.struct("word_idx", "bits"))).alias("_bm"))
-        ps = F.array(*_bloom_positions(c, m_bits, k))
-        return (candidates.select(c.alias(col), ps.alias("_ps"))
-                .crossJoin(F.broadcast(bm))
-                .select(col, F.expr(
-                    "forall(_ps, p -> shiftright(coalesce("
-                    "element_at(_bm, p div 64), cast(0 as bigint)), "
-                    "cast(p % 64 as int)) % 2 != 0)")
-                    .alias("possibly_seen")))
-    probes = candidates.select(
-        c.alias("_v"),
-        F.explode(F.array(*_bloom_positions(c, m_bits, k))).alias("p"))
-    probes = probes.select(
-        "_v", F.expr("p div 64").alias("word_idx"),
-        (F.col("p") % 64).cast("int").alias("bit"))
-    hit = (probes.join(bloom, "word_idx", "left")
-           .select("_v", F.expr(
-               "shiftright(coalesce(bits, cast(0 as bigint)), bit) % 2 != 0")
-               .alias("_set")))
-    return (hit.groupBy("_v")
-            .agg(F.min("_set").alias("possibly_seen"))
-            .select(F.col("_v").alias(col), "possibly_seen"))
+    bm = bloom.agg(F.map_from_entries(
+        F.collect_list(F.struct("word_idx", "bits"))).alias("_bm"))
+    ps = F.array(*_bloom_positions(c, m_bits, k))
+    return (candidates.select(c.alias(col), ps.alias("_ps"))
+            .crossJoin(F.broadcast(bm))
+            .select(col, F.expr(
+                "forall(_ps, p -> shiftright(coalesce("
+                "element_at(_bm, p div 64), cast(0 as bigint)), "
+                "cast(p % 64 as int)) % 2 != 0)")
+                .alias("possibly_seen")))
 
 
 # --- Revisit scheduling (change-rate estimation) ---------------------------

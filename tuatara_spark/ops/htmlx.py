@@ -199,7 +199,7 @@ def _scored_blocks(df: DataFrame, col: str, key_col: str,
     moved ahead of the heavy work instead of after it."""
     from tuatara_spark.ops.dedup import _wide
     blocks = F.split(F.col(col), r"(?i)</(?:p|div|td|li|article|section)>")
-    exploded = (df.repartition(_wide(df, None), F.col(key_col))
+    exploded = (df.repartition(_wide(df), F.col(key_col))
                 .select(F.col(key_col),
                         F.posexplode(blocks).alias("block_idx", "_raw")))
     txt = F.col("_raw")

@@ -84,7 +84,7 @@ def train_charngram_profiles(df: DataFrame, lang_col: str = "lang",
     even off a one-row-group scan; the (lang, gram) exchange still
     moves only collapsed count rows."""
     from tuatara_spark.ops.dedup import _wide
-    counts = (_grams(df.repartition(_wide(df, None)), text_col, n)
+    counts = (_grams(df.repartition(_wide(df)), text_col, n)
               .groupBy(F.col(lang_col).alias("lang"),
                        F.col("_g").alias("gram"))
               .agg(F.count("*").alias("_c")))
@@ -121,7 +121,7 @@ def classify_charngram(df: DataFrame, profiles: DataFrame,
             f"top_m ({top_m}) must be <= top_k ({top_k}): the gram-only "
             "join's zero-match elimination needs |dr - rank| < top_k")
     from tuatara_spark.ops.dedup import _wide
-    counts = (_grams(df.repartition(_wide(df, None), F.col(id_col)),
+    counts = (_grams(df.repartition(_wide(df), F.col(id_col)),
                      text_col, n)
               .groupBy(F.col(id_col).alias("_id"),
                        F.col("_g").alias("gram"))

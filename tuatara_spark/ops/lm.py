@@ -26,9 +26,9 @@ Scale shape:
   the token stream. ``min_count`` prunes the tail (the 100 TB path:
   a pruned LM is what you broadcast).
 * **Scoring** explodes each document to its bigrams once, joins the
-  LM — broadcast when it fits (the default; a pruned web LM is
-  ~10^7 rows), hash join on (w1, w2) otherwise — and reduces back to
-  one row per document with a partial-aggregated groupBy.
+  broadcast LM (a pruned web LM is ~10^7 rows; an LM over the
+  broadcast budget is pruned harder with ``min_count``) and reduces
+  back to one row per document with a partial-aggregated groupBy.
 
 BIGINT headroom: 10^6 · pair_count stays under 2^63 until a single
 bigram repeats 9·10^12 times; shrink the scale for larger corpora.
@@ -63,23 +63,16 @@ def _bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def train_bigram_lm(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", min_count: int = 1,
-                    repartition_input: bool = False) -> DataFrame:
+                    id_col: str = "doc_id", min_count: int = 1) -> DataFrame:
     """→ (w1, w2, pair_count, left_count): the bigram table with its
     left-context totals, pruned to ``pair_count >= min_count``.
     ``left_count`` sums the UNPRUNED pair counts so pruning never
     inflates surviving probabilities.
 
-    ``repartition_input=True`` adds a round-robin repartition of the
-    narrow doc rows before the bigram explode, for inputs stuck in one
-    unsplittable scan partition whose per-row work is heavy enough to
-    repay the exchange (measured at bench scale the word-bigram
-    explode is NOT — the extra stage costs more than the widened
-    explode saves — so the default is off; the char-gram ops, ~6× the
-    rows, measure the other way and repartition unconditionally)."""
-    if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None))
+    The input is not repartitioned before the bigram explode: measured
+    at bench scale, the extra stage costs more than the widened explode
+    saves (the char-gram ops, ~6× the rows, measure the other way and
+    repartition)."""
     pairs = (_bigrams(df, text_col, id_col)
              .groupBy("w1", "w2")
              .agg(F.count("*").alias("pair_count")))
@@ -98,28 +91,19 @@ def train_bigram_lm(df: DataFrame, text_col: str = "text",
 
 
 def score_bigram_lm(df: DataFrame, lm: DataFrame,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    broadcast: bool = True,
-                    repartition_input: bool = False) -> DataFrame:
+                    text_col: str = "text",
+                    id_col: str = "doc_id") -> DataFrame:
     """→ (id, n_bigrams, n_oov, score_e6) per document with ≥1 bigram
     (single-token and empty documents carry no LM evidence and are
     absent — filter on token count upstream if they need a row).
     ``score_e6`` is the mean scaled transition probability over ALL
     the document's bigrams, OOV transitions counting as 0.
 
-    ``repartition_input=True`` adds an id-keyed repartition of the
-    narrow doc rows before the bigram explode (the explode, broadcast
-    LM join and per-doc aggregate then run at full width off any
-    scan, the final groupBy(id) already clustered). Off by default:
-    at bench scale the word-bigram explode is light enough that the
-    extra exchange costs more than it saves (measured 1.2 → 1.7 s);
-    the knob exists for corpora whose documents are large."""
-    if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None), F.col(id_col))
+    The input is not repartitioned: at bench scale the word-bigram
+    explode is light enough that an id-keyed exchange costs more than
+    it saves (measured 1.2 → 1.7 s)."""
     bg = _bigrams(df, text_col, id_col)
-    l = F.broadcast(lm) if broadcast else lm
-    j = bg.join(l, ["w1", "w2"], "left")
+    j = bg.join(F.broadcast(lm), ["w1", "w2"], "left")
     per = (j.groupBy("_id").agg(
         F.count("*").alias("n_bigrams"),
         F.sum(F.when(F.col("pair_count").isNull(), 1).otherwise(0))
@@ -200,9 +184,7 @@ def train_kn_bigram_lm(df: DataFrame, text_col: str = "text",
 
 
 def score_kn_bigram_lm(df: DataFrame, model, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       broadcast: bool = True,
-                       repartition_input: bool = False) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """→ (id, n_bigrams, n_oov, kn_score_e6): mean interpolated
     Kneser–Ney transition probability per document, integer-exact.
 
@@ -222,19 +204,15 @@ def score_kn_bigram_lm(df: DataFrame, model, text_col: str = "text",
     T, a knob not a design constraint.
 
     Scale shape: the three model tables are pruned-LM-sized →
-    broadcast (default); T is a 1-row broadcast cross join; the only
+    broadcast; T is a 1-row broadcast cross join; the only
     shuffle is the final per-document partial-aggregated groupBy.
     """
     pairs, lefts, rights = model
-    b = (lambda d: F.broadcast(d)) if broadcast else (lambda d: d)
     t_df = pairs.agg(F.count("*").alias("_T"))
-    if repartition_input:
-        from tuatara_spark.ops.dedup import _wide
-        df = df.repartition(_wide(df, None), F.col(id_col))
     bg = _bigrams(df, text_col, id_col)
-    j = (bg.join(b(pairs), ["w1", "w2"], "left")
-         .join(b(lefts), ["w1"], "left")
-         .join(b(rights), ["w2"], "left")
+    j = (bg.join(F.broadcast(pairs), ["w1", "w2"], "left")
+         .join(F.broadcast(lefts), ["w1"], "left")
+         .join(F.broadcast(rights), ["w2"], "left")
          .crossJoin(F.broadcast(t_df)))
     contrib = F.expr(
         f"CASE WHEN c1 IS NULL THEN"

@@ -106,7 +106,7 @@ def inverted_index(df: DataFrame, text_col: str = "text",
     # id-keyed widening repartition (shingle_tokens pattern): the
     # tokenize + position explode and the (term, doc) partial
     # aggregation run at full width even off a one-row-group scan
-    toks = df.repartition(_wide(df, None), F.col(id_col)).select(
+    toks = df.repartition(_wide(df), F.col(id_col)).select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.expr(
             rf"filter(split(lower(trim({text_col})), '\\s+'), "

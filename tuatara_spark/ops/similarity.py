@@ -147,15 +147,13 @@ def with_lsh_bucket_batched(df: DataFrame, planes: np.ndarray,
 
 def lsh_topk(df: DataFrame, query_vec, k: int = 10, n_planes: int = 8,
              seed: int = 7, vec_col: str = "embedding",
-             id_col: str = "vec_id", probe_hamming: int = 1) -> DataFrame:
+             id_col: str = "vec_id") -> DataFrame:
     """Approximate cosine top-k: score only vectors whose LSH bucket is
-    within ``probe_hamming`` bits of the query's bucket (multi-probe)."""
+    within 1 bit of the query's bucket (multi-probe)."""
     q = np.asarray(query_vec, dtype=np.float64)
     planes = hyperplanes(len(q), n_planes, seed)
     qbits = sum((1 << i) for i, p in enumerate(planes) if float(p @ q) > 0)
-    probe = [qbits]
-    if probe_hamming >= 1:
-        probe += [qbits ^ (1 << i) for i in range(n_planes)]
+    probe = [qbits] + [qbits ^ (1 << i) for i in range(n_planes)]
     bucketed = with_lsh_bucket(df, planes, vec_col)
     pruned = bucketed.filter(F.col("bucket").isin(probe))
     return cosine_topk(pruned, q, k, vec_col, id_col)

@@ -121,13 +121,12 @@ def tier_extract(docs: DataFrame, html_col: str = "html",
     surv = surv0.select(id_col, "main_text").join(dup_ids, id_col,
                                                   "left_anti")
     # surv reads straight off the cached base (narrow anti-join) —
-    # LM train and score each consume it without re-extracting; skip
-    # the LM ops' scan-widening repartition (already wide)
+    # LM train and score each consume it without re-extracting
     model = _lm.train_bigram_lm(
         surv.where(F.col(id_col) % train_mod == 0),
-        text_col="main_text", id_col=id_col, repartition_input=False)
+        text_col="main_text", id_col=id_col)
     scored = _lm.score_bigram_lm(surv, model, text_col="main_text",
-                                 id_col=id_col, repartition_input=False)
+                                 id_col=id_col)
     labels = F.array(*[F.lit(x) for x in TIER_LABELS])
     # tier_by_score persists its (narrow) scored input, so the range
     # sampler / rank / count passes never recompute the scoring

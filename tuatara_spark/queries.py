@@ -119,7 +119,7 @@ def _render_extract_fn(weights_bc, page_hook=None):
     """``page_hook`` (optional, picklable) transforms each rendered page
     before extraction — e.g. a lossy codec round trip for ingest gates."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = weights_bc.value if hasattr(weights_bc, "value") else weights_bc
+        params = weights_bc.value
         for pdf in batches:
             # render per row (synthesis is inherently per-page), then run
             # the engine's batch kernel over the whole pandas batch

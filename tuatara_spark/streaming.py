@@ -2,9 +2,10 @@
 
 The reference is strictly batch (one image per call; SURVEY.md §2.2), and
 the north_rule's "resumable from checkpoint" is satisfied by the batch
-snapshot catalog (tuatara_spark.catalog). This module additionally exposes
+snapshot catalog (tuatara_spark.catalog). This module additionally runs
 the same Arrow-UDF engine as a Structured Streaming flow for continuous
-crawl ingestion: new parquet files landing in a directory are extracted
+crawl ingestion: new parquet files landing in a directory
+(``read_page_stream``) go through ``engine.extract_df`` and are extracted
 incrementally with Spark's own checkpointing, exactly-once per file.
 
 ``mapInArrow`` is streaming-compatible (stateless per-batch transform), so
@@ -14,9 +15,6 @@ the one shared kernel serves batch, resume, and streaming without change.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from tuatara_spark import engine
-from tuatara_spark import weights as wt
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -28,13 +26,6 @@ def read_page_stream(spark: SparkSession, input_dir: str,
     return (spark.readStream.schema(PAGES_DDL)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(input_dir))
-
-
-def extract_stream(pages: DataFrame, weights: dict | None = None,
-                   seed: int = 42) -> DataFrame:
-    """Streaming extraction: same engine, same output schema."""
-    w = weights if weights is not None else wt.build_weights(seed)
-    return engine.extract_df(pages, weights=w)
 
 
 HOST_STATE_SCHEMA = "pages long, chars long"
@@ -102,17 +93,16 @@ def dedup_stream(stream: DataFrame, key_col: str = "url",
 
 
 def start_to_parquet(extracted: DataFrame, output_dir: str,
-                     checkpoint_dir: str, trigger_available_now: bool = True):
+                     checkpoint_dir: str):
     """Write the extraction stream to parquet with checkpointed
     exactly-once file tracking. ``availableNow`` drains the backlog and
     stops — the streaming analogue of one batch-job run."""
-    writer = (extracted.writeStream.format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (extracted.writeStream.format("parquet")
+            .option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def read_warc_stream(spark: SparkSession, input_dir: str,
