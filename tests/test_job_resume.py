@@ -134,10 +134,10 @@ def test_gc_uncommitted(spark, pages_path, tmp_path):
                         fail_after_groups=1)
     cat = Catalog(out)
     # simulate a crashed run: orphan dir not referenced by any snapshot
-    orphan = os.path.join(cat.data_dir, "run_000099")
+    orphan = os.path.join(cat.data_dir, "run=000099")
     os.makedirs(orphan)
     removed = cat.gc_uncommitted()
-    assert removed == ["run_000099"]
+    assert removed == ["run=000099"]
     assert cat.committed_buckets()  # committed data untouched
     assert cat.read_table(spark).count() > 0
     # the commit protocol's failure half end-to-end: crash → gc → RESUME
@@ -253,9 +253,9 @@ def test_schema_evolution_added_column(spark, pages_path, tmp_path):
     n0 = base.count()
     # simulate a newer job version committing a run with an extra column
     sid, run_dir = cat.new_run()
-    (base.limit(5).withColumn("quality", F.lit(0.5))
-     .write.partitionBy("part_id").parquet(run_dir))
-    cat.commit(sid, [], {}, {"pages": 5})
+    newer = base.limit(5).withColumn("quality", F.lit(0.5))
+    newer.write.partitionBy("part_id").parquet(run_dir)
+    cat.commit(sid, [], {}, {"pages": 5}, schema=newer.schema)
     evolved = cat.read_table(spark)
     assert "quality" in evolved.columns
     assert evolved.count() == n0 + 5
@@ -299,9 +299,12 @@ def test_crawl_job_crash_and_resume_equals_single_shot(
     job.run_crawl(spark, warc_dir, single, num_buckets=8, groups=1)
 
     crashed = str(tmp_path / "crashed")
+    spark.catalog.clearCache()   # so the check below sees only this job's
     with pytest.raises(job.InjectedFailure):
         job.run_crawl(spark, warc_dir, crashed, num_buckets=8, groups=4,
                       fail_after_groups=2)
+    # the parse persisted for the groups is released when a group fails
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     partial = Catalog(crashed).committed_buckets()
     assert 0 < len(partial) < 8
     summary = job.run_crawl(spark, warc_dir, crashed, num_buckets=8,
@@ -550,3 +553,68 @@ def test_totals_scope_to_current_generation(spark, warc_dir, tmp_path):
     # explicit scopes
     assert cat.totals(gen=0) == gen0
     assert cat.totals(cumulative=True)["pages"] == 2 * n_latest
+
+
+def _one_row_runs(root, n_runs, url_type="string"):
+    """A table of ``n_runs`` committed runs of one row each (bucket
+    ``i % 4``), written with pyarrow so that building it runs no Spark
+    job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+    schema = StructType.fromJson({"type": "struct", "fields": [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in (("url", url_type), ("warc_ts", "long"),
+                     ("part_id", "integer"))]})
+    cat = Catalog(root)
+    for i in range(n_runs):
+        sid, run_dir = cat.new_run()
+        d = os.path.join(run_dir, f"part_id={i % 4}")
+        os.makedirs(d)
+        url = f"u{i % 3}" if url_type == "string" else i
+        pq.write_table(pa.table({"url": [url], "warc_ts": [0]}),
+                       os.path.join(d, "part-0.parquet"))
+        cat.commit(sid, [i % 4], {}, {"pages": 1}, schema=schema)
+    return cat
+
+
+def test_read_table_plan_size_independent_of_history(spark, tmp_path):
+    """A read is one scan, not one union child per committed run: the
+    analyzed plan has as many lines for 20 snapshots as for 2."""
+    def plan_lines(n):
+        df = _one_row_runs(str(tmp_path / f"n{n}"), n).read_table(spark)
+        assert df.count() == n
+        return len(df._jdf.queryExecution().analyzed().toString()
+                   .splitlines())
+    assert plan_lines(2) == plan_lines(20)
+
+
+def test_catalog_reads_start_no_spark_job(spark, tmp_path):
+    """The schema comes from the snapshots, so building read_table,
+    read_latest and read_buckets infers nothing from the files."""
+    cat = _one_row_runs(str(tmp_path / "t"), 6)
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-reads", "build the catalog reads")
+    try:
+        table = cat.read_table(spark)
+        latest = cat.read_latest(spark)
+        bucket = cat.read_buckets(spark, [1])
+        assert sc.statusTracker().getJobIdsForGroup("catalog-reads") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert table.count() == 6
+    # url u0..u2 each committed twice with one warc_ts: the later run wins
+    assert sorted((r.url, r.part_id) for r in latest.collect()) == \
+        [("u0", 3), ("u1", 0), ("u2", 1)]
+    assert [r.part_id for r in bucket.collect()] == [1, 1]
+
+
+def test_schema_type_change_fails_fast(spark, tmp_path):
+    """A column whose type differs between snapshots is refused, not
+    coerced."""
+    root = str(tmp_path / "t")
+    _one_row_runs(root, 2)
+    cat = _one_row_runs(root, 1, url_type="long")
+    with pytest.raises(ValueError, match="'url' changes type"):
+        cat.read_table(spark)

@@ -8,10 +8,15 @@ SURVEY.md §0.3), so this thin catalog implements the REQUIRED semantics
 behind a small interface that an Iceberg-backed implementation can replace:
 
   output_root/
-    data/run_<snapshot_id>/part_id=<b>/*.parquet   (columnar data, hive-part)
+    data/run=<snapshot_id>/part_id=<b>/*.parquet   (columnar data, hive-part)
     _manifests/<snapshot_id>/part-<b>.json          (per-bucket lineage)
     _snapshots/snap-<id>.json                       (snapshot metadata)
     _snapshots/CURRENT                              (atomic pointer)
+
+``data/`` is one dataset hive-partitioned by (run, part_id). Each snapshot
+records the schema its run wrote, so a read is ONE parquet scan over the
+run dirs the snapshots list, with the merged snapshot schema pinned (no
+footer inference, no per-run union).
 
 Commit protocol: data + manifests are written first, then the snapshot file,
 then CURRENT is updated via write-temp + os.rename (atomic on POSIX). A
@@ -130,40 +135,43 @@ class Catalog:
         expire_snapshots) references every run of the expired prefix."""
         return snap.get("runs") or [snap["run"]]
 
-    def committed_run_dirs(self) -> list[str]:
+    def _run_dirs(self, snaps) -> list[str]:
         return [os.path.join(self.data_dir, r)
-                for s in self.snapshots() for r in self._runs_of(s)]
+                for s in snaps for r in self._runs_of(s)]
 
-    def _union_runs(self, spark, snaps, with_commit_seq: bool = False):
-        """Union the parquet-bearing run dirs of ``snaps`` (additive
-        schema evolution via allowMissingColumns; processed-empty runs
-        skipped — see _has_parquet). The ONE implementation behind
-        read_table / read_latest / read_buckets. Returns None when no
-        run has data.
+    def committed_run_dirs(self) -> list[str]:
+        return self._run_dirs(self.snapshots())
 
-        ``with_commit_seq`` tags each row with ``_commit_seq``, the
-        snapshot id its run was committed under (the ``<sid>`` of its
-        ``run_<sid>`` dir) — not the id of the snapshot that lists it,
-        which for a squash base is one id for every run of the
-        expired prefix."""
-        from pyspark.sql import functions as F
-        pieces = []
+    @staticmethod
+    def _merged_fields(snaps) -> list[dict]:
+        """The snapshots' schema fields (JSON form) in first-written
+        order: a column a later run adds reads NULL for older runs; a
+        column whose type changes raises instead of being coerced."""
+        fields: dict[str, dict] = {}
         for sn in snaps:
-            for r in self._runs_of(sn):
-                d = os.path.join(self.data_dir, r)
-                if not self._has_parquet(d):
-                    continue
-                df = spark.read.parquet(d)
-                if with_commit_seq:
-                    df = df.withColumn(
-                        "_commit_seq", F.lit(int(r.split("_", 1)[1])))
-                pieces.append(df)
-        if not pieces:
+            for f in sn["schema"]["fields"]:
+                seen = fields.setdefault(f["name"], f)
+                if seen["type"] != f["type"]:
+                    raise ValueError(
+                        f"column {f['name']!r} changes type from "
+                        f"{seen['type']!r} to {f['type']!r} in snapshot "
+                        f"{sn['snapshot_id']}")
+        return list(fields.values())
+
+    def _read_runs(self, spark, snaps):
+        """The run dirs of ``snaps`` as ONE scan with the merged schema
+        plus ``run`` (each row's commit id) pinned: no footer-inference
+        job, one relation however many runs, and an empty run reads as
+        no rows. None when ``snaps`` is empty."""
+        if not snaps:
             return None
-        out = pieces[0]
-        for pc in pieces[1:]:
-            out = out.unionByName(pc, allowMissingColumns=True)
-        return out
+        from pyspark.sql.types import StructType
+        schema = StructType.fromJson({"type": "struct", "fields": [
+            *self._merged_fields(snaps),
+            {"name": "run", "type": "integer", "nullable": True,
+             "metadata": {}}]})
+        return (spark.read.schema(schema).option("basePath", self.data_dir)
+                .parquet(*self._run_dirs(snaps)))
 
     def _snaps_as_of(self, as_of: int | None):
         snaps = self.snapshots()
@@ -171,22 +179,9 @@ class Catalog:
             snaps = [sn for sn in snaps if sn["snapshot_id"] <= as_of]
         return snaps
 
-    @staticmethod
-    def _has_parquet(d: str) -> bool:
-        """A committed run whose buckets held zero rows writes no data
-        files (only _SUCCESS) — legitimate (processed-empty buckets are
-        still committed for resume), but spark.read.parquet on such a
-        dir throws UNABLE_TO_INFER_SCHEMA; readers and the job's counter
-        re-read must skip it."""
-        import glob as _glob
-        return bool(_glob.glob(os.path.join(d, "**", "*.parquet"),
-                               recursive=True))
-
     def read_table(self, spark, as_of: int | None = None):
-        """Union of all committed run dirs (part_id recovered via hive
-        partition discovery within each run dir; run dirs are separate
-        roots, so they are read separately and unioned). Returns None if
-        nothing is committed.
+        """All committed runs, read in one scan (``part_id`` from the
+        hive path). Returns None if nothing is committed.
 
         ``as_of`` reads the table AS OF a snapshot id (Iceberg-style time
         travel): only runs committed at or before that snapshot are
@@ -194,11 +189,12 @@ class Catalog:
         historical view is exact.
 
         Additive schema evolution: runs committed by newer job versions
-        may carry EXTRA columns; ``allowMissingColumns`` fills them with
-        NULL for older runs (Iceberg add-column semantics). Dropping or
-        retyping a column is NOT supported — unionByName fails fast on a
-        type conflict rather than silently coercing."""
-        return self._union_runs(spark, self._snaps_as_of(as_of))
+        may carry EXTRA columns, which read NULL for older runs (Iceberg
+        add-column semantics). Dropping or retyping a column is NOT
+        supported — a type conflict between snapshots raises ValueError
+        rather than silently coercing."""
+        df = self._read_runs(spark, self._snaps_as_of(as_of))
+        return None if df is None else df.drop("run")
 
     def totals(self, gen: int | None = None,
                cumulative: bool = False) -> dict:
@@ -227,19 +223,20 @@ class Catalog:
         """(snapshot_id, run data dir) for the next commit."""
         cur = self.current_snapshot_id()
         sid = (cur + 1) if cur is not None else 1
-        run = f"run_{sid:06d}"
-        return sid, os.path.join(self.data_dir, run)
+        return sid, os.path.join(self.data_dir, f"run={sid:06d}")
 
     def commit(self, sid: int, buckets: list[int],
                manifests: dict[int, dict], totals: dict,
-               extra: dict | None = None) -> None:
+               extra: dict | None = None, schema=None) -> None:
         """Commit a run: per-bucket manifests, then snapshot, then CURRENT
         (atomic rename). ``manifests[b]`` = counters dict for bucket b;
         the caller names the counters, so a bucket it leaves out gets
-        an empty dict."""
+        an empty dict. ``schema`` (a StructType) is the schema the run
+        wrote; readers pin it instead of inferring it from the files.
+        Without it the snapshot records an empty schema."""
         mdir = os.path.join(self.manifest_dir, str(sid))
         os.makedirs(mdir, exist_ok=True)
-        run = f"run_{sid:06d}"
+        run = f"run={sid:06d}"
         for b in buckets:
             m = {"snapshot_id": sid, "bucket": int(b), "run": run,
                  "counters": manifests.get(int(b), {})}
@@ -251,6 +248,8 @@ class Catalog:
             "run": run,
             "buckets": sorted(int(b) for b in buckets),
             "totals": totals,
+            "schema": (schema.jsonValue() if schema is not None
+                       else {"type": "struct", "fields": []}),
             "committed_at_unix": int(time.time()),
             **(extra or {}),
         }
@@ -276,7 +275,7 @@ class Catalog:
         keep = {r for s in self.snapshots() for r in self._runs_of(s)}
         removed = []
         for name in os.listdir(self.data_dir):
-            if name.startswith("run_") and name not in keep:
+            if name.startswith("run=") and name not in keep:
                 shutil.rmtree(os.path.join(self.data_dir, name))
                 removed.append(name)
         return removed
@@ -316,6 +315,7 @@ class Catalog:
             # cumulative for the squashed span — documented in totals())
             "gen": max(int(s.get("gen", 0)) for s in cut),
             "totals": totals,
+            "schema": {"type": "struct", "fields": self._merged_fields(cut)},
             "squashed_of": [s["snapshot_id"] for s in cut],
             "committed_at_unix": int(time.time()),
         }
@@ -349,21 +349,19 @@ class Catalog:
         historical view resolves only among runs committed by then).
         Returns None if nothing is committed.
 
-        Scale: one window over the key — at 10^12 rows this shuffles on
-        url exactly once, the same cost Iceberg MoR pays in its
-        positional-delete merge; periodic ``expire_snapshots`` squashes
-        the chain so the union stays shallow."""
+        Scale: one scan of every visible run and one window over the key
+        — at 10^12 rows this shuffles on url exactly once, the same cost
+        Iceberg MoR pays in its positional-delete merge."""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
-        df = self._union_runs(spark, self._snaps_as_of(as_of),
-                              with_commit_seq=True)
+        df = self._read_runs(spark, self._snaps_as_of(as_of))
         if df is None:
             return None
         w = Window.partitionBy("url").orderBy(
-            F.col("warc_ts").desc(), F.col("_commit_seq").desc())
+            F.col("warc_ts").desc(), F.col("run").desc())
         return (df.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
-                .drop("_rn", "_commit_seq"))
+                .drop("_rn", "run"))
 
     # -- manifest-based bucket pruning --------------------------------------
 
@@ -371,22 +369,22 @@ class Catalog:
         """Bucket-filtered read with MANIFEST PRUNING (the Iceberg move:
         metadata decides which data files exist for a predicate before
         any file is opened): each snapshot records exactly which buckets
-        its run committed, so run dirs containing none of the requested
-        buckets are skipped entirely, and within surviving runs the
-        ``part_id`` hive-partition filter prunes directories at the scan.
-        At 10^12 rows with thousands of runs this turns a point lookup
-        ("give me bucket 17's pages") from a full-table union into a
-        handful of directory reads. Returns None if nothing matches.
+        its run committed, so only the run dirs of snapshots holding a
+        requested bucket enter the one scan, and within them the
+        ``part_id`` hive-partition filter prunes directories. At 10^12
+        rows with thousands of runs this turns a point lookup ("give me
+        bucket 17's pages") from a full-table scan into a handful of
+        directory reads. None if no snapshot holds a requested bucket.
 
-        Semantics are read_table's SNAPSHOT UNION: on a refreshed table
-        a re-crawled url appears once per committing run — compose with
-        a keep-latest window (read_latest's rule) when the caller wants
-        one row per url."""
+        Semantics are read_table's: on a refreshed table a re-crawled url
+        appears once per committing run — compose with a keep-latest
+        window (read_latest's rule) when the caller wants one row per
+        url."""
         from pyspark.sql import functions as F
         want = {int(b) for b in buckets}
         snaps = [sn for sn in self._snaps_as_of(as_of)
                  if want & set(sn["buckets"])]   # manifest pruning
-        df = self._union_runs(spark, snaps)
+        df = self._read_runs(spark, snaps)
         if df is None:
             return None
-        return df.where(F.col("part_id").isin(sorted(want)))
+        return df.where(F.col("part_id").isin(sorted(want))).drop("run")

@@ -58,20 +58,19 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
         gdf = group_df(buckets)
         gdf.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
         # a bucket with no rows is committed too (processed-empty), with
-        # every counter 0; a group with no rows writes no parquet files
+        # every counter 0; pinning the written schema skips a footer-
+        # inference job, and a group with no rows reads as zero rows
         per_bucket = {b: dict.fromkeys(counters, 0) for b in buckets}
-        if Catalog._has_parquet(run_dir):
-            # the schema is the one just written: pinning it skips the
-            # footer-inference job a plain read runs
-            rows = (spark.read.schema(gdf.schema).parquet(run_dir)
-                    .groupBy("part_id")
-                    .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
-                    .collect())
-            per_bucket.update({int(r.part_id): {k: int(r[k] or 0)
-                                                for k in counters}
-                               for r in rows})
+        rows = (spark.read.schema(gdf.schema).parquet(run_dir)
+                .groupBy("part_id")
+                .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
+                .collect())
+        per_bucket.update({int(r.part_id): {k: int(r[k] or 0)
+                                            for k in counters}
+                           for r in rows})
         totals = {k: sum(c[k] for c in per_bucket.values()) for k in counters}
-        cat.commit(sid, buckets, per_bucket, totals, extra=extra)
+        cat.commit(sid, buckets, per_bucket, totals, extra=extra,
+                   schema=gdf.schema)
         if fail_after_groups is not None and groups_run >= fail_after_groups:
             raise InjectedFailure(f"injected failure after {groups_run} groups")
     return len(chunks)
@@ -175,10 +174,12 @@ def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
         # (the OCR job's payload salting is for MB-scale page images)
         return sub.repartition(num_tasks, F.col("part_id"))
 
-    groups_run = _run_groups(spark, cat, remaining, groups, group_df,
-                             _CRAWL_COUNTERS, fail_after_groups,
-                             extra={"gen": gen})
-    pages.unpersist()
+    try:
+        groups_run = _run_groups(spark, cat, remaining, groups, group_df,
+                                 _CRAWL_COUNTERS, fail_after_groups,
+                                 extra={"gen": gen})
+    finally:
+        pages.unpersist()
     return {"resumed": bool(done), "groups_run": groups_run, "gen": gen,
             "buckets": remaining, "totals": cat.totals()}
 
