@@ -42,14 +42,6 @@ def test_minhash_lsh_finds_near_dups(docs):
                    for (a, b), j in pairs.items())
 
 
-def test_minhash_dedup_keep_first(docs):
-    kept = sorted(r.doc_id for r in
-                  dedup.minhash_dedup_keep_first(docs, threshold=0.5).collect())
-    # 1, 2, 6 dropped as near-dups of 0
-    assert 0 in kept and 1 not in kept and 2 not in kept and 6 not in kept
-    assert 3 in kept and 4 in kept and 5 in kept
-
-
 def test_simhash_semantics(spark, docs):
     sh = {r.doc_id: r.simhash for r in dedup.simhash64(docs).collect()}
     assert sh[0] == sh[1]                             # identical texts
@@ -120,7 +112,6 @@ def test_multimodal_meta_and_thumbnail(spark, weights):
         assert m.format == "tpage" and m.width == 256 and m.height == 256
         assert m.n_bytes == len(row["html"])
         assert 0 < m.mean_luma < 255
-    # format sniffing + stats (JVM-side)
     import pandas as pd
     mixed = pd.concat([pages[["url", "html"]], pd.DataFrame(
         [{"url": "x", "html": b"\x89PNG\r\n" + b"0" * 10},
@@ -130,10 +121,6 @@ def test_multimodal_meta_and_thumbnail(spark, weights):
          {"url": "r", "html": b"RIFFxxxxAVI LIST"},
          {"url": "h", "html": b"<html><body>y"},
          {"url": "v", "html": b"TPV1\x01\x00"}])])
-    stats = {r.format: r.n_payloads
-             for r in multimodal.media_stats(spark.createDataFrame(mixed)).collect()}
-    assert stats == {"tpage": 4, "png": 1, "pdf": 1, "wav": 1,
-                     "webp": 1, "riff": 1, "html": 1, "tpgv": 1}
     # PNG and JPEG decode for real now (ref/png.py, ref/jpeg.py): a
     # MALFORMED payload of either must come back as an error row, a VALID
     # jpeg as a real decode, and a format with no codec (audio) as a stub
@@ -154,11 +141,10 @@ def test_multimodal_meta_and_thumbnail(spark, weights):
     assert all(len(t.thumb) == 16 * 16 * 3 for t in thumbs)
 
 
-def test_both_sniffers_read_one_table(spark):
-    """``fixtures.sniff_format`` and the Catalyst ``sniff_format_col`` agree
-    on one payload per ``FORMATS`` row, a RIFF of another form, an
-    untagged MP3, a buffer shorter than every 4-byte magic, an empty one
-    and junk."""
+def test_both_sniffers_read_one_table():
+    """``fixtures.sniff_format`` names one payload per ``FORMATS`` row, a
+    RIFF of another form, an untagged MP3, a buffer shorter than every
+    4-byte magic, an empty one and junk."""
     from tuatara_spark import fixtures as fx
     from tuatara_spark.ops import audio
     cases = {}
@@ -173,8 +159,18 @@ def test_both_sniffers_read_one_table(spark):
     cases["junk"] = (b"\x00junk-not-a-format", "unknown")
     for key, (buf, name) in cases.items():
         assert fx.sniff_format(buf) == name, key
-    df = spark.createDataFrame(
-        [(k, buf) for k, (buf, _) in cases.items()], "url string, html binary")
-    got = {r.url: r.f for r in df.select(
-        "url", multimodal.sniff_format_col("html").alias("f")).collect()}
-    assert got == {k: fx.sniff_format(buf) for k, (buf, _) in cases.items()}
+
+
+def test_utf16_page_is_not_mp3():
+    """A bare 0xFF-led frame sync is MP3 only when its 4-byte header is
+    valid: a UTF-16LE page's BOM (ff fe 3c 00) is not, so the page sniffs
+    "unknown" with or without the BOM, while a real untagged MP3 (ff fb
+    90 00) still sniffs "mp3"."""
+    from tuatara_spark import fixtures as fx
+    from tuatara_spark.ops import audio
+    page = "<html><body>hello</body></html>".encode("utf-16-le")
+    assert fx.sniff_format(b"\xff\xfe" + page) == "unknown"
+    assert fx.sniff_format(page) == "unknown"
+    mp3 = audio.encode_mp3_fixture(n_frames=2)
+    assert mp3[:4] == b"\xff\xfb\x90\x00"
+    assert fx.sniff_format(mp3) == "mp3"

@@ -799,12 +799,7 @@ def test_mp3_header_walk_metadata(spark):
     assert got["a"].rms is None and got["a"].peak is None
     assert got["b"].format == "error"  # synced but no valid frame
 
-    from tuatara_spark.ops import multimodal as mm
-    df = spark.createDataFrame(
-        pd.DataFrame({"url": ["x"],
-                      "html": [audio.encode_mp3_fixture(2, id3_bytes=16)]}))
-    assert df.select(mm.sniff_format_col("html").alias("f")) \
-        .first().f == "mp3"
+    assert fx.sniff_format(audio.encode_mp3_fixture(2, id3_bytes=16)) == "mp3"
 
 
 def test_flac_ogg_header_metadata(spark):
@@ -842,10 +837,7 @@ def test_flac_ogg_header_metadata(spark):
     assert got["o"].format == "ogg_opus" and got["o"].n_channels == 1
     assert got["badf"].format == "error"
 
-    from tuatara_spark.ops import multimodal as mm
-    df = spark.createDataFrame(rows)
-    fmts = {r.url: r.f for r in df.select(
-        "url", mm.sniff_format_col("html").alias("f")).collect()}
+    fmts = {u: fx.sniff_format(b) for u, b in zip(rows["url"], rows["html"])}
     assert fmts["f"] == "flac" and fmts["v"] == "ogg"
 
 
@@ -901,18 +893,6 @@ def test_pagerank_hand_computed(spark):
     #   i2: a=638750000, b=c=575000000
     #   i3: a=638750000, b=c=150000000+(85*319375000)//100=421468750
     assert got == {"a": 638750000, "b": 421468750, "c": 421468750}
-
-
-def test_host_edges_reduction(spark):
-    from tuatara_spark.ops import linkgraph
-    links = spark.createDataFrame(
-        [("https://www.A.com/x", "https://b.com/y"),
-         ("https://a.com/z", "https://B.com/w"),      # same host edge
-         ("https://a.com/z", "https://a.com/self"),   # self loop
-         ("nota url", "https://b.com/")],             # unparseable src
-        "url string, href string")
-    got = {(r.src, r.dst) for r in linkgraph.host_edges(links).collect()}
-    assert got == {("a.com", "b.com")}
 
 
 def test_frontier_schedule_politeness(spark):

@@ -53,15 +53,6 @@ def test_salting_stays_jvm_side(spark, pages_parquet):
     assert "xxhash64" in plan.lower()
 
 
-def test_minhash_dedup_drop_join_is_broadcast(spark):
-    import pandas as pd
-    docs = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": range(20), "text": [f"doc number {i} body text" for i in range(20)]}))
-    kept = dedup.minhash_dedup_keep_first(docs, threshold=0.9)
-    plan = _explain(kept, mode="simple")
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def test_whole_stage_codegen_on_relational_ops(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     from tuatara_spark.ops import textstats

@@ -49,12 +49,3 @@ def test_annotated_dump_golden(weights, tmp_path):
         lines = f.read().splitlines()
     assert len(lines) == len(spans)
     assert lines[0].split("\t")[0] == spans[0]["text"]
-
-
-def test_ascii_page_shows_ink(weights):
-    img, _ = _page_and_spans(weights)
-    art = viz.ascii_page(img, width=64)
-    rows = art.splitlines()
-    assert len(rows) >= 10 and all(len(r) == 64 for r in rows)
-    assert "@" in art or "#" in art     # calibration mark is solid ink
-    assert " " in art                   # paper stays blank

@@ -33,7 +33,6 @@ from tuatara_spark.ops import dedup as _dd  # noqa: E402
 from tuatara_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 DEFAULT = ["minhash_lsh_pairs", "simhash_pairs", "tier_extract_docs",
            "langid_docs", "exact_substr_docs", "lm_tier_docs",
@@ -62,7 +61,7 @@ def main() -> None:
         if a.startswith("--repeats"):
             repeats = int(a.split("=")[1])
     names = args or DEFAULT
-    spark = get_spark("bench-decomp", cores=CPUS)
+    spark = get_spark("bench-decomp")
     spark.sparkContext.setLogLevel("ERROR")
     out = {}
     for name in names:

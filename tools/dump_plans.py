@@ -21,8 +21,7 @@ def main() -> None:
     tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     outdir = os.path.join(REPO_ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    spark = get_spark("plan-dump", cores=os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     reg = Q.queries()
     for name in names:

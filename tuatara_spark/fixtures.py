@@ -152,10 +152,9 @@ def decode_tpbit(buf: bytes) -> np.ndarray:
     return np.broadcast_to(plane[:, :, None], (h, w, 3))
 
 
-# Every payload format the engine recognizes, as (magic prefix, RIFF form
-# type at bytes 8:12 or None, name); the first matching row wins. The
-# Python sniffer and the Catalyst one (ops/multimodal.sniff_format_col)
-# both read this table.
+# Every payload format the engine recognizes by a fixed magic, as (magic
+# prefix, RIFF form type at bytes 8:12 or None, name); the first matching
+# row wins. ``sniff_format`` is the one reader.
 FORMATS = [
     (TPAGE_MAGIC, None, "tpage"),
     (TPBIT_MAGIC, None, "tpbit"),
@@ -171,9 +170,6 @@ FORMATS = [
     (b"MM\x00*", None, "tiff"),
     (b"%PDF-", None, "pdf"),
     (b"ID3", None, "mp3"),
-    # untagged MP3: an MPEG frame sync, 0xFF then a byte with its top 3
-    # bits set
-    *((bytes([0xFF, b]), None, "mp3") for b in range(0xE0, 0x100)),
     (b"fLaC", None, "flac"),
     (b"OggS", None, "ogg"),
     (b"<html", None, "html"),
@@ -181,12 +177,67 @@ FORMATS = [
 ]
 
 
+# MPEG audio frame header (ISO/IEC 11172-3, ISO/IEC 13818-3), read by the
+# untagged-MP3 check of ``sniff_format`` and the frame walk of ops/audio.py.
+# Bitrate tables (kbps), index 1..14 (0 = free, 15 = bad):
+# key (version group, layer); MPEG-2 and 2.5 share one LSF table where
+# layers II and III coincide.
+MP3_BITRATES = {
+    ("1", 1): (32, 64, 96, 128, 160, 192, 224, 256,
+               288, 320, 352, 384, 416, 448),
+    ("1", 2): (32, 48, 56, 64, 80, 96, 112, 128,
+               160, 192, 224, 256, 320, 384),
+    ("1", 3): (32, 40, 48, 56, 64, 80, 96, 112,
+               128, 160, 192, 224, 256, 320),
+    ("2", 1): (32, 48, 56, 64, 80, 96, 112, 128,
+               144, 160, 176, 192, 224, 256),
+    ("2", 2): (8, 16, 24, 32, 40, 48, 56, 64,
+               80, 96, 112, 128, 144, 160),
+    ("2", 3): (8, 16, 24, 32, 40, 48, 56, 64,
+               80, 96, 112, 128, 144, 160),
+}
+MP3_RATES = {"1": (44100, 48000, 32000), "2": (22050, 24000, 16000),
+             "2.5": (11025, 12000, 8000)}
+MP3_VERSIONS = {0b00: "2.5", 0b10: "2", 0b11: "1"}   # 0b01 reserved
+MP3_LAYERS = {0b01: 3, 0b10: 2, 0b11: 1}             # 0b00 reserved
+
+
+def mp3_header(b0: int, b1: int, b2: int, b3: int):
+    """Parse one 4-byte frame header → (version, layer, bitrate_kbps,
+    sample_rate, channels, frame_len, samples_per_frame) or None if the
+    bytes are not a valid header (the resync/stop signal)."""
+    if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
+        return None
+    version = MP3_VERSIONS.get((b1 >> 3) & 0b11)
+    layer = MP3_LAYERS.get((b1 >> 1) & 0b11)
+    if version is None or layer is None:
+        return None
+    br_idx, sr_idx = (b2 >> 4) & 0xF, (b2 >> 2) & 0b11
+    if br_idx in (0, 15) or sr_idx == 3:   # free-format / bad
+        return None
+    grp = "1" if version == "1" else "2"
+    bitrate = MP3_BITRATES[(grp, layer)][br_idx - 1] * 1000
+    rate = MP3_RATES[version][sr_idx]
+    pad = (b2 >> 1) & 1
+    channels = 1 if ((b3 >> 6) & 0b11) == 0b11 else 2   # 11 = mono
+    if layer == 1:
+        spf = 384
+        flen = (12 * bitrate // rate + pad) * 4
+    else:
+        spf = 576 if (layer == 3 and version != "1") else 1152
+        flen = spf // 8 * bitrate // rate + pad
+    return version, layer, bitrate // 1000, rate, channels, flen, spf
+
+
 def sniff_format(buf) -> str:
-    """Format name of a payload from ``FORMATS``, or ``"unknown"``."""
+    """Format name of a payload from ``FORMATS``, or ``"mp3"`` for an
+    untagged MP3 (a valid 4-byte frame header), or ``"unknown"``."""
     head = bytes(buf[:12])
     for magic, form, name in FORMATS:
         if head.startswith(magic) and (form is None or head[8:12] == form):
             return name
+    if len(head) >= 4 and mp3_header(*head[:4]) is not None:
+        return "mp3"
     return "unknown"
 
 

@@ -140,57 +140,9 @@ def decode_wav(buf) -> tuple[int, int, np.ndarray, str]:
 # polyphase filterbank/Huffman layers stay stubbed (no codec library in
 # this container) — but version/layer/bitrate/sample-rate/channel-mode,
 # frame count and duration come straight from the 4-byte headers, which
-# is what crawl-scale audio METADATA extraction needs.
-
-# bitrate tables (kbps), index 1..14 (0 = free, 15 = bad):
-# key (version group, layer); MPEG-2 and 2.5 share one LSF table where
-# layers II and III coincide.
-_MP3_BITRATES = {
-    ("1", 1): (32, 64, 96, 128, 160, 192, 224, 256,
-               288, 320, 352, 384, 416, 448),
-    ("1", 2): (32, 48, 56, 64, 80, 96, 112, 128,
-               160, 192, 224, 256, 320, 384),
-    ("1", 3): (32, 40, 48, 56, 64, 80, 96, 112,
-               128, 160, 192, 224, 256, 320),
-    ("2", 1): (32, 48, 56, 64, 80, 96, 112, 128,
-               144, 160, 176, 192, 224, 256),
-    ("2", 2): (8, 16, 24, 32, 40, 48, 56, 64,
-               80, 96, 112, 128, 144, 160),
-    ("2", 3): (8, 16, 24, 32, 40, 48, 56, 64,
-               80, 96, 112, 128, 144, 160),
-}
-_MP3_RATES = {"1": (44100, 48000, 32000), "2": (22050, 24000, 16000),
-              "2.5": (11025, 12000, 8000)}
-_MP3_VERSIONS = {0b00: "2.5", 0b10: "2", 0b11: "1"}   # 0b01 reserved
-_MP3_LAYERS = {0b01: 3, 0b10: 2, 0b11: 1}             # 0b00 reserved
-
-
-def _mp3_header(b0: int, b1: int, b2: int, b3: int):
-    """Parse one 4-byte frame header → (version, layer, bitrate_kbps,
-    sample_rate, channels, frame_len, samples_per_frame) or None if the
-    bytes are not a valid header (the resync/stop signal)."""
-    if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
-        return None
-    version = _MP3_VERSIONS.get((b1 >> 3) & 0b11)
-    layer = _MP3_LAYERS.get((b1 >> 1) & 0b11)
-    if version is None or layer is None:
-        return None
-    br_idx, sr_idx = (b2 >> 4) & 0xF, (b2 >> 2) & 0b11
-    if br_idx in (0, 15) or sr_idx == 3:   # free-format / bad
-        return None
-    grp = "1" if version == "1" else "2"
-    bitrate = _MP3_BITRATES[(grp, layer)][br_idx - 1] * 1000
-    rate = _MP3_RATES[version][sr_idx]
-    pad = (b2 >> 1) & 1
-    channels = 1 if ((b3 >> 6) & 0b11) == 0b11 else 2   # 11 = mono
-    if layer == 1:
-        spf = 384
-        flen = (12 * bitrate // rate + pad) * 4
-    else:
-        spf = 576 if (layer == 3 and version != "1") else 1152
-        flen = spf // 8 * bitrate // rate + pad
-    return version, layer, bitrate // 1000, rate, channels, flen, spf
-
+# is what crawl-scale audio METADATA extraction needs. The header parse
+# (``fixtures.mp3_header``) and its tables live next to the format sniffer,
+# which uses them to tell an untagged MP3 from other 0xFF-led bytes.
 
 def parse_mp3_meta(buf) -> dict:
     """Walk every frame header of an MP3 stream → metadata dict
@@ -210,8 +162,8 @@ def parse_mp3_meta(buf) -> dict:
     limit = min(len(data) - 4, pos + 4096)
     first = None
     while pos <= limit:
-        first = _mp3_header(data[pos], data[pos + 1],
-                            data[pos + 2], data[pos + 3])
+        first = fx.mp3_header(data[pos], data[pos + 1],
+                              data[pos + 2], data[pos + 3])
         if first is not None:
             break
         pos += 1
@@ -221,8 +173,8 @@ def parse_mp3_meta(buf) -> dict:
     n_frames = n_samples = 0
     dur_us = 0
     while pos + 4 <= len(data):
-        h = _mp3_header(data[pos], data[pos + 1],
-                        data[pos + 2], data[pos + 3])
+        h = fx.mp3_header(data[pos], data[pos + 1],
+                          data[pos + 2], data[pos + 3])
         if h is None:
             break
         _, _, _, h_rate, _, flen, spf = h
@@ -246,10 +198,10 @@ def encode_mp3_fixture(n_frames: int = 10, bitrate_kbps: int = 128,
     info/payload (header-walk-parseable; not audible audio). Optionally
     prepends an ID3v2 tag of ``id3_bytes`` padding."""
     grp = "1" if version == "1" else "2"
-    br_idx = _MP3_BITRATES[(grp, layer)].index(bitrate_kbps) + 1
-    sr_idx = _MP3_RATES[version].index(rate)
-    vbits = {v: k for k, v in _MP3_VERSIONS.items()}[version]
-    lbits = {v: k for k, v in _MP3_LAYERS.items()}[layer]
+    br_idx = fx.MP3_BITRATES[(grp, layer)].index(bitrate_kbps) + 1
+    sr_idx = fx.MP3_RATES[version].index(rate)
+    vbits = {v: k for k, v in fx.MP3_VERSIONS.items()}[version]
+    lbits = {v: k for k, v in fx.MP3_LAYERS.items()}[layer]
     b1 = 0xE0 | (vbits << 3) | (lbits << 1) | 1       # no CRC
     b2 = (br_idx << 4) | (sr_idx << 2)                # no padding
     b3 = (0b11 if channels == 1 else 0b00) << 6

@@ -265,16 +265,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
-def minhash_dedup_keep_first(df: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id", **kw) -> DataFrame:
-    """Drop near-duplicates: keep the smallest id of each near-dup pair
-    cluster (single-link via pair anti-join — a doc is dropped if it is the
-    larger side of any qualifying pair)."""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, **kw)
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(F.broadcast(drop), id_col, "left_anti")
-
-
 # --------------------------------------------------------------- SimHash ---
 
 def _simhash_sigs(df: DataFrame, text_col: str = "text",

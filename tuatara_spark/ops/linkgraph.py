@@ -1,5 +1,5 @@
-"""Link-graph operators: host graph construction and integer-exact
-PageRank (Page/Brin/Motwani/Winograd 1999, the public tech report).
+"""Link-graph operators: integer-exact PageRank (Page/Brin/Motwani/
+Winograd 1999, the public tech report).
 
 Reference parity: jackvial/tuatara has no graph layer (README.md:1-15);
 this extends the crawl front end with the standard web-corpus ranking
@@ -31,20 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 SCALE = 10 ** 9
-
-
-def host_edges(links: DataFrame, src_col: str = "url",
-               dst_col: str = "href") -> DataFrame:
-    """Distinct host-level (src, dst) edges from a page-level link
-    table (self-loops dropped) — the standard reduction before any
-    host-graph analytics."""
-    h = lambda c: F.regexp_replace(
-        F.regexp_extract(F.lower(F.col(c)), r"^https?://([^/?#]+)", 1),
-        r"^www\d*\.", "")
-    return (links.select(h(src_col).alias("src"), h(dst_col).alias("dst"))
-            .where((F.col("src") != "") & (F.col("dst") != "")
-                   & (F.col("src") != F.col("dst")))
-            .distinct())
 
 
 def pagerank(edges: DataFrame, iters: int = 3,

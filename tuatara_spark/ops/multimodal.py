@@ -1,7 +1,7 @@
 """Multimodal-column operators: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns; their formats are sniffed
-from the one table ``fixtures.FORMATS`` and images decode through
+by ``fixtures.sniff_format`` and images decode through
 ``fixtures.decode_payload``. Decode / feature-extract / resize /
 frame-sample / scene-cut run as Arrow-vectorized ``mapInPandas`` stages.
 TPAGE/TPBIT rasters, PNG, JPEG, GIF, BMP, TIFF, lossless WebP (ref/*.py)
@@ -17,40 +17,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (BinaryType, BooleanType, FloatType,
                                IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from tuatara_spark import fixtures as fx
-
-def sniff_format_col(col: str = "html") -> "F.Column":
-    """Format from magic bytes (``fixtures.FORMATS``, first match wins) —
-    native Catalyst, no UDF. A RIFF row also matches its form type at
-    offset 9 (WAVE → wav, WEBP → webp, anything else stays riff)."""
-    c = F.col(col)
-
-    def starts(magic: bytes, pos: int = 1) -> "F.Column":
-        return (F.hex(F.substring(c, pos, len(magic)))
-                == F.lit(magic.hex().upper()))
-
-    expr = F.lit("unknown")
-    for magic, form, name in reversed(fx.FORMATS):
-        cond = starts(magic)
-        if form is not None:
-            cond = cond & starts(form, 9)
-        expr = F.when(cond, F.lit(name)).otherwise(expr)
-    return expr
-
-
-def media_stats(df: DataFrame, col: str = "html") -> DataFrame:
-    """Per-format payload counts/bytes (JVM-side only)."""
-    return (df.select(sniff_format_col(col).alias("format"),
-                      F.length(col).alias("bytes"))
-            .groupBy("format")
-            .agg(F.count("*").alias("n_payloads"),
-                 F.sum("bytes").alias("total_bytes"))
-            .orderBy("format"))
 
 
 META_SCHEMA = StructType([

@@ -5,7 +5,7 @@ draws rotated-box polylines in green/thickness-2 on a canvas and shows it
 (utils.cpp:6-47 ``draw_bounding_boxes_on_background``), and its Python
 example draws axis-aligned span rectangles over the page plus a text panel
 and writes the combination (bindings/run_ocr.py:10-82). No GUI or image
-codec exists here, so output is PPM (P6 — trivially writable) or ASCII art;
+codec exists here, so output is PPM (P6 — trivially writable) or PNG;
 drawing is deterministic NumPy so overlays can be golden-tested.
 """
 
@@ -80,20 +80,3 @@ def dump_annotated(img: np.ndarray, spans, path: str) -> str:
             f.write(f"{text}\t{[round(float(v), 1) for v in bbox]}\n")
     return path
 
-
-def ascii_page(img: np.ndarray, width: int = 64) -> str:
-    """ASCII-art luminance dump (darker ink → denser glyph) — the quickest
-    look at 'what did the detector see' inside a terminal/log."""
-    g = np.asarray(img, dtype=np.float64)
-    if g.ndim == 3:
-        g = g.mean(axis=2)
-    h, w = g.shape
-    cols = min(width, w)
-    rows = max(1, int(h * cols / w / 2))  # terminal cells are ~2:1
-    ys = (np.arange(rows) * h // rows)
-    xs = (np.arange(cols) * w // cols)
-    sub = g[np.ix_(ys, xs)]
-    chars = np.asarray(list(" .:*#@"))
-    idx = np.clip(((255.0 - sub) / 256.0 * len(chars)).astype(int),
-                  0, len(chars) - 1)
-    return "\n".join("".join(row) for row in chars[idx])
