@@ -127,6 +127,139 @@ def test_run_extract_broadcasts_weights_once(spark, pages_path, tmp_path,
     assert len(made) == 2 and not made[1]._jbroadcast.isValid()
 
 
+def _manifests(cat):
+    """bucket → counters over every committed snapshot."""
+    return {m["bucket"]: m["counters"] for s in cat.snapshots()
+            for m in cat.manifests_for(s["snapshot_id"])}
+
+
+def test_group_loop_is_two_deep_and_commits_in_order(spark, pages_path,
+                                                     tmp_path, monkeypatch):
+    """Group k+1's frame is built before group k commits, never more than
+    two groups are uncommitted, and the snapshot chain and manifests are
+    those of a one-group run."""
+    events = []
+    real_distribute, real_new_run = pt.distribute, Catalog.new_run
+    real_commit = Catalog.commit
+
+    def distribute(df, num_tasks):
+        events.append("build")
+        return real_distribute(df, num_tasks)
+
+    def new_run(self):
+        events.append("new_run")
+        return real_new_run(self)
+
+    def commit(self, sid, *args, **kwargs):
+        real_commit(self, sid, *args, **kwargs)
+        events.append("commit")
+
+    monkeypatch.setattr(pt, "distribute", distribute)
+    monkeypatch.setattr(Catalog, "new_run", new_run)
+    monkeypatch.setattr(Catalog, "commit", commit)
+    out = str(tmp_path / "piped")
+    s = job.run_extract(spark, pages_path, out, num_buckets=8, groups=4)
+    assert s["groups_run"] == 4
+    builds = [i for i, e in enumerate(events) if e == "build"]
+    commits = [i for i, e in enumerate(events) if e == "commit"]
+    assert len(builds) == len(commits) == 4
+    assert all(builds[k + 1] < commits[k] for k in range(3))
+    uncommitted, most = 0, 0
+    for e in events:
+        uncommitted += {"new_run": 1, "commit": -1}.get(e, 0)
+        most = max(most, uncommitted)
+    assert most == 2 and uncommitted == 0
+
+    snaps = Catalog(out).snapshots()
+    assert [sn["snapshot_id"] for sn in snaps] == [1, 2, 3, 4]
+    assert [sn["parent_id"] for sn in snaps] == [None, 1, 2, 3]
+    assert [sn["buckets"] for sn in snaps] == [[0, 1], [2, 3], [4, 5],
+                                              [6, 7]]
+    monkeypatch.undo()
+    single = str(tmp_path / "single")
+    job.run_extract(spark, pages_path, single, num_buckets=8, groups=1)
+    assert _manifests(Catalog(out)) == _manifests(Catalog(single))
+
+
+def test_failed_group_cancels_cleans_up_and_resumes(spark, pages_path,
+                                                    tmp_path, monkeypatch):
+    """A group whose extraction raises on the executors (not the test
+    hook): the error propagates, the committed snapshots are a prefix of
+    the groups, no Spark job is left running, no run dir is left that
+    no snapshot references, the weights broadcast is destroyed and a
+    resume equals a single-shot run."""
+    real_distribute = pt.distribute
+    calls = []
+
+    def distribute(df, num_tasks):
+        calls.append(num_tasks)
+        out = real_distribute(df, num_tasks)
+        if len(calls) == 3:   # the third group's pages poison its tasks
+            out = out.withColumn("html", F.when(
+                F.col("url").isNotNull(),
+                F.raise_error(F.lit("poisoned group"))
+            ).otherwise(F.col("html")))
+        return out
+
+    sc_type = type(spark.sparkContext)
+    real_broadcast = sc_type.broadcast
+    made = []
+
+    def broadcast(sc, value):
+        made.append(real_broadcast(sc, value))
+        return made[-1]
+
+    monkeypatch.setattr(pt, "distribute", distribute)
+    monkeypatch.setattr(sc_type, "broadcast", broadcast)
+    out = str(tmp_path / "failed")
+    with pytest.raises(Exception, match="poisoned group"):
+        job.run_extract(spark, pages_path, out, num_buckets=8, groups=4)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # job ends are posted
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert len(made) == 1 and not made[0]._jbroadcast.isValid()
+    cat = Catalog(out)
+    snaps = cat.snapshots()
+    # groups 0 and 1 commit; group 2 fails, group 3 is cancelled
+    assert [sn["buckets"] for sn in snaps] == [[0, 1], [2, 3]]
+    runs = {n for n in os.listdir(cat.data_dir) if n.startswith("run=")}
+    assert runs == {sn["run"] for sn in snaps}
+
+    monkeypatch.undo()
+    s = job.run_extract(spark, pages_path, out, num_buckets=8, groups=4)
+    assert s["resumed"] and s["buckets"] == [4, 5, 6, 7]
+    single = str(tmp_path / "single")
+    job.run_extract(spark, pages_path, single, num_buckets=8, groups=1)
+    a = {(r.url, r.text, r.n_regions)
+         for r in cat.read_table(spark).collect()}
+    b = {(r.url, r.text, r.n_regions)
+         for r in Catalog(single).read_table(spark).collect()}
+    assert a == b and len(a) == 62
+    assert _manifests(cat) == _manifests(Catalog(single))
+
+
+def test_new_run_hands_out_each_id_once(tmp_path):
+    """Runs taken ahead of their commits get distinct ids; a fresh
+    Catalog continues from CURRENT; a resume after gc_uncommitted reuses
+    no committed id."""
+    root = str(tmp_path / "t")
+    cat = Catalog(root)
+    (s1, d1), (s2, d2) = cat.new_run(), cat.new_run()
+    assert (s1, s2) == (1, 2) and d1 != d2
+    cat.commit(s1, [0], {}, {"pages": 0})
+    assert cat.new_run()[0] == 3           # after CURRENT and after 2
+    again = Catalog(root)
+    assert again.new_run()[0] == 2         # continues from CURRENT (1)
+    cat.commit(s2, [1], {}, {"pages": 0})
+    s3, d3 = Catalog(root).new_run()
+    os.makedirs(d3)                        # a crashed, uncommitted run
+    assert Catalog(root).gc_uncommitted() == [os.path.basename(d3)]
+    resumed = Catalog(root)
+    committed = {sn["snapshot_id"] for sn in resumed.snapshots()}
+    assert committed == {1, 2}
+    assert resumed.new_run()[0] not in committed
+
+
 def test_gc_uncommitted(spark, pages_path, tmp_path):
     out = str(tmp_path / "gc")
     with pytest.raises(job.InjectedFailure):

@@ -3,12 +3,14 @@
 at several local[N] levels, as a single-box stand-in for N vs 4N
 executors.
 
-Usage: python tools/scaling.py <extract|warc|tier>
+Usage: python tools/scaling.py <extract|job|warc|tier>
 
 A pipeline is an input builder (paths of a 1× and a 4× input) and a
 chain function (run the job on one input, return its output row count):
-the OCR extraction job, the crawl front end over .warc.gz files, or the
-composed tier pipeline over a synthesized crawl table.
+the OCR extraction kernel, the shipped OCR job (``job.run_extract``:
+buckets, groups, commits) on the kernel's inputs, the crawl front end
+over .warc.gz files, or the composed tier pipeline over a synthesized
+crawl table.
 
 Method. Levels run from nproc down by factors of 4 (2, 8, 32 on 32
 cores; 1, 4 on 4). Each level gets a fresh session with the shuffle
@@ -99,6 +101,19 @@ def extract_chain(spark, path: str) -> int:
     from tuatara_spark import engine
     return engine.extract_df(spark.read.parquet(path),
                              weights=_weights()).count()
+
+
+def job_chain(spark, path: str) -> int:
+    """The shipped OCR job end to end with its defaults (salt shuffle
+    over 2 × cores tasks): bucket, extract, write, counter re-read and
+    commit, 64 buckets in 4 groups, into a fresh table root that is
+    deleted after the pass."""
+    import tempfile
+
+    from tuatara_spark import job
+    with tempfile.TemporaryDirectory(prefix="scaling-job-") as root:
+        return job.run_extract(spark, path, root, num_buckets=64,
+                               groups=4)["totals"]["pages"]
 
 
 def warc_inputs() -> tuple[str, str]:
@@ -194,6 +209,9 @@ PIPELINES = {
     "extract": Pipeline("Extraction scaling (TPBIT decode → detect → "
                         "recognize)", "pages", "scaling.json",
                         extract_inputs, extract_chain),
+    "job": Pipeline("Extraction job scaling (run_extract: bucket → salt "
+                    "shuffle → extract → write → counters → commit)",
+                    "pages", "job_scaling.json", extract_inputs, job_chain),
     "warc": Pipeline("Crawl front-end scaling (WARC parse → decode → "
                      "strip)", "pages", "warc_scaling.json",
                      warc_inputs, warc_chain),
@@ -220,12 +238,22 @@ def run_level(p: Pipeline, cores: int, small: str, big: str) -> list:
     return best
 
 
+def steal_s() -> float:
+    """Host-wide CPU steal seconds so far (/proc/stat; 0 if unreadable)."""
+    try:
+        with open("/proc/stat") as f:
+            return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+    except OSError:
+        return 0.0
+
+
 def measure(name: str) -> dict:
     from bench import cpu_calibration_ms
     p = PIPELINES[name]
     small, big = p.inputs()
     lv = levels()
     calib_before = cpu_calibration_ms()
+    steal_before = steal_s()
     best = {c: [float("inf"), float("inf"), 0, 0] for c in lv}
     for _ in range(ROUNDS):
         for c in lv:
@@ -237,7 +265,8 @@ def measure(name: str) -> dict:
             "levels": rows,
             "pairs": [pair(lo, hi) for lo, hi in zip(rows, rows[1:])],
             "cpu_calib_ms": calib_before,
-            "cpu_calib_ms_after": cpu_calibration_ms()}
+            "cpu_calib_ms_after": cpu_calibration_ms(),
+            "steal_s": round(steal_s() - steal_before, 1)}
 
 
 def render(report: dict) -> str:
@@ -250,8 +279,9 @@ def render(report: dict) -> str:
            f"{p.unit}, best of {report['rounds']} rounds × "
            f"{report['reps']} passes, shuffle width "
            f"{report['shuffle_partitions']}, cpu_calib "
-           f"{report['cpu_calib_ms']} → {report['cpu_calib_ms_after']} ms."
-           "\n\n",
+           f"{report['cpu_calib_ms']} → {report['cpu_calib_ms_after']} ms"
+           + (f", host steal {report['steal_s']} s" if "steal_s" in report
+              else "") + ".\n\n",
            f"| parallelism | T(1×) s | T(4×) s | fixed s | marginal "
            f"{p.unit}/s | raw {p.unit}/s (4×) |\n|---|---|---|---|---|---|\n"]
     out += [f"| local[{r['cores']}] | {r['t_1x']} | {r['t_4x']} | "

@@ -40,6 +40,7 @@ class Catalog:
         self.snapshot_dir = os.path.join(root, "_snapshots")
         for d in (self.data_dir, self.manifest_dir, self.snapshot_dir):
             os.makedirs(d, exist_ok=True)
+        self._last_sid = 0   # the last id new_run handed out
 
     # -- table config (pinned identity: bucket ids are only meaningful
     # relative to num_buckets; resuming with a different value would
@@ -220,9 +221,11 @@ class Catalog:
     # -- writes -------------------------------------------------------------
 
     def new_run(self) -> tuple[int, str]:
-        """(snapshot_id, run data dir) for the next commit."""
-        cur = self.current_snapshot_id()
-        sid = (cur + 1) if cur is not None else 1
+        """(snapshot_id, run data dir) for a commit to come: one more
+        than both CURRENT and the last id this object handed out, so runs
+        taken ahead of their commits never share an id."""
+        sid = max(self.current_snapshot_id() or 0, self._last_sid) + 1
+        self._last_sid = sid
         return sid, os.path.join(self.data_dir, f"run={sid:06d}")
 
     def commit(self, sid: int, buckets: list[int],

@@ -8,10 +8,12 @@ boilerplate strip → url-hash bucket. Both drop already-committed buckets
 one group loop, ``_run_groups``: write parquet hive-partitioned by bucket
 → re-read it for per-bucket counters → commit snapshot + manifests.
 
-Buckets are processed in ``groups`` micro-batches, one snapshot each, so a
-mid-job failure loses at most one group and the next invocation resumes
-from the last committed snapshot (north_rule). ``fail_after_groups`` is a
-test hook that simulates the crash.
+Buckets are split into ``groups`` groups, one snapshot each. The loop
+is pipelined two groups deep (the next group extracts while the current
+one is written and committed) and commits in group order, so a mid-job
+failure loses at most the two uncommitted groups and the next invocation
+resumes from the last committed snapshot (north_rule).
+``fail_after_groups`` is a test hook that simulates the crash.
 
 Usage:
   spark-submit --py-files tuatara_spark.zip -m tuatara_spark.job \
@@ -21,8 +23,16 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import shutil
+import threading
+import uuid
+from collections import deque
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import NamedTuple
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from tuatara_spark import engine, partitioning as pt
 from tuatara_spark import weights as wt
@@ -40,6 +50,16 @@ _CRAWL_COUNTERS = {"pages": "count(*)", "chars": "sum(length(main_text))",
                    "empties": "count_if(length(main_text) = 0)"}
 
 
+class _Group(NamedTuple):
+    """One submitted, not yet committed group of the pipeline."""
+    sid: int
+    run_dir: str
+    buckets: list[int]
+    tag: str
+    schema: StructType
+    future: Future
+
+
 def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
                 groups: int, group_df, counters: dict[str, str],
                 fail_after_groups: int | None,
@@ -48,15 +68,30 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
     ``groups`` chunks; per chunk write ``group_df(buckets)`` hive-
     partitioned by bucket into a fresh run dir, re-read the written rows
     for the per-bucket ``counters`` (no recompute of the UDF), and commit
-    one snapshot. Returns the number of groups run."""
+    one snapshot. Returns the number of groups run.
+
+    The loop is two groups deep: each group's write (its scan, shuffle
+    and extraction) and re-read run on a pool thread, so the next group
+    runs on the cores that this group's tail, re-read and commit leave
+    idle. Snapshot ids are taken and commits made on the calling thread,
+    strictly in group order, so the snapshot chain and the manifests are
+    those of a one-at-a-time loop. On any error the uncommitted groups'
+    Spark jobs are cancelled (by job tag), their threads joined and
+    their run dirs deleted before the error propagates."""
     group_size = max(1, -(-len(remaining) // groups))
-    chunks = [remaining[i:i + group_size]
+    chunks = [[int(b) for b in remaining[i:i + group_size]]
               for i in range(0, len(remaining), group_size)]
-    for groups_run, chunk in enumerate(chunks, 1):
-        sid, run_dir = cat.new_run()
-        buckets = [int(b) for b in chunk]
-        gdf = group_df(buckets)
+    sc = spark.sparkContext
+    # set on failure: a group whose job the tag cancel missed (it was
+    # between jobs) starts no further job
+    stop = threading.Event()
+
+    def write_and_count(run_dir: str, buckets: list[int], gdf: DataFrame):
+        if stop.is_set():
+            return None
         gdf.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
+        if stop.is_set():
+            return None
         # a bucket with no rows is committed too (processed-empty), with
         # every counter 0; pinning the written schema skips a footer-
         # inference job, and a group with no rows reads as zero rows
@@ -68,11 +103,53 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
         per_bucket.update({int(r.part_id): {k: int(r[k] or 0)
                                             for k in counters}
                            for r in rows})
-        totals = {k: sum(c[k] for c in per_bucket.values()) for k in counters}
-        cat.commit(sid, buckets, per_bucket, totals, extra=extra,
-                   schema=gdf.schema)
-        if fail_after_groups is not None and groups_run >= fail_after_groups:
-            raise InjectedFailure(f"injected failure after {groups_run} groups")
+        return per_bucket
+
+    pool = ThreadPoolExecutor(max_workers=2,
+                              thread_name_prefix="tuatara-group")
+    pending: deque[_Group] = deque()
+
+    def submit(buckets: list[int]) -> None:
+        sid, run_dir = cat.new_run()
+        gdf = group_df(buckets)
+        # the pool thread inherits this thread's local properties (job
+        # description, pool) plus the group's tag, captured at wrap time
+        tag = f"tuatara-group-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            target = inheritable_thread_target(spark)(write_and_count)
+        finally:
+            sc.removeJobTag(tag)
+        pending.append(_Group(sid, run_dir, buckets, tag, gdf.schema,
+                              pool.submit(target, run_dir, buckets, gdf)))
+
+    try:
+        for chunk in chunks[:2]:
+            submit(chunk)
+        for groups_run in range(1, len(chunks) + 1):
+            g = pending[0]
+            per_bucket = g.future.result()
+            totals = {k: sum(c[k] for c in per_bucket.values())
+                      for k in counters}
+            cat.commit(g.sid, g.buckets, per_bucket, totals, extra=extra,
+                       schema=g.schema)
+            pending.popleft()
+            if fail_after_groups is not None and \
+                    groups_run >= fail_after_groups:
+                raise InjectedFailure(
+                    f"injected failure after {groups_run} groups")
+            if groups_run + 1 < len(chunks):
+                submit(chunks[groups_run + 1])
+    except BaseException:
+        stop.set()
+        for g in pending:
+            sc.cancelJobsWithTag(g.tag)
+        pool.shutdown(wait=True, cancel_futures=True)
+        for g in pending:
+            shutil.rmtree(g.run_dir, ignore_errors=True)
+        raise
+    finally:
+        pool.shutdown()
     return len(chunks)
 
 
@@ -127,8 +204,8 @@ def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
     protocol as the OCR job: WARC containers → parse → charset
     sniff+decode → boilerplate strip → url-hash buckets → per-group
     snapshot commits with per-bucket lineage counters. A crash loses at
-    most one group; the next invocation resumes from the last committed
-    snapshot and reprocesses only uncommitted buckets.
+    most the two groups in flight; the next invocation resumes from the
+    last committed snapshot and reprocesses only uncommitted buckets.
 
     Note the resume unit is the url-hash BUCKET, not the container file:
     a container's records scatter across buckets, so a resumed run
