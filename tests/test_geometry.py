@@ -8,29 +8,23 @@ from hypothesis import strategies as st
 from tuatara_spark.ref import geometry as g
 from tuatara_spark.ref import resize as rz
 
+from geometry_refs import brute_ccl as _brute_ccl
+from geometry_refs import dilate_binary
+
 
 # ---------------------------------------------------------------- CCL ------
 
-def _brute_ccl(b):
-    """Reference BFS CCL, 4-connectivity, labels in raster-first-pixel order."""
-    b = np.asarray(b) != 0
-    H, W = b.shape
-    labels = np.zeros((H, W), dtype=np.int32)
-    nxt = 1
-    for r in range(H):
-        for c in range(W):
-            if b[r, c] and labels[r, c] == 0:
-                stack = [(r, c)]
-                labels[r, c] = nxt
-                while stack:
-                    y, x = stack.pop()
-                    for dy, dx in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-                        ny, nx_ = y + dy, x + dx
-                        if 0 <= ny < H and 0 <= nx_ < W and b[ny, nx_] and labels[ny, nx_] == 0:
-                            labels[ny, nx_] = nxt
-                            stack.append((ny, nx_))
-                nxt += 1
-    return nxt, labels
+def _ccl_with_stats(b):
+    """cv::connectedComponentsWithStats of one image through the batch CCL:
+    (n_labels, labels, stats) with stats rows [left, top, width, height,
+    area] for labels 1.. (row 0 unused)."""
+    runs = g.label_runs(np.asarray(b)[None])
+    stats = np.zeros((runs.n_comp + 1, 5), dtype=np.int64)
+    if runs.n_comp:
+        left, top, right, bottom, area = g.component_stats(runs)
+        stats[1:] = np.stack([left, top, right - left + 1,
+                              bottom - top + 1, area], axis=1)
+    return runs.n_comp + 1, g.paint_labels(runs, (1,) + b.shape)[0], stats
 
 
 @settings(max_examples=60, deadline=None)
@@ -40,7 +34,7 @@ def test_ccl_matches_bruteforce(seed, h, w, density):
     rng = np.random.default_rng(seed)
     b = (rng.random((h, w)) < density).astype(np.uint8)
     n1, l1 = _brute_ccl(b)
-    n2, l2, stats = g.connected_components_with_stats(b)
+    n2, l2, stats = _ccl_with_stats(b)
     assert n1 == n2
     assert (l1 == l2).all()  # identical label NUMBERING, not just partition
     # stats vs brute force
@@ -54,15 +48,15 @@ def test_ccl_matches_bruteforce(seed, h, w, density):
 
 
 def test_ccl_empty_and_full():
-    n, l, s = g.connected_components_with_stats(np.zeros((5, 5), np.uint8))
+    n, l, s = _ccl_with_stats(np.zeros((5, 5), np.uint8))
     assert n == 1 and (l == 0).all()
-    n, l, s = g.connected_components_with_stats(np.ones((5, 5), np.uint8))
+    n, l, s = _ccl_with_stats(np.ones((5, 5), np.uint8))
     assert n == 2 and (l == 1).all() and s[1, 4] == 25
 
 
 def test_ccl_diagonal_not_connected():
     b = np.eye(4, dtype=np.uint8)
-    n, l, _ = g.connected_components_with_stats(b)
+    n, l, _ = _ccl_with_stats(b)
     assert n == 5  # 4-connectivity: diagonals are separate components
 
 
@@ -72,7 +66,7 @@ def test_ccl_label_order_is_raster_first_pixel():
         [1, 0, 0, 1],
         [1, 0, 0, 0],
     ], np.uint8)
-    n, l, _ = g.connected_components_with_stats(b)
+    n, l, _ = _ccl_with_stats(b)
     assert n == 3
     assert l[0, 3] == 1  # first pixel in raster order
     assert l[1, 0] == 2
@@ -96,12 +90,42 @@ def _brute_dilate(img, k):
     return out
 
 
+def _row_extremes(img):
+    rows = np.flatnonzero(img.any(axis=1))
+    first = img[rows].argmax(axis=1)
+    last = img.shape[1] - 1 - img[rows, ::-1].argmax(axis=1)
+    return rows, first, last
+
+
 @settings(max_examples=40, deadline=None)
 @given(st.integers(0, 10**9), st.integers(1, 6))
 def test_dilate_matches_bruteforce(seed, k):
+    """Row-extreme dilation of several images in one call (ink inside
+    each image's ROI on a shared canvas, ROIs at the canvas border or
+    inside it) equals the row extremes of the brute-force dilated ROI
+    crop; k = 1 is the reference's niter = 0. The per-component 2-D
+    dilation that ``tests/geometry_refs.py`` keeps is checked too."""
     rng = np.random.default_rng(seed)
-    img = (rng.random((12, 15)) < 0.2).astype(np.uint8) * 255
-    assert (g.dilate_binary(img, k) == _brute_dilate(img, k)).all()
+    H, W = 14, 17
+    rois, want, src = [], [], []
+    for s in range(3):
+        x0, y0 = (0, 0) if s == 0 else rng.integers(0, 6, 2)
+        x1, y1 = (W, H) if s == 0 else (x0 + rng.integers(1, W - x0 + 1),
+                                        y0 + rng.integers(1, H - y0 + 1))
+        crop = (rng.random((y1 - y0, x1 - x0)) < 0.2).astype(np.uint8) * 255
+        crop[rng.integers(y1 - y0), rng.integers(x1 - x0)] = 255
+        rows, first, last = _row_extremes(crop)
+        src.append((np.full(rows.size, s), rows + y0, first + x0, last + x0))
+        dilated = _brute_dilate(crop, k)
+        assert (dilate_binary(crop, k) == dilated).all()  # the 2-D reference
+        rows, first, last = _row_extremes(dilated)
+        want += [(s, r + y0, f + x0, t + x0) for r, f, t in zip(rows, first, last)]
+        rois.append((x0, y0, x1, y1))
+    sets, rows, first, last = (np.concatenate(v) for v in zip(*src))
+    roi = tuple(np.array(v) for v in zip(*rois))
+    got = g.dilate_row_extremes(sets, rows, first, last, np.full(3, k), roi)
+    assert list(zip(*(v.tolist() for v in got))) == \
+        [tuple(int(x) for x in w) for w in want]
 
 
 def test_dilation_niter_integer_arithmetic():
@@ -114,6 +138,11 @@ def test_dilation_niter_integer_arithmetic():
 
 
 # --------------------------------------------------------- minAreaRect -----
+
+def _min_area_rect(points):
+    pts = np.asarray(points, dtype=np.float64)
+    return g.min_area_rects(pts, np.array([len(pts)]))[0]
+
 
 def _rect_area(corners):
     c = np.asarray(corners, dtype=np.float64)
@@ -141,7 +170,7 @@ def _brute_min_area(points):
 def test_min_area_rect_optimal_and_covering(seed, n):
     rng = np.random.default_rng(seed)
     pts = rng.integers(0, 50, size=(n, 2)).astype(np.float64)
-    corners = g.min_area_rect(pts).astype(np.float64)
+    corners = _min_area_rect(pts).astype(np.float64)
     # covering: every point inside rect (within eps)
     e1 = corners[1] - corners[0]
     e2 = corners[3] - corners[0]
@@ -160,17 +189,17 @@ def test_min_area_rect_optimal_and_covering(seed, n):
 
 
 def test_min_area_rect_degenerate():
-    one = g.min_area_rect(np.array([[3.0, 4.0]]))
+    one = _min_area_rect(np.array([[3.0, 4.0]]))
     assert (one == np.float32([3, 4])).all()
-    two = g.min_area_rect(np.array([[0.0, 0.0], [2.0, 2.0]]))
+    two = _min_area_rect(np.array([[0.0, 0.0], [2.0, 2.0]]))
     assert _rect_area(two) == 0.0
-    col = g.min_area_rect(np.array([[0, 0], [1, 1], [2, 2], [3, 3]], float))
+    col = _min_area_rect(np.array([[0, 0], [1, 1], [2, 2], [3, 3]], float))
     assert _rect_area(col) < 1e-9
 
 
 def test_min_area_rect_axis_aligned_square():
     pts = np.array([[0, 0], [0, 4], [4, 0], [4, 4], [2, 2]], float)
-    c = g.min_area_rect(pts)
+    c = _min_area_rect(pts)
     assert abs(_rect_area(c) - 16.0) < 1e-6
     assert set(map(tuple, np.round(c).astype(int).tolist())) == {
         (0, 0), (0, 4), (4, 0), (4, 4)}

@@ -743,6 +743,35 @@ def test_catalog_reads_start_no_spark_job(spark, tmp_path):
     assert [r.part_id for r in bucket.collect()] == [1, 1]
 
 
+@pytest.mark.parametrize("n_runs", [33, 40])
+def test_catalog_reads_past_listing_threshold_start_no_spark_job(
+        spark, tmp_path, n_runs):
+    """More run dirs than Spark's parallel-listing threshold (32): the
+    reads still list on the driver, read the same rows, and leave the
+    threshold as they found it."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(key)
+    cat = _one_row_runs(str(tmp_path / "t"), n_runs)
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-reads", "build the catalog reads")
+    try:
+        table = cat.read_table(spark)
+        latest = cat.read_latest(spark)
+        bucket = cat.read_buckets(spark, [1])
+        assert sc.statusTracker().getJobIdsForGroup("catalog-reads") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark.conf.get(key) == before
+    assert sorted((r.url, r.part_id) for r in table.collect()) == \
+        sorted((f"u{i % 3}", i % 4) for i in range(n_runs))
+    # each url's last run wins (one warc_ts everywhere)
+    assert sorted((r.url, r.part_id) for r in latest.collect()) == \
+        sorted((f"u{i % 3}", i % 4) for i in range(n_runs - 3, n_runs))
+    assert [r.part_id for r in bucket.collect()] == \
+        [1] * len(range(1, n_runs, 4))
+
+
 def test_schema_type_change_fails_fast(spark, tmp_path):
     """A column whose type differs between snapshots is refused, not
     coerced."""

@@ -113,6 +113,82 @@ def test_detection_maps_one_plane_equal_materialized(weights):
         np.testing.assert_array_equal(got, want)
 
 
+def _ink_formula(imgs, ink_w):
+    """``ink_map_u8`` as it was before the one-plane table: the channel
+    mix of three uint8 planes, per pixel."""
+    mixed = (imgs[..., 0] * ink_w[0] + imgs[..., 1] * ink_w[1]
+             + imgs[..., 2] * ink_w[2])
+    return (np.float32(1.0) - mixed / np.float32(255.0)).astype(np.float32)
+
+
+def _mean_pool(ink):
+    """The 2x2 pool as it was: reshape + mean(axis=(2, 4), dtype=float32)."""
+    n, h, w = ink.shape
+    return ink.reshape(n, h // 2, 2, w // 2, 2).mean(axis=(2, 4),
+                                                     dtype=np.float32)
+
+
+def _forward_formula(params, imgs, valid_hw=None):
+    """``detect_forward_u8`` on the two formulas above."""
+    ink = _ink_formula(imgs, params["ink_w"])
+    if valid_hw is not None:
+        ink[:, valid_hw[0]:, :] = 0
+        ink[:, :, valid_hw[1]:] = 0
+    half = _mean_pool(ink)
+    return np.stack([md.conv2d_same(half, params["k_text"]),
+                     md.conv2d_same(half, params["k_link"])], axis=-1)
+
+
+def test_ink_table_matches_formula_at_every_byte(weights):
+    levels = np.arange(256, dtype=np.uint8)
+    plane = np.broadcast_to(levels[None, :], (2, 256))
+    img = np.broadcast_to(plane[..., None], plane.shape + (3,))
+    assert img.strides[-1] == 0
+    got = md.ink_map_u8(img, weights["ink_w"])
+    assert got.dtype == np.float32 and got.flags.writeable
+    np.testing.assert_array_equal(got, _ink_formula(img, weights["ink_w"]))
+    np.testing.assert_array_equal(got, _ink_formula(np.array(img),
+                                                    weights["ink_w"]))
+
+
+@settings(max_examples=60, deadline=None)
+@given(seed=st.integers(0, 2 ** 32 - 1), n=st.integers(1, 4),
+       h=st.integers(1, 48), w=st.integers(1, 12),
+       scale=st.sampled_from([1e-3, 1.0, 255.0, 1e4]))
+def test_pool_matches_mean_on_random_maps(seed, n, h, w, scale):
+    """Random float32 maps of every even height and every width the
+    pad-to-32 canvas allows up to 384: the pool is the mean's bits."""
+    rng = np.random.default_rng(seed)
+    x = rng.random((n, 2 * h, 32 * w), dtype=np.float32) * np.float32(scale)
+    got = md.avg_pool_2x2(x)
+    assert got.dtype == np.float32
+    np.testing.assert_array_equal(got, _mean_pool(x))
+
+
+def test_forward_matches_formulas_on_golden_pages(weights):
+    """The golden pages (TPAGE, three planes) and their TPBIT encodings
+    (one plane) give the old formulas' score maps bit for bit."""
+    pages = fx.make_pages(24, seed=1234, n_large=1)
+    for payload in (fx.encode_tpage, fx.encode_tpbit):
+        images, errors = fx.decode_payloads(
+            [payload(fx.decode_payload(h)) for h in pages["html"]])
+        assert not any(errors)
+        for shape in {im.shape for im in images}:
+            group = [im for im in images if im.shape == shape]
+            proc = [rz.resize_aspect_ratio(rz.swap_channels(im),
+                                           pl.CANVAS_SIZE)
+                    for im in group]
+            stacked = np.stack([p[0] for p in proc])
+            if rz.one_plane(group[0]):
+                planes = stacked[..., 0]
+                stacked = np.broadcast_to(planes[..., None],
+                                          planes.shape + (3,))
+            valid = tuple(int(d * proc[0][1]) for d in shape[:2])
+            got = md.detect_forward_u8(weights, stacked, valid_hw=valid)
+            want = _forward_formula(weights, np.array(stacked), valid)
+            np.testing.assert_array_equal(got, want)
+
+
 def _detect_and_ink(pages, params):
     det = pl.detect_pages(pages, params)
     crops = [c for boxes, swapped in det

@@ -29,7 +29,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()   # one catalog read raises it at a time
 
 
 class Catalog:
@@ -163,7 +167,14 @@ class Catalog:
         """The run dirs of ``snaps`` as ONE scan with the merged schema
         plus ``run`` (each row's commit id) pinned: no footer-inference
         job, one relation however many runs, and an empty run reads as
-        no rows. None when ``snaps`` is empty."""
+        no rows. None when ``snaps`` is empty.
+
+        Building the scan lists the run dirs and their ``part_id`` dirs.
+        Spark lists a level with more than
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+        paths in a distributed job; the snapshots bound both fan-outs,
+        so the threshold is raised to that bound while this read is
+        built and the listing stays on the driver."""
         if not snaps:
             return None
         from pyspark.sql.types import StructType
@@ -171,8 +182,16 @@ class Catalog:
             *self._merged_fields(snaps),
             {"name": "run", "type": "integer", "nullable": True,
              "metadata": {}}]})
-        return (spark.read.schema(schema).option("basePath", self.data_dir)
-                .parquet(*self._run_dirs(snaps)))
+        dirs = self._run_dirs(snaps)
+        fan_out = max(len(dirs), *(len(sn["buckets"]) for sn in snaps))
+        with _LISTING_LOCK:
+            old = spark.conf.get(_LISTING_THRESHOLD)
+            spark.conf.set(_LISTING_THRESHOLD, str(max(int(old), fan_out)))
+            try:
+                return (spark.read.schema(schema)
+                        .option("basePath", self.data_dir).parquet(*dirs))
+            finally:
+                spark.conf.set(_LISTING_THRESHOLD, old)
 
     def _snaps_as_of(self, as_of: int | None):
         snaps = self.snapshots()

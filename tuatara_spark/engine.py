@@ -9,10 +9,14 @@ steps, the only implementation of each:
 * ``fixtures.decode_payloads`` — payload bytes → pages, one
   ``fixtures.decode_payload`` per row (a bad row becomes an error row);
 * ``ocr_batch`` — the batch kernel: shape-grouped detection as stacked
-  tensors, then ALL region crops of the batch through recognition as a
-  single matmul (strictly more vectorized than the reference's chunk-of-4
-  + 6-thread pool, tuatara.cpp:450-475, which Spark task parallelism
-  replaces), then reading-order assembly. The declared OCR queries
+  tensors — the forward pass (one-plane pages through a 256-entry ink
+  table) and then the box geometry of every component of the group
+  (CCL, segmap row extremes, dilation, hulls, calipers) in array
+  operations, no Python loop per component — then ALL region crops of
+  the batch through recognition as a single matmul (strictly more
+  vectorized than the reference's chunk-of-4 + 6-thread pool,
+  tuatara.cpp:450-475, which Spark task parallelism replaces), then
+  reading-order assembly. The declared OCR queries
   (``queries.q_ocr_extract_docs``) run the same kernel over rendered
   pages; ``ref/pipeline.extract_page`` is its per-page oracle.
 
@@ -76,8 +80,9 @@ def ocr_batch(params: dict, images: list, errors: list) -> list:
     page (``ref/pipeline.extract_page``'s output, byte-identical), or None
     where ``errors[i]`` is already set or detection fails here.
 
-    Detection runs shape-grouped (one stacked forward per page shape); if
-    the batch path throws (pathological page) it falls back to per-page
+    Detection runs shape-grouped (one stacked forward and one geometry
+    pass per page shape); if the batch path throws (pathological page)
+    it falls back to per-page
     detection, so one bad row gets ``errors[i] = "detect: …"`` instead of
     failing the task — at 10^12 rows a poison page must not kill the job.
     Recognition then runs over ALL crops of the batch in one forward pass.

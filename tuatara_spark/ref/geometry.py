@@ -15,11 +15,19 @@ delegates to, with the reference's exact call semantics:
 * bbox output with half-away-from-zero rounding (std::round, quirk Q7,
   tuatara.cpp:256-274).
 
+The detection stages work on many images at once — every page of a
+stack, every component of a batch — in array operations, with no Python
+loop over pages, components, runs or hull points; results are per image
+exactly the one-image primitives' (tests/geometry_refs.py keeps those as
+the reference).
+
 These are clean-room implementations from the public algorithm definitions;
 no reference code is copied (the reference delegates all of this to OpenCV).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -28,254 +36,274 @@ import numpy as np
 # Connected components (S9)
 # ---------------------------------------------------------------------------
 
-def connected_components_with_stats(binary: np.ndarray):
-    """4-connectivity CCL with stats, mirroring the reference's use of
-    cv::connectedComponentsWithStats (tuatara.cpp:142).
+class Runs(NamedTuple):
+    """The labelled foreground runs of an (N, H, W) stack, in raster order.
 
-    binary: 2D array, nonzero = foreground.
+    row: stack row (``page * H + page_row``); start / end: first and
+    one-past-last column; comp: 0-based component id, numbered in raster
+    order of each component's first pixel over the whole stack, so a
+    page's components are one consecutive block of ids (quirk Q5)."""
+    row: np.ndarray
+    start: np.ndarray
+    end: np.ndarray
+    comp: np.ndarray
+    n_comp: int
 
-    Returns (n_labels, labels, stats) where
-      labels: (H, W) int32, 0 = background; component labels 1..n_labels-1
-              are numbered in raster order of each component's first pixel
-              (quirk Q5 — downstream output order depends on this);
-      stats:  (n_labels, 5) int64 columns [left, top, width, height, area]
-              (same column meaning as cv::CC_STAT_*; row 0 = background, its
-              stats are not computed — the reference never reads them).
 
-    Implementation: run-length two-pass union-find (rows decomposed into
-    runs; runs unioned across adjacent rows on column-interval overlap).
-    Vectorized run extraction; the union sweep loops over runs, whose count
-    is small (O(#ink transitions), not O(pixels)).
-    """
+def find_runs(binary: np.ndarray):
+    """Horizontal runs of a 2-D mask (nonzero = foreground), raster order:
+    (row, start, end) int64, ``end`` exclusive."""
     b = np.asarray(binary) != 0
-    H, W = b.shape
-    # --- run extraction (vectorized) ---
-    padded = np.zeros((H, W + 2), dtype=np.int8)
-    padded[:, 1:-1] = b
-    d = np.diff(padded, axis=1)
-    starts = np.argwhere(d == 1)   # raster order (row-major)
-    ends_rc = np.argwhere(d == -1)
-    run_row = starts[:, 0].astype(np.int64)
-    run_s = starts[:, 1].astype(np.int64)        # inclusive start col
-    run_e = ends_rc[:, 1].astype(np.int64)       # exclusive end col
-    nruns = run_row.shape[0]
-    labels = np.zeros((H, W), dtype=np.int32)
-    if nruns == 0:
-        return 1, labels, np.zeros((1, 5), dtype=np.int64)
+    rows, w = b.shape
+    # a False column on both sides ends every run inside its own row
+    pad = np.zeros((rows, w + 2), dtype=bool)
+    pad[:, 1:-1] = b
+    flat = pad.ravel()
+    edge = np.flatnonzero(flat[1:] != flat[:-1]) + 1   # rise, fall, rise, …
+    starts, ends = edge[0::2], edge[1::2]
+    row = starts // (w + 2)
+    return row, starts - row * (w + 2) - 1, ends - row * (w + 2) - 1
 
-    # --- union-find across adjacent rows ---
-    parent = np.arange(nruns, dtype=np.int64)
 
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
+def label_runs(binary: np.ndarray) -> Runs:
+    """4-connectivity CCL of every page of an (N, H, W) stack at once,
+    mirroring the reference's cv::connectedComponentsWithStats
+    (tuatara.cpp:142) per page.
 
-    # per-row run index ranges
-    counts = np.bincount(run_row, minlength=H)
-    offsets = np.concatenate(([0], np.cumsum(counts)))
-    for r in range(1, H):
-        c0, c1 = offsets[r], offsets[r + 1]
-        if c1 == c0:
-            continue
-        p0, p1 = offsets[r - 1], offsets[r]
-        if p1 == p0:
-            continue
-        j = p0
-        for i in range(c0, c1):
-            si, ei = run_s[i], run_e[i]
-            # advance past prev-row runs ending at or before si (4-conn:
-            # strict column overlap required)
-            while j < p1 and run_e[j] <= si:
-                j += 1
-            k = j
-            while k < p1 and run_s[k] < ei:
-                ra, rb = find(i), find(k)
-                if ra != rb:
-                    # point larger root at smaller → root is the earliest
-                    # (raster-first) run of the component
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-                k += 1
-            if k > p0:
-                j = k - 1  # last overlapping run may also overlap next run
+    Two runs on adjacent rows of one page join when their column
+    intervals overlap (4-connectivity: strict overlap). The overlapping
+    runs above a run are a contiguous range, found for all runs with two
+    ``searchsorted`` calls. The union is min-label hooking with pointer
+    jumping: every round hooks each edge's larger root under its smaller
+    one, then compresses every path. Parents only ever point to smaller
+    run indices, so each component's final root is its raster-first run,
+    and numbering roots in run order numbers components in raster order
+    of their first pixel. The round count depends on the shapes, not on
+    how many runs or components there are."""
+    n_pages, h, w = binary.shape
+    row, start, end = find_runs(np.asarray(binary).reshape(n_pages * h, w))
+    n = row.size
+    if n == 0:
+        return Runs(row, start, end, np.zeros(0, dtype=np.int64), 0)
+    stride = w + 2                              # > any column, so keys sort
+    key_start, key_end = row * stride + start, row * stride + end
+    below = np.flatnonzero(row % h != 0)        # runs with a row above
+    above = (row[below] - 1) * stride
+    lo = np.searchsorted(key_end, above + start[below], side="right")
+    hi = np.searchsorted(key_start, above + end[below], side="left")
+    cnt = np.maximum(hi - lo, 0)
+    a = np.repeat(below, cnt)
+    b = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(cnt.sum())
+    parent = np.arange(n)
+    while a.size:
+        pa, pb = parent[a], parent[b]
+        live = pa != pb
+        a, b, pa, pb = a[live], b[live], pa[live], pb[live]
+        parent[np.maximum(pa, pb)] = np.minimum(pa, pb)
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+    is_root = parent == np.arange(n)
+    comp = (np.cumsum(is_root) - 1)[parent]
+    return Runs(row, start, end, comp, int(is_root.sum()))
 
-    # full path compression (vectorized fixpoint)
-    while True:
-        nxt = parent[parent]
-        if np.array_equal(nxt, parent):
-            break
-        parent = nxt
 
-    # --- label numbering: raster order of first pixel == root run index ---
-    roots, root_inverse = np.unique(parent, return_inverse=True)
-    # np.unique sorts roots ascending == raster order of first run ✓
-    n_comp = roots.shape[0]
-    run_labels = (root_inverse + 1).astype(np.int32)  # 1-based
+def component_stats(runs: Runs):
+    """Per component, in id order: (left, top, right, bottom, area),
+    int64, with ``top``/``bottom`` stack rows and ``right``/``bottom``
+    inclusive (cv::CC_STAT_* up to width = right - left + 1)."""
+    order = np.argsort(runs.comp, kind="stable")
+    counts = np.bincount(runs.comp, minlength=runs.n_comp)
+    seg = np.cumsum(counts) - counts
+    rows = runs.row[order]
+    left = np.minimum.reduceat(runs.start[order], seg)
+    right = np.maximum.reduceat(runs.end[order], seg) - 1
+    area = np.add.reduceat((runs.end - runs.start)[order], seg)
+    return left, rows[seg], right, np.maximum.reduceat(rows, seg), area
 
-    # --- paint label image (vectorized scatter) ---
-    lengths = run_e - run_s
-    total = int(lengths.sum())
-    flat_starts = run_row * W + run_s
-    cum = np.cumsum(lengths) - lengths
-    pos = (np.arange(total, dtype=np.int64)
-           - np.repeat(cum, lengths)
-           + np.repeat(flat_starts, lengths))
-    labels.ravel()[pos] = np.repeat(run_labels, lengths)
 
-    # --- stats (segmented min/max/sum via stable sort + reduceat) ---
-    order = np.argsort(run_labels, kind="stable")
-    sl = run_labels[order]
-    seg = np.flatnonzero(np.diff(sl)) + 1
-    seg_starts = np.concatenate(([0], seg))
-    left = np.minimum.reduceat(run_s[order], seg_starts)
-    right = np.maximum.reduceat(run_e[order], seg_starts) - 1
-    top = np.minimum.reduceat(run_row[order], seg_starts)
-    bot = np.maximum.reduceat(run_row[order], seg_starts)
-    area = np.add.reduceat(lengths[order], seg_starts)
-    stats = np.zeros((n_comp + 1, 5), dtype=np.int64)
-    stats[1:, 0] = left
-    stats[1:, 1] = top
-    stats[1:, 2] = right - left + 1
-    stats[1:, 3] = bot - top + 1
-    stats[1:, 4] = area
-    return n_comp + 1, labels, stats
+def comp_at(runs: Runs, width: int, rows: np.ndarray,
+            cols: np.ndarray) -> np.ndarray:
+    """Component id of each foreground pixel (stack row, column)."""
+    stride = width + 2
+    run = np.searchsorted(runs.row * stride + runs.start,
+                          rows * stride + cols, side="right") - 1
+    return runs.comp[run]
+
+
+def paint_labels(runs: Runs, shape: tuple[int, int, int]) -> np.ndarray:
+    """The (N, H, W) int32 label image: 0 = background, and each page's
+    components numbered 1.. in raster order of their first pixel."""
+    n_pages, h, w = shape
+    labels = np.zeros(n_pages * h * w, dtype=np.int32)
+    if runs.row.size == 0:
+        return labels.reshape(shape)
+    page = runs.row // h
+    first = runs.comp[np.searchsorted(page, page)]   # page's first comp id
+    lengths = runs.end - runs.start
+    pos = (np.arange(lengths.sum())
+           + np.repeat(runs.row * w + runs.start - (np.cumsum(lengths) - lengths),
+                       lengths))
+    labels[pos] = np.repeat(runs.comp - first + 1, lengths)
+    return labels.reshape(shape)
 
 
 # ---------------------------------------------------------------------------
 # Dilation (S13)
 # ---------------------------------------------------------------------------
 
-def dilate_binary(img: np.ndarray, ksize: int) -> np.ndarray:
-    """Binary dilation with a ksize×ksize rect kernel, OpenCV default anchor
-    (k//2, k//2): dst(p) = max over offsets o in [-(k//2), k-1-k//2] of
-    src(p+o), out-of-bounds treated as 0 (equivalent to cv::dilate's
-    -inf constant border for non-negative data). Mirrors tuatara.cpp:173-174.
-
-    Separable sliding max via shift-accumulate (k is small: the reference's
-    niter is O(sqrt(component size))).
-    """
-    k = int(ksize)
-    if k <= 1:
-        return img.copy()
-    a = k // 2
-    src = np.asarray(img)
-    H, W = src.shape
-    # rows pass
-    tmp = np.zeros_like(src)
-    for o in range(-a, k - a):
-        lo_d, hi_d = max(0, -o), min(H, H - o)
-        lo_s, hi_s = max(0, o), min(H, H + o)
-        np.maximum(tmp[lo_d:hi_d], src[lo_s:hi_s], out=tmp[lo_d:hi_d])
-    out = np.zeros_like(src)
-    for o in range(-a, k - a):
-        lo_d, hi_d = max(0, -o), min(W, W - o)
-        lo_s, hi_s = max(0, o), min(W, W + o)
-        np.maximum(out[:, lo_d:hi_d], tmp[:, lo_s:hi_s], out=out[:, lo_d:hi_d])
-    return out
+def dilation_niter(size, w, h):
+    """Size-adaptive dilation radius, quirk Q2: the ×2 is INSIDE the sqrt.
+    The reference's ``size * min(w, h) / (w * h) * 2`` (tuatara.cpp:166)
+    is all-int C++ arithmetic — left to right, integer division — and only
+    its result goes through ``std::sqrt``, truncated back to int.
+    Elementwise over arrays."""
+    v = size * np.minimum(w, h) // (w * h) * 2
+    return np.sqrt(v).astype(np.int64)
 
 
-def dilation_niter(size: int, w: int, h: int) -> int:
-    """Size-adaptive dilation radius, quirk Q2: the ×2 is INSIDE the sqrt —
-    ``int(sqrt(size * min(w,h) / (w*h) * 2))`` (tuatara.cpp:166; C++ int
-    arithmetic: size*min(w,h) is integer, / (w*h) is integer division before
-    the float sqrt? No — C++ promotes: size*min(w,h)/(w*h)*2 is ALL integer
-    arithmetic (int*int/int*int), THEN sqrt of the int result).
-    """
-    # C++: all-int expression evaluated left-to-right with integer division,
-    # then std::sqrt(int) -> double, truncated back to int.
-    v = size * min(w, h) // (w * h) * 2
-    return int(np.sqrt(v))
+def dilate_row_extremes(sets, rows, first, last, ksize, roi):
+    """Binary dilation with a ksize×ksize rect kernel and OpenCV's default
+    anchor ``a = ksize // 2`` inside an ROI (cv::dilate, tuatara.cpp:173-174),
+    on row extremes instead of pixels, for many images at once.
+
+    ``sets[i], rows[i], first[i], last[i]``: image ``sets[i]`` has ink on
+    row ``rows[i]`` from column ``first[i]`` to ``last[i]`` (its row
+    extremes, inclusive). ``ksize`` and ``roi = (x0, y0, x1, y1)`` (ends
+    exclusive) are per image. A kernel of size k lights, for a source
+    pixel q, every destination within [q - (k-1-a), q + a] on both axes,
+    so a source row's extremes light rows [r - (k-1-a), r + a] from
+    column first - (k-1-a) to last + a, clipped to the ROI; a destination
+    row's extremes are the min / max over the source rows that light it.
+    Returns the dilated images' row extremes ``(sets, rows, first, last)``,
+    ordered by image, then row."""
+    x0, y0, x1, y1 = roi
+    k = ksize[sets]
+    back = k - 1 - k // 2
+    src = np.repeat(np.arange(rows.size), k)
+    dst_set = sets[src]
+    dst_row = (rows - back)[src] + (np.arange(src.size)
+                                    - np.repeat(np.cumsum(k) - k, k))
+    ok = (dst_row >= y0[dst_set]) & (dst_row < y1[dst_set])
+    src, dst_set, dst_row = src[ok], dst_set[ok], dst_row[ok]
+    heights = y1 - y0
+    base = np.cumsum(heights) - heights
+    slot = base[dst_set] + dst_row - y0[dst_set]
+    lo = np.full(heights.sum(), np.iinfo(np.int64).max)
+    hi = np.full(heights.sum(), -1)
+    np.minimum.at(lo, slot, np.maximum((first - back)[src], x0[dst_set]))
+    np.maximum.at(hi, slot, np.minimum((last + k // 2)[src], x1[dst_set] - 1))
+    lit = np.flatnonzero(hi >= 0)
+    out_set = np.repeat(np.arange(heights.size), heights)[lit]
+    return out_set, lit - base[out_set] + y0[out_set], lo[lit], hi[lit]
 
 
 # ---------------------------------------------------------------------------
 # Min-area rotated rect (S14) — convex hull + rotating calipers
 # ---------------------------------------------------------------------------
 
-def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew monotone-chain convex hull, CCW, no collinear points kept.
+def convex_hulls(points: np.ndarray, counts: np.ndarray):
+    """Andrew's monotone-chain convex hull of many point sets at once:
+    CCW, no collinear points kept, each hull starting at its set's
+    lexicographically smallest (x, y) — Andrew's ``lower[:-1] +
+    upper[:-1]``, vertex for vertex.
 
-    points: (N, 2) array of (x, y). Returns (H, 2) float64.
+    points: (P, 2), the sets one after another; counts: (C,) set sizes,
+    each ≥ 1. Returns (hull (Q, 2) float64, hull sizes (C,)).
 
-    Implementation notes: lexicographic dedup via np.lexsort (equivalent to
-    np.unique(axis=0) but ~5x faster), and the chain loop runs on plain
-    Python floats — same float64 IEEE arithmetic, far less per-element
-    overhead than NumPy scalars for the small point sets this sees.
-    """
-    arr = np.asarray(points, dtype=np.float64)
-    order = np.lexsort((arr[:, 1], arr[:, 0]))
-    srt = arr[order]
-    keep = np.ones(srt.shape[0], dtype=bool)
-    keep[1:] = (srt[1:] != srt[:-1]).any(axis=1)
-    pts = srt[keep]
-    n = pts.shape[0]
-    if n <= 2:
-        return pts
-    seq = [(float(x), float(y)) for x, y in pts]
+    Each set is sorted and deduplicated, then laid out as its lower chain
+    (sorted order) followed by its upper chain (reversed). Every round
+    drops, in all chains at once, each interior point that makes a
+    non-left turn with its current neighbours: such a point lies on or
+    above the segment between two points of its set, so it is no strict
+    hull vertex, and a chain with no such point left is strictly convex
+    and holds every strict vertex — the unique chain Andrew's sequential
+    pops end on."""
+    pts = np.asarray(points, dtype=np.float64)
+    n_sets = counts.size
+    sets = np.repeat(np.arange(n_sets), counts)
+    order = np.lexsort((pts[:, 1], pts[:, 0], sets))
+    sets, x, y = sets[order], pts[order, 0], pts[order, 1]
+    new = np.ones(x.size, dtype=bool)
+    new[1:] = (sets[1:] != sets[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    sets, x, y = sets[new], x[new], y[new]
+    n = np.bincount(sets, minlength=n_sets)
+    off = np.cumsum(n) - n
+    n2 = 2 * n
+    j = np.arange(n2.sum()) - np.repeat(np.cumsum(n2) - n2, n2)
+    owner = np.repeat(np.arange(n_sets), n2)
+    upper = j >= n[owner]
+    idx = off[owner] + np.where(upper, n2[owner] - 1 - j, j)
+    chain = 2 * owner + upper
+    while True:
+        px, py = x[idx], y[idx]
+        turn = ((px[1:-1] - px[:-2]) * (py[2:] - py[:-2])
+                - (py[1:-1] - py[:-2]) * (px[2:] - px[:-2]))
+        drop = ((turn <= 0) & (chain[1:-1] == chain[:-2])
+                & (chain[1:-1] == chain[2:]))
+        if not drop.any():
+            break
+        keep = np.ones(idx.size, dtype=bool)
+        keep[1:-1] = ~drop
+        idx, chain = idx[keep], chain[keep]
+    # drop each chain's last point; a one-point set keeps its lower one
+    keep = np.zeros(idx.size, dtype=bool)
+    keep[:-1] = chain[1:] == chain[:-1]
+    owner = chain // 2
+    keep |= (n[owner] == 1) & (chain % 2 == 0)
+    idx, owner = idx[keep], owner[keep]
+    hull = np.stack([x[idx], y[idx]], axis=1)
+    return hull, np.bincount(owner, minlength=n_sets)
 
-    def half(s):
-        out: list[tuple[float, float]] = []
-        for px, py in s:
-            while len(out) >= 2:
-                ox, oy = out[-2]
-                ax, ay = out[-1]
-                if (ax - ox) * (py - oy) - (ay - oy) * (px - ox) <= 0:
-                    out.pop()
-                else:
-                    break
-            out.append((px, py))
-        return out
 
-    lower = half(seq)
-    upper = half(seq[::-1])
-    return np.asarray(lower[:-1] + upper[:-1], dtype=np.float64)
-
-
-def min_area_rect(points: np.ndarray) -> np.ndarray:
-    """Minimum-area bounding rectangle of a point set (cv::minAreaRect
-    semantics as used at tuatara.cpp:179 and 248). Returns the 4 corners,
-    (4, 2) float32.
+def min_area_rects(points: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Minimum-area bounding rectangle of each of many point sets
+    (cv::minAreaRect semantics as used at tuatara.cpp:179 and 248).
+    points / counts as ``convex_hulls``. Returns (C, 4, 2) float32 corners.
 
     Corner order is a deterministic function of the winning hull edge
     (NOT OpenCV's bl/tl/tr/br convention); every reference use site only
     takes min/max over the corners or an axis-aligned bounding rect, so
     corner order never affects output (see tuatara.cpp:256-274, 416).
 
-    Rotating calipers over hull-edge directions; ties broken by first
-    (lowest-index) edge with strictly smaller area — deterministic.
-    """
-    pts = np.asarray(points, dtype=np.float64)
-    if pts.ndim != 2 or pts.shape[1] != 2:
-        raise ValueError("points must be (N, 2)")
-    hull = convex_hull(pts)
-    h = hull.shape[0]
-    if h == 1:
-        return np.repeat(hull, 4, axis=0).astype(np.float32)
-    if h == 2:
-        p0, p1 = hull
-        return np.asarray([p0, p1, p1, p0], dtype=np.float32)
-    edges = np.roll(hull, -1, axis=0) - hull          # (h, 2)
+    Rotating calipers over hull-edge directions; ties broken by the first
+    (lowest-index) edge with strictly smaller area. Every hull of one size
+    goes through one stacked matmul: per hull it is the same BLAS call, on
+    the same shapes, as a one-hull calipers — so the projections, and with
+    them the equal-area tie-breaks, are bit for bit a one-hull pass's."""
+    hull, sizes = convex_hulls(points, counts)
+    start = np.cumsum(sizes) - sizes
+    # every hull edge at once: vertex i to the next vertex of its hull
+    nxt = np.arange(1, hull.shape[0] + 1)
+    nxt[start + sizes - 1] = start
+    edges = hull[nxt] - hull
     lens = np.hypot(edges[:, 0], edges[:, 1])
-    good = lens > 0
-    dirs = edges[good] / lens[good, None]             # (m, 2) unit dirs
-    normals = np.stack([-dirs[:, 1], dirs[:, 0]], 1)  # (m, 2)
-    pd = dirs @ hull.T                                # (m, h) projections
-    pn = normals @ hull.T
-    d0, d1 = pd.min(1), pd.max(1)
-    n0, n1 = pn.min(1), pn.max(1)
-    areas = (d1 - d0) * (n1 - n0)
-    i = int(np.argmin(areas))                         # first strict min
-    d, nrm = dirs[i], normals[i]
-    corners = np.asarray([
-        d * d0[i] + nrm * n0[i],
-        d * d1[i] + nrm * n0[i],
-        d * d1[i] + nrm * n1[i],
-        d * d0[i] + nrm * n1[i],
-    ], dtype=np.float32)
-    return corners
+    dirs = edges / np.where(lens > 0, lens, 1)[:, None]   # 0 only if size 1
+    normals = np.stack([-dirs[:, 1], dirs[:, 0]], axis=1)
+    ext = np.zeros((hull.shape[0], 4))   # per edge: min/max along, across
+    for size in np.unique(sizes[sizes >= 3]):
+        idx = start[sizes == size, None] + np.arange(size)      # (S, h)
+        pts_t = hull[idx].transpose(0, 2, 1)
+        pd, pn = dirs[idx] @ pts_t, normals[idx] @ pts_t         # (S, h, h)
+        ext[idx] = np.stack([pd.min(2), pd.max(2), pn.min(2), pn.max(2)], -1)
+    d0, d1, n0, n1 = ext.T
+    area = (d1 - d0) * (n1 - n0)
+    # the first edge of each hull whose area is its hull's minimum
+    low = area == np.repeat(np.minimum.reduceat(area, start), sizes)
+    best = np.minimum.reduceat(np.where(low, np.arange(area.size), area.size),
+                               start)
+    # corners (d0, n0), (d1, n0), (d1, n1), (d0, n1) along (dir, normal)
+    along, across = ext[best][:, [0, 1, 1, 0]], ext[best][:, [2, 2, 3, 3]]
+    out = (dirs[best, None] * along[..., None]
+           + normals[best, None] * across[..., None]).astype(np.float32)
+    if (sizes < 3).any():
+        p0, p1 = hull[start], hull[np.minimum(start + 1, hull.shape[0] - 1)]
+        out[sizes == 1] = p0[sizes == 1, None]
+        two = sizes == 2
+        out[two] = np.stack([p0[two], p1[two], p1[two], p0[two]], axis=1)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -318,28 +346,27 @@ def canonicalize_corners(corners: np.ndarray) -> np.ndarray:
 # Rescale, bounding rect, bbox output (S17, S18 helper, S26)
 # ---------------------------------------------------------------------------
 
-def adjust_result_coordinates(corner_list: list[np.ndarray], ratio_w: float,
-                              ratio_h: float, ratio_net: float = 2.0) -> list[np.ndarray]:
+def adjust_result_coordinates(corner_list, ratio_w: float, ratio_h: float,
+                              ratio_net: float = 2.0) -> list[np.ndarray]:
     """Scale box corners from half-res heatmap space back to source-image
     space and re-fit a min-area rect over the scaled corners
-    (adjust_result_coordinates, tuatara.cpp:236-253).
+    (adjust_result_coordinates, tuatara.cpp:236-253). ``corner_list``: a
+    list of (4, 2) corner arrays or one (B, 4, 2) array.
 
     Fast path: with equal x/y ratios (always true in the reference —
     tuatara.cpp:360-361 sets both to 1/target_ratio) a uniformly scaled
     rectangle IS its own min-area rect, so the re-fit is the identity on
     the corner set and is skipped; every reference consumer of the result
     takes only corner min/max (crop boundingRect at 416, bbox output at
-    256-274), so outputs are unchanged. Unequal ratios take the full
-    re-fit path.
+    256-274), so outputs are unchanged. Unequal ratios re-fit every box
+    in one ``min_area_rects`` pass.
     """
-    uniform = ratio_w == ratio_h
-    out = []
-    for corners in corner_list:
-        c = np.asarray(corners, dtype=np.float64).copy()
-        c[:, 0] *= ratio_w * ratio_net
-        c[:, 1] *= ratio_h * ratio_net
-        out.append(c.astype(np.float32) if uniform else min_area_rect(c))
-    return out
+    c = np.array(corner_list, dtype=np.float64).reshape(-1, 4, 2)
+    c[..., 0] *= ratio_w * ratio_net
+    c[..., 1] *= ratio_h * ratio_net
+    if ratio_w == ratio_h:
+        return list(c.astype(np.float32))
+    return list(min_area_rects(c.reshape(-1, 2), np.full(len(c), 4)))
 
 
 def bounding_rect(corners: np.ndarray) -> tuple[int, int, int, int]:

@@ -69,16 +69,39 @@ def conv2d_same(x: np.ndarray, k: np.ndarray) -> np.ndarray:
     return out
 
 
+def avg_pool_2x2(x: np.ndarray) -> np.ndarray:
+    """2x2 average-pool downsample of (N, H, W) float32 maps to heatmap
+    resolution: each block summed in the order NumPy's reshape +
+    ``mean(axis=(2, 4), dtype=float32)`` adds it on maps whose width is a
+    multiple of 32 (every padded canvas; tests/test_one_plane.py pins the
+    bits), without that strided reduction."""
+    return (((x[:, 0::2, 0::2] + x[:, 0::2, 1::2])
+             + (x[:, 1::2, 0::2] + x[:, 1::2, 1::2])) / np.float32(4))
+
+
+def _ink(imgs: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
+    mixed = (imgs[..., 0] * ink_w[0] + imgs[..., 1] * ink_w[1]
+             + imgs[..., 2] * ink_w[2])
+    return (np.float32(1.0) - mixed / np.float32(255.0)).astype(np.float32)
+
+
 def ink_map_u8(imgs: np.ndarray, ink_w: np.ndarray) -> np.ndarray:
     """Fused S4 + 1x1 ink conv, the first layer of both nets:
     (N, H, W, 3) uint8 → (N, H, W) float32 ink = 1 − channel mix / 255.
     The channel mix commutes with the reference's ÷255 normalize, so the
     NCHW float tensor is never built. Symmetric channel weights make the
     ink invariant to the reference's BGR/RGB swaps (quirk Q3) while the
-    swap stages themselves stay in the pipeline."""
-    mixed = (imgs[..., 0] * ink_w[0] + imgs[..., 1] * ink_w[1]
-             + imgs[..., 2] * ink_w[2])
-    return (np.float32(1.0) - mixed / np.float32(255.0)).astype(np.float32)
+    swap stages themselves stay in the pipeline.
+
+    One-plane input (channel stride 0: every channel is the same byte)
+    looks each pixel up in a 256-entry table that the same expression
+    builds from every byte value — the same float32 operations per value,
+    so the same bits, without the three-plane arithmetic per pixel."""
+    if imgs.strides[-1] == 0:
+        levels = np.arange(256, dtype=np.uint8)
+        return _ink(np.broadcast_to(levels[:, None], (256, 3)),
+                    ink_w)[imgs[..., 0]]
+    return _ink(imgs, ink_w)
 
 
 def detect_forward_u8(params: dict, imgs: np.ndarray,
@@ -98,9 +121,7 @@ def detect_forward_u8(params: dict, imgs: np.ndarray,
             ink[:, vh:, :] = 0
         if vw < ink.shape[2]:
             ink[:, :, vw:] = 0
-    n, h, w = ink.shape
-    # 2x2 average-pool downsample to heatmap resolution
-    half = ink.reshape(n, h // 2, 2, w // 2, 2).mean(axis=(2, 4), dtype=np.float32)
+    half = avg_pool_2x2(ink)
     text = conv2d_same(half, params["k_text"])
     link = conv2d_same(half, params["k_link"])
     return np.stack([text, link], axis=-1)

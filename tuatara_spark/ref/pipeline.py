@@ -8,7 +8,7 @@ single batch kernel that the Spark Arrow UDF and the declared OCR queries
 run — chains the same functions over a whole record batch. Per-image flow:
 
   swap channels (S2) → aspect resize + pad-to-32 (S3) → tensorize + ink
-  conv + detection forward (S4/S5, fused from uint8) → get_detected_boxes
+  conv + detection forward (S4/S5, fused from uint8) → detect_boxes
   (S6-S16) → rescale (S17) → crop (S18) → crop resize + swap + ink
   (S19/S2/S4) → recognition forward (S20-S23; region batching is the
   caller's concern) → softmax → greedy decode + EOS truncation (S24-S25) →
@@ -39,14 +39,15 @@ def detect_pages(images: list[np.ndarray], params: dict):
     reference crops from (tuatara.cpp:349 mutates in place; 416 crops it).
 
     Pages are grouped by (shape, one-plane) and pushed through the
-    detection forward pass as one stacked tensor per group — strictly more
-    vectorized than the reference's one-image-per-call loop, and
-    bit-identical per page (the conv/pool path has no cross-page
-    reductions). A one-plane page (stride-0 channel axis, ``rz.one_plane``:
-    TPBIT and gray decodes) is swapped, resized and stacked as one plane;
-    the forward pass sees a stride-0 broadcast of the ``(N, H, W)`` stack,
-    so ``ink_map_u8`` reads the same plane per channel and the ink math is
-    unchanged. ``swapped_image`` is then a read-only view.
+    detection forward pass as one stacked tensor per group, then through
+    the box geometry (``dt.detect_boxes``) as one stack of score maps —
+    strictly more vectorized than the reference's one-image-per-call
+    loop, and bit-identical per page (neither step reduces across pages).
+    A one-plane page (stride-0 channel axis, ``rz.one_plane``: TPBIT and
+    gray decodes) is swapped, resized and stacked as one plane; the
+    forward pass sees a stride-0 broadcast of the ``(N, H, W)`` stack, so
+    ``ink_map_u8`` looks each byte up in its ink table and the ink math
+    is unchanged. ``swapped_image`` is then a read-only view.
     """
     n = len(images)
     results: list = [None] * n
@@ -70,9 +71,9 @@ def detect_pages(images: list[np.ndarray], params: dict):
         else:
             stacked = np.stack([p[0] for p in proc])
         maps = md.detect_forward_u8(params, stacked, valid_hw=valid)
+        dets = dt.detect_boxes(maps[..., 0], maps[..., 1])     # S6-S16
         for j, i in enumerate(idxs):
-            det, _labels = dt.get_detected_boxes(maps[j, ..., 0], maps[j, ..., 1])
-            boxes = g.adjust_result_coordinates(det, ratio_w, ratio_h)  # S17
+            boxes = g.adjust_result_coordinates(dets[j], ratio_w, ratio_h)  # S17
             results[i] = (boxes, swapped[j])
     return results
 
