@@ -229,6 +229,25 @@ def test_crops_to_ink_mixed_shapes_and_layouts(weights):
     np.testing.assert_array_equal(got, want)
 
 
+@settings(max_examples=40, deadline=None)
+@given(seed=st.integers(0, 2 ** 32 - 1),
+       shapes=st.lists(st.tuples(st.integers(1, 40), st.integers(1, 160)),
+                       min_size=1, max_size=6))
+def test_one_plane_crops_ink_matches_formula(weights, seed, shapes):
+    """Random one-plane crops (two of each shape, so groups stack) go
+    through the ink table and give the three-plane formula's bits on the
+    materialized, resized and swapped crops."""
+    rng = np.random.default_rng(seed)
+    planes = [rng.integers(0, 256, hw, dtype=np.uint8)
+              for hw in shapes for _ in range(2)]
+    crops = [np.broadcast_to(p[:, :, None], p.shape + (3,)) for p in planes]
+    got = pl.crops_to_ink(crops, weights)
+    resized = np.stack([_gather_resize(np.array(c), md.REC_W, md.REC_H)
+                        [..., ::-1] for c in crops])
+    np.testing.assert_array_equal(got, _ink_formula(resized,
+                                                    weights["ink_w"]))
+
+
 # ------------------------------------------------------- gray decoders ----
 
 def _gray_plane(seed=3, h=37, w=53):

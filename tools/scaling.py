@@ -105,8 +105,8 @@ def extract_chain(spark, path: str) -> int:
 
 def job_chain(spark, path: str) -> int:
     """The shipped OCR job end to end with its defaults (salt shuffle
-    over 2 × cores tasks): bucket, extract, write, counter re-read and
-    commit, 64 buckets in 4 groups, into a fresh table root that is
+    over 2 × cores tasks): bucket, extract (which also counts), write
+    and commit, 64 buckets in 4 groups, into a fresh table root that is
     deleted after the pass."""
     import tempfile
 

@@ -402,11 +402,11 @@ class Catalog:
         appears once per committing run — compose with a keep-latest
         window (read_latest's rule) when the caller wants one row per
         url."""
-        from pyspark.sql import functions as F
+        from tuatara_spark.partitioning import in_buckets
         want = {int(b) for b in buckets}
         snaps = [sn for sn in self._snaps_as_of(as_of)
                  if want & set(sn["buckets"])]   # manifest pruning
         df = self._read_runs(spark, snaps)
         if df is None:
             return None
-        return df.where(F.col("part_id").isin(sorted(want))).drop("run")
+        return df.where(in_buckets(sorted(want))).drop("run")

@@ -26,6 +26,11 @@ reload (tuatara.cpp:333-340, 421-432). ``extract_df`` broadcasts a weights
 dict itself, or takes a ``Broadcast`` its caller owns: ``job.run_extract``
 broadcasts once for all its groups and destroys it when the job ends.
 
+Given a ``BucketCounters`` accumulator, the UDF also adds up each output
+batch's per-bucket lineage counters (``COUNTERS``) with an Arrow
+group-by, so ``job.run_extract`` commits them without reading the
+written rows back.
+
 Batch sizing: one 256² TPAGE row ≈ 196 KB; keep
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` ≈ 64 so a batch stays
 ~12 MB (see session.get_spark).
@@ -36,7 +41,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark import Broadcast
+import pyarrow.compute as pc
+from pyspark import AccumulatorParam, Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, FloatType, IntegerType, StringType,
                                StructField, StructType)
@@ -111,9 +117,46 @@ def ocr_batch(params: dict, images: list, errors: list) -> list:
     return out
 
 
-def make_extractor(weights_bc, passthrough: list[str]):
+# Per-bucket lineage counters of the OCR job, in manifest order, and the
+# Arrow aggregate over one record batch that computes each: the same
+# semantics as SQL count(*), sum(n_regions), sum(n_chars), count(error).
+COUNTERS = ("pages", "regions", "chars", "failures")
+_COUNTER_AGGS = [("part_id", "count", pc.CountOptions(mode="all")),
+                 ("n_regions", "sum"),
+                 ("n_chars", "sum"), ("error", "count")]
+
+
+class BucketCounters(AccumulatorParam):
+    """Accumulator of ``{bucket: {counter: int}}``: merging adds the
+    counters of each bucket."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        for bucket, counts in value2.items():
+            into = value1.setdefault(bucket, dict.fromkeys(counts, 0))
+            for k, v in counts.items():
+                into[k] += v
+        return value1
+
+
+def _batch_counters(batch: pa.RecordBatch) -> dict:
+    """``{part_id: {counter: int}}`` of one output batch, summed by an
+    Arrow group-by (no Python loop over rows)."""
+    agg = (pa.Table.from_batches([batch])
+           .group_by("part_id", use_threads=False).aggregate(_COUNTER_AGGS))
+    cols = [agg.column(f"{c}_{fn}").to_pylist()
+            for c, fn, *_ in _COUNTER_AGGS]
+    return {b: dict(zip(COUNTERS, vals))
+            for b, *vals in zip(agg.column("part_id").to_pylist(), *cols)}
+
+
+def make_extractor(weights_bc, passthrough: list[str], counters=None):
     """Build the mapInArrow function over the weights Broadcast
-    ``weights_bc``."""
+    ``weights_bc``. With ``counters`` (an accumulator of
+    ``BucketCounters``; needs a ``part_id`` passthrough column) each
+    output batch also adds its per-bucket counters to it."""
 
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         params = None
@@ -137,19 +180,26 @@ def make_extractor(weights_bc, passthrough: list[str]):
             ]
             names = passthrough + ["spans", "text", "n_regions", "n_chars",
                                    "error"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            out = pa.RecordBatch.from_arrays(arrays, names=names)
+            if counters is not None:
+                counters.add(_batch_counters(out))
+            yield out
 
     return extract
 
 
 def extract_df(df: DataFrame, weights: dict | Broadcast | None = None,
-               seed: int = 42) -> DataFrame:
+               seed: int = 42, counters=None) -> DataFrame:
     """pages DataFrame (url, warc_ts, html, lang, [extra cols]) →
     extraction DataFrame (passthrough + spans/text/n_regions/n_chars/error).
 
     The html column is consumed inside the UDF; everything else passes
     through. A weights dict (or ``build_weights(seed)``) is broadcast here;
     a ``Broadcast`` is used as is and stays the caller's to destroy.
+    ``counters`` (a ``BucketCounters`` accumulator, ``df`` bucketed by
+    ``partitioning.with_bucket``) collects the per-bucket counters of
+    every row the UDF emits; see ``job.run_extract`` for when each row
+    counts once.
     """
     if isinstance(weights, Broadcast):
         bc = weights
@@ -163,4 +213,5 @@ def extract_df(df: DataFrame, weights: dict | Broadcast | None = None,
     # raw-text metadata column (input_hint schema) must be pruned at the
     # scan, not serialized to Python and dropped there.
     pruned = df.select(*passthrough, "html")
-    return pruned.mapInArrow(make_extractor(bc, passthrough), schema)
+    return pruned.mapInArrow(make_extractor(bc, passthrough, counters),
+                              schema)

@@ -4,9 +4,15 @@ Two jobs share one commit protocol. ``run_extract`` (OCR): read pages →
 url-hash bucket + skew salt → explicit (bucket, salt) shuffle → Arrow-UDF
 extraction. ``run_crawl`` (HTML): WARC parse → charset decode →
 boilerplate strip → url-hash bucket. Both drop already-committed buckets
-(resume from the last snapshot), then hand each group's DataFrame to the
-one group loop, ``_run_groups``: write parquet hive-partitioned by bucket
-→ re-read it for per-bucket counters → commit snapshot + manifests.
+(resume from the last snapshot), then hand each group's DataFrame, with
+a way to get the written group's per-bucket counters, to the one group
+loop, ``_run_groups``: write parquet hive-partitioned by bucket → take
+the counters → commit snapshot + manifests.
+
+The OCR counters are a by-product of extraction: the UDF adds each
+record batch's per-bucket sums to the group's own accumulator, and the
+loop reads it once the write returns. The crawl job's write stage has
+no Python step, so it re-reads the written rows with one aggregate.
 
 Buckets are split into ``groups`` groups, one snapshot each. The loop
 is pipelined two groups deep (the next group extracts while the current
@@ -28,7 +34,7 @@ import threading
 import uuid
 from collections import deque
 from concurrent.futures import Future, ThreadPoolExecutor
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -43,11 +49,14 @@ class InjectedFailure(RuntimeError):
     """Raised by the fail_after_groups test hook."""
 
 
-# Per-bucket lineage counters, each one SQL aggregate over the written rows.
-_EXTRACT_COUNTERS = {"pages": "count(*)", "regions": "sum(n_regions)",
-                     "chars": "sum(n_chars)", "failures": "count(error)"}
+# The crawl job's per-bucket lineage counters, each one SQL aggregate over
+# the written rows (the OCR job's are engine.COUNTERS).
 _CRAWL_COUNTERS = {"pages": "count(*)", "chars": "sum(length(main_text))",
                    "empties": "count_if(length(main_text) = 0)"}
+
+# run dir → {bucket: {counter: int}} for the written group's non-empty
+# buckets
+_CountFn = Callable[[str], dict]
 
 
 class _Group(NamedTuple):
@@ -61,19 +70,21 @@ class _Group(NamedTuple):
 
 
 def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
-                groups: int, group_df, counters: dict[str, str],
+                groups: int, group_df, counters: tuple[str, ...],
                 fail_after_groups: int | None,
                 extra: dict | None = None) -> int:
     """The group-commit loop shared by both jobs: split ``remaining`` into
-    ``groups`` chunks; per chunk write ``group_df(buckets)`` hive-
-    partitioned by bucket into a fresh run dir, re-read the written rows
-    for the per-bucket ``counters`` (no recompute of the UDF), and commit
-    one snapshot. Returns the number of groups run.
+    ``groups`` chunks; per chunk, ``group_df(buckets)`` gives the group's
+    DataFrame and its count function; write the DataFrame hive-partitioned
+    by bucket into a fresh run dir, call the count function on that dir
+    for the per-bucket ``counters`` (a bucket with no rows commits every
+    counter 0), and commit one snapshot. The loop does not know how a job
+    counts. Returns the number of groups run.
 
     The loop is two groups deep: each group's write (its scan, shuffle
-    and extraction) and re-read run on a pool thread, so the next group
-    runs on the cores that this group's tail, re-read and commit leave
-    idle. Snapshot ids are taken and commits made on the calling thread,
+    and extraction) and count run on a pool thread, so the next group
+    runs on the cores that this group's tail and commit leave idle.
+    Snapshot ids are taken and commits made on the calling thread,
     strictly in group order, so the snapshot chain and the manifests are
     those of a one-at-a-time loop. On any error the uncommitted groups'
     Spark jobs are cancelled (by job tag), their threads joined and
@@ -86,23 +97,18 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
     # between jobs) starts no further job
     stop = threading.Event()
 
-    def write_and_count(run_dir: str, buckets: list[int], gdf: DataFrame):
+    def write_and_count(run_dir: str, buckets: list[int], gdf: DataFrame,
+                        count: _CountFn):
         if stop.is_set():
             return None
         gdf.write.mode("overwrite").partitionBy("part_id").parquet(run_dir)
         if stop.is_set():
             return None
         # a bucket with no rows is committed too (processed-empty), with
-        # every counter 0; pinning the written schema skips a footer-
-        # inference job, and a group with no rows reads as zero rows
+        # every counter 0
         per_bucket = {b: dict.fromkeys(counters, 0) for b in buckets}
-        rows = (spark.read.schema(gdf.schema).parquet(run_dir)
-                .groupBy("part_id")
-                .agg(*[F.expr(e).alias(k) for k, e in counters.items()])
-                .collect())
-        per_bucket.update({int(r.part_id): {k: int(r[k] or 0)
-                                            for k in counters}
-                           for r in rows})
+        per_bucket.update({int(b): {k: int(c.get(k) or 0) for k in counters}
+                           for b, c in count(run_dir).items()})
         return per_bucket
 
     pool = ThreadPoolExecutor(max_workers=2,
@@ -111,7 +117,7 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
 
     def submit(buckets: list[int]) -> None:
         sid, run_dir = cat.new_run()
-        gdf = group_df(buckets)
+        gdf, count = group_df(buckets)
         # the pool thread inherits this thread's local properties (job
         # description, pool) plus the group's tag, captured at wrap time
         tag = f"tuatara-group-{uuid.uuid4().hex}"
@@ -121,7 +127,8 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
         finally:
             sc.removeJobTag(tag)
         pending.append(_Group(sid, run_dir, buckets, tag, gdf.schema,
-                              pool.submit(target, run_dir, buckets, gdf)))
+                              pool.submit(target, run_dir, buckets, gdf,
+                                          count)))
 
     try:
         for chunk in chunks[:2]:
@@ -153,6 +160,21 @@ def _run_groups(spark: SparkSession, cat: Catalog, remaining: list[int],
     return len(chunks)
 
 
+def _reread_counters(spark: SparkSession, schema: StructType,
+                     exprs: dict[str, str]) -> _CountFn:
+    """A count function that re-reads the written run dir with one
+    aggregate per counter (``exprs``: name → SQL aggregate). Pinning the
+    written schema skips a footer-inference job, and a group with no
+    rows reads as zero rows."""
+    def count(run_dir: str) -> dict:
+        rows = (spark.read.schema(schema).parquet(run_dir)
+                .groupBy("part_id")
+                .agg(*[F.expr(e).alias(k) for k, e in exprs.items()])
+                .collect())
+        return {r.part_id: r.asDict() for r in rows}
+    return count
+
+
 def run_extract(spark: SparkSession, input_path: str, output_root: str,
                 num_buckets: int = pt.DEFAULT_NUM_BUCKETS,
                 groups: int = 1,
@@ -178,17 +200,31 @@ def run_extract(spark: SparkSession, input_path: str, output_root: str,
                 "totals": cat.totals()}
 
     # one broadcast for every group, released even if a group fails
-    bc = spark.sparkContext.broadcast(wt.build_weights(weights_seed))
+    sc = spark.sparkContext
+    bc = sc.broadcast(wt.build_weights(weights_seed))
 
-    def group_df(buckets: list[int]) -> DataFrame:
-        sub = pages.filter(F.col("part_id").isin(buckets))
+    def group_df(buckets: list[int]) -> tuple[DataFrame, _CountFn]:
+        sub = pages.filter(pt.in_buckets(buckets))
         sub = pt.with_salt(sub, heavy_bytes=heavy_bytes)
         sub = pt.distribute(sub, num_tasks)
-        return engine.extract_df(sub.drop("salt"), weights=bc)
+        # The UDF runs in the write's result stage (no exchange after
+        # it), so Spark applies each partition's accumulator update once
+        # and drops those of failed attempts: once the write returns,
+        # the group's own accumulator holds each written row once.
+        acc = sc.accumulator({}, engine.BucketCounters())
+
+        def count(run_dir: str) -> dict:
+            # hand the dict over: pyspark's accumulator registry keeps
+            # acc itself for the life of the session
+            per_bucket, acc.value = acc.value, {}
+            return per_bucket
+
+        return engine.extract_df(sub.drop("salt"), weights=bc,
+                                 counters=acc), count
 
     try:
         groups_run = _run_groups(spark, cat, remaining, groups, group_df,
-                                 _EXTRACT_COUNTERS, fail_after_groups)
+                                 engine.COUNTERS, fail_after_groups)
     finally:
         bc.destroy()
     return {"resumed": bool(done), "groups_run": groups_run,
@@ -244,16 +280,17 @@ def run_crawl(spark: SparkSession, input_dir: str, output_root: str,
         from pyspark import StorageLevel
         pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def group_df(buckets: list[int]) -> DataFrame:
-        sub = (pages.filter(F.col("part_id").isin(buckets))
+    def group_df(buckets: list[int]) -> tuple[DataFrame, _CountFn]:
+        sub = (pages.filter(pt.in_buckets(buckets))
                .select("url", "warc_ts", "charset", "main_text", "part_id"))
         # text rows are uniformly small — repartition on part_id alone
         # (the OCR job's payload salting is for MB-scale page images)
-        return sub.repartition(num_tasks, F.col("part_id"))
+        gdf = sub.repartition(num_tasks, F.col("part_id"))
+        return gdf, _reread_counters(spark, gdf.schema, _CRAWL_COUNTERS)
 
     try:
         groups_run = _run_groups(spark, cat, remaining, groups, group_df,
-                                 _CRAWL_COUNTERS, fail_after_groups,
+                                 tuple(_CRAWL_COUNTERS), fail_after_groups,
                                  extra={"gen": gen})
     finally:
         pages.unpersist()

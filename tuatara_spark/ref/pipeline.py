@@ -105,13 +105,14 @@ def crop_regions(swapped_image: np.ndarray, boxes) -> list[np.ndarray]:
 
 def crops_to_ink(crops: list[np.ndarray], params: dict) -> np.ndarray:
     """Fused S19+S2+S4+ink: resize crops (batched per source shape and
-    one-plane flag — identical sampling math, vectorized), one ink-map
-    pass. One-plane crops (views of a one-plane page) resize as a stacked
-    ``(N, h, w)`` plane batch; the S2 swap is a no-op on identical
-    channels. Returns (R, 32, 128) float32 in input order."""
-    if not crops:
-        return np.zeros((0, md.REC_H, md.REC_W), dtype=np.float32)
-    resized = np.empty((len(crops), md.REC_H, md.REC_W, 3), dtype=np.uint8)
+    one-plane flag — identical sampling math, vectorized), then the ink
+    map per group. One-plane crops (views of a one-plane page) resize as
+    a stacked ``(N, h, w)`` plane batch and reach ``ink_map_u8`` as its
+    stride-0 broadcast, so each byte is looked up in the ink table; the
+    S2 swap is a no-op on identical channels. The ink is per pixel, so
+    the bits do not depend on the grouping. Returns (R, 32, 128) float32
+    in input order."""
+    ink = np.empty((len(crops), md.REC_H, md.REC_W), dtype=np.float32)
     groups: dict[tuple, list[int]] = {}
     for i, c in enumerate(crops):
         groups.setdefault((c.shape, rz.one_plane(c)), []).append(i)
@@ -119,12 +120,13 @@ def crops_to_ink(crops: list[np.ndarray], params: dict) -> np.ndarray:
         if flat:
             planes = np.stack([crops[i][..., 0] for i in idxs])
             out = rz.resize_bilinear_batch(planes, md.REC_W, md.REC_H)
-            resized[idxs] = out[..., None]
+            rgb = np.broadcast_to(out[..., None], out.shape + (3,))
         else:
             stacked = np.stack([crops[i] for i in idxs])
             out = rz.resize_bilinear_batch(stacked, md.REC_W, md.REC_H)
-            resized[idxs] = out[..., ::-1]  # S2 per-crop swap (cpp:441)
-    return md.ink_map_u8(resized, params["ink_w"])
+            rgb = out[..., ::-1]  # S2 per-crop swap (cpp:441)
+        ink[idxs] = md.ink_map_u8(rgb, params["ink_w"])
+    return ink
 
 
 def recognize_ink(params: dict, ink: np.ndarray) -> list[str]:
