@@ -13,6 +13,13 @@ from pyspark.sql import SparkSession
 # pages into fewer, chunkier tasks and lose overlap.
 ARROW_BATCH_ROWS = 64
 
+# The `file:` filesystem every session uses: Hadoop's LocalFileSystem with
+# a setPermission that does not fork (source and rebuild command beside
+# the jar).
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "jvm", "tuatara-fs.jar")
+LOCAL_FS_CLASS = "tuatara.fs.NioLocalFileSystem"
+
 
 def get_spark(app: str = "tuatara-spark", cores: int | str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -20,6 +27,14 @@ def get_spark(app: str = "tuatara-spark", cores: int | str | None = None,
 
     cores defaults to $SPARK_GRAFT_CPUS or '*'. On a real cluster the same
     settings apply except master comes from spark-submit.
+
+    `file:` paths go through LOCAL_FS_CLASS. pip-installed pyspark ships
+    no libhadoop, and without it stock Hadoop sets a local file's
+    permissions by forking `chmod`, once per file create and once per
+    mkdir (a partitioned Parquet write forks for every data file, .crc
+    file and directory); the class sets the same bits through java.nio.
+    The jar goes on the driver's class path, which in local mode is also
+    the executors'.
     """
     # Make this package importable in executor Python workers regardless of
     # the driver's cwd (local-mode stand-in for spark-submit --py-files).
@@ -81,5 +96,7 @@ def get_spark(app: str = "tuatara-spark", cores: int | str | None = None,
         .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     )
     return builder.getOrCreate()
